@@ -4,66 +4,58 @@ path that lifts the broadcast memory bound of ``nearest``.
 The reference's contract requires the indexed side to fit in memory
 (/root/reference/README.md:163-166); at 100 TB a kNN whose query side
 outgrows memory is the first real wall.  This operator keeps BOTH sides
-distributed:
+distributed and answers every left row in one certified pass (the REPOSE
+recipe: a global grid partitioning, an exact local search per partition,
+and a pruning bound that settles every row):
 
-1. bucket both sides on a fixed-width lon/lat grid (cell keys — small ints,
-   the only thing that shuffles besides the carried payload);
-2. iterative radius expansion: round ``r`` matches each unresolved left
-   row against the OCCUPIED right cells inside its Chebyshev-``r`` ring
-   (only the new ring, not the already-seen disk) — the occupied-cell set
-   is bounded by the grid (≤ 4140 keys at 4°), never by data, so it
-   broadcasts for the ring test, and the matched cells then equi-join the
-   right side as a plain shuffled hash join, skew-safe under AQE;
-3. local argmin via the partially-aggregatable ``min(struct(...))`` (one
-   candidate per left row crosses each round's shuffle);
-4. a row RESOLVES when its best-so-far distance is provably smaller than
-   anything outside the explored disk.  The bound is per-row:
+1. a fixed-width lon/lat grid buckets both sides; one grid-bounded
+   aggregate job (at most 65k keys per side on a 4× finer sub-grid of
+   1° — never data-sized) collects the occupied sub-cells of both sides
+   with the right side's per-sub-cell counts;
+2. per occupied left cell the driver bounds the k-th neighbor distance of
+   every row in it: ``D`` = the smallest cell-to-cell upper distance at
+   which the right cells within it hold ≥ k rows, tightened on the
+   sub-grid.  From ``D`` it solves the cell's ring — every right row
+   outside it is provably farther than ``D`` (bounds below), so it cannot
+   enter any of the cell's top-k;
+3. a broadcast ``(right cell → left cell)`` pair table replicates each
+   right row to the left cells whose ring holds it;
+4. one equi-join on the left cell (a sort-merge join: both sides shuffle
+   on the cell, the plan's only two exchanges) computes the distances and
+   keeps the top k per left row with a window partitioned by
+   ``(cell, row id)`` — the join's output is already hash-partitioned on
+   the cell, so the window adds no exchange.  The left payload rides
+   through the join.
 
-   - crossing > r unseen latitude cells means Δφ > r·w, so
-     d > r·w·110500 m (min meters per degree of latitude, WGS84-safe);
-   - crossing > r unseen longitude cells means Δλ > r·w, so
-     d > 2·b·√(cos φ_left · cos φ*)·sin(r·w/2) m (3D chord through the
-     equatorial-plane projection, b = polar radius; φ* bounds the unseen
-     endpoint's latitude by |φ_left| + min((r+1)·w, d/110500));
+Ring bounds (valid for both the spherical haversine kernel and the WGS84
+geodesic):
 
-   rows too close to a pole for the longitude bound to converge
-   (|lat| ≥ 75°) join on the latitude band alone — all longitudes of the
-   band, which at the pole IS the neighborhood — so only the latitude
-   bound applies to them;
-5. the radius doubles each round; once the ring covers the globe every
-   remaining row resolves unconditionally, so termination is guaranteed
-   (rows that never met a right row vanish — inner-join semantics).
+- more than ``r`` unseen latitude cells away means Δφ > r·w, so
+  d > r·w·110500 m (min meters per degree of latitude, WGS84-safe);
+- more than ``r`` unseen (wrap-aware) longitude cells away means Δλ > r·w,
+  so d > 2·b·√(cos φ_left · cos φ*)·sin(r·w/2) m (the 3D chord through the
+  equatorial-plane projection, b = polar radius; φ* = |φ_left| + D/110500
+  bounds the latitude of any point that the latitude bound does not
+  already exclude);
+- cells reaching |lat| ≥ 75° (where the longitude bound stops converging)
+  take every longitude of their latitude band.
 
-Dense data acquires caps in round 1 and resolves in the capped finish
-round; the loop is TWO driver rounds by default (each round carries a
-fixed multi-stage scheduling tax).  ``localCheckpoint`` truncates the
-per-round lineage (same trade-off as the LSH self-joins).  The right side
-is repartitioned on its cell keys BEFORE its checkpoint — LogicalRDD
-preserves the partitioning, so no round re-shuffles R (the live
-equivalent of a production cell-bucketed table; j24 demonstrates the
-written-to-storage variant for withindist).  The left side's payload
-stays OUT of the loop entirely (only id + coords + cell + best-struct +
-cap iterate) and is joined back once at the end.
+A left row with no (allowed) right row drops: inner-join semantics.
 """
 
 from __future__ import annotations
 
 import math
-import os
-import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from spark_ml_spatialjointransformer_spark.operators._compat import (
-    barrier as _barrier,
-)
-
-_DEBUG = bool(os.environ.get("SJT_KNN_DEBUG"))
+from pyspark.sql.window import Window
 
 #: grid cell width (degrees) — decoupled from data scale; 4° keeps the
-#: round count low (each driver round costs a scheduling round-trip) while
-#: cells stay fine enough to prune
+#: occupied-cell census and the pair table small while cells stay fine
+#: enough to prune
 KNN_CELL_DEG = 4.0
 #: minimum meters per degree of latitude (WGS84 meridian arc ≥ 110567;
 #: margin for kernel differences)
@@ -74,15 +66,21 @@ _MPD_LAT = 110500.0
 #: with parallel-circle radii pᵢ ≥ b·cos φᵢ, so
 #:   d ≥ 2·b·√(cos φ1 · cos φ2)·sin(Δλ/2)
 #: — valid for the WGS84 geodesic (≥ chord) AND the spherical haversine
-#: kernel (computed with R = 6371008.8 > b, and asin x ≥ x).  The sine form
-#: is ~π/2 tighter than the old linear chord-per-degree constant at ring
-#: radii of a few cells, which directly shrinks per-row caps and lets more
-#: rows resolve in round 1 (verified against 15M real pairs: 0 violations).
+#: kernel (computed with R = 6371008.8 > b, and asin x ≥ x)
 _RPOL = 6356752.0
-#: rows with |lat| ≥ this use latitude-band joins (cos φ too small for the
-#: longitude bound to converge near the poles)
+#: upper bound on every radius of curvature of the WGS84 ellipsoid
+#: (a²/b = 6399593.6 m, rounded up): its metric is at most this radius
+#: times the unit sphere's, so a geodesic is at most _R_MAX × the central
+#: angle between the same coordinates on the sphere — an upper distance
+#: for both kernels
+_R_MAX = 6.4e6
+#: census sub-cells per cell side: the k-th distance bound is solved on
+#: the finer grid (a 1° sub-cell is ~16× smaller than a 4° cell, so dense
+#: data gets a ring of ~3×3 cells instead of ~5×5), the join keys stay cells
+_SUB = 4
+#: cells reaching this |lat| take every longitude of their latitude band
+#: (cos φ too small for the longitude bound to converge near the poles)
 _POLAR_LAT = 75.0
-_PHI_CAP = 89.9
 
 
 def partitioned_nearest(
@@ -97,7 +95,6 @@ def partitioned_nearest(
     distance_column: str | None,
     out_names: list[str],
     cell_deg: float = KNN_CELL_DEG,
-    max_rounds: int = 2,
     condition: Column | None = None,
     l_extra_cols: list[str] = (),
     r_extra_cols: list[str] = (),
@@ -109,450 +106,267 @@ def partitioned_nearest(
     right_pay_cols (++ distance_column).  Ties break on (distance,
     tie_break right columns, right insertion id) like the broadcast paths.
 
+    One pass: the cell-level bound ``D`` of a left cell is an upper bound
+    on the k-th distance of each of its rows (≥ k right rows lie within
+    ``D`` of any point of the cell), and every right row outside the
+    cell's ring is farther than ``D`` — so the candidates inside the ring
+    hold each row's exact top-k, tie-breaks included.
+
     ``condition`` (optional boolean Column over ``l_extra_cols`` /
-    ``r_extra_cols``) filters candidate pairs INSIDE the cell join — the
-    per-row resolution bound stays valid because a filter only removes
-    candidates, never brings a farther point closer.  The named extra
-    columns ride the loop state (left) / the bucketed right table so the
-    filter evaluates without re-joining payloads.
-
-    ``k > 1`` carries a sorted k-element top-array instead of the single
-    min-struct: per-round candidates are bounded to k per (row, cell) by a
-    no-exchange local window, then the per-pid merge agg sort+slices the
-    flattened ``collect_list`` of (bounded candidates ∪ the carried
-    top-array), and a row resolves when its K-th best distance beats the
-    unexplored-ring bound (then nothing outside can displace ANY of the k).
-
-    ``max_rounds`` caps the number of driver rounds: the radius schedule
-    starts at 1 cell, grows ×8 per extra round, and always ends with a
-    global-cover round, so ``max_rounds=1`` degenerates to one all-cells
-    pass.  Each driver round costs a fixed multi-stage scheduling tax, so
-    the default is TWO rounds — a 1-cell disk that gives (almost) every
-    row its k best-so-far, then a finish round whose ring is capped PER
-    ROW: a row holding a full k knows nothing beyond its k-th distance
-    ``d_k`` can enter its top-k, so its cap is the cell count at which the
-    lat/lon exclusion bounds clear ``d_k`` — dense rows sweep a few cells
-    instead of the globe (r5's bench showed the uncapped finish ring
-    joining ~all of R against every unresolved row).  Only rows with no
-    full k after round 1 (empty neighborhoods) pay the global ring.
+    ``r_extra_cols``) filters candidate pairs INSIDE the cell join.  A
+    filter can leave a row fewer than k allowed candidates in its ring, so
+    a row is settled only if it has ≥ k allowed candidates and its k-th
+    allowed distance is ≤ ``D`` (or its ring already covers every occupied
+    right cell).  A first pass finds the unsettled rows; the final pass
+    widens the ring of each cell holding one to the largest k-th allowed
+    distance of its unsettled rows — or to the whole grid when one of them
+    has fewer than k — which settles every row: at most two passes.
     """
     w = cell_deg
     nbx = max(1, int(round(360.0 / w)))
-    nby_r = int(math.floor(90.0 / w)) - int(math.floor(-90.0 / w)) + 1
 
-    lx, ly = F.col(left_xy[0]), F.col(left_xy[1])
-    rx, ry = F.col(right_xy[0]), F.col(right_xy[1])
-    # payload-side dedup (id cols already ride the payload frame) vs
-    # loop-state carry (the loop drops id cols, so EVERY condition column
-    # must ride the iterate explicitly)
-    l_extra = [c for c in l_extra_cols if c not in left_id_cols]
-    l_loop = list(dict.fromkeys(l_extra_cols))
-    r_extra = [c for c in r_extra_cols if c not in right_pay_cols]
+    def cell(x: str, y: str, width: float, cols: int, names: str) -> list[Column]:
+        """Wrap-aware grid column and row of the point ``(x, y)``."""
+        return [
+            (((F.floor(F.col(x) / width) % cols) + cols) % cols).alias(f"__{names}x"),
+            F.floor(F.col(y) / width).alias(f"__{names}y"),
+        ]
 
-    def wrap_cx(c: Column) -> Column:
-        return ((c % nbx) + nbx) % nbx
+    L = left.select(
+        *[F.col(c) for c in dict.fromkeys([*left_id_cols, *l_extra_cols])],
+        F.col(left_xy[0]).alias("__lx"),
+        F.col(left_xy[1]).alias("__ly"),
+        F.monotonically_increasing_id().alias("__pid"),
+        *cell(*left_xy, w, nbx, "lc"),
+    )
+    # __rid (right insertion order, the last tie-break) is assigned before
+    # any replication
+    R = right.select(
+        *[F.col(c) for c in dict.fromkeys([*right_pay_cols, *tie_break, *r_extra_cols])],
+        F.col(right_xy[0]).alias("__rx"),
+        F.col(right_xy[1]).alias("__ry"),
+        F.monotonically_increasing_id().alias("__rid"),
+        *cell(*right_xy, w, nbx, "rc"),
+    )
 
-    # The right side is bucketed by grid cell ONCE (repartition on the cell
-    # keys before the checkpoint): LogicalRDD preserves the physical
-    # outputPartitioning, so every round's cell equi-join sees R already
-    # hash-partitioned on (__rcx, __rcy) and inserts no exchange for R —
-    # the per-round shuffle of R disappears, which is exactly what a
-    # cell-bucketed table gives at production scale.  __rid is assigned
-    # before the repartition and frozen by the checkpoint (tie-break
-    # stability).
-    # R's bucket count follows DATA VOLUME, not a fixed fraction: a tiny
-    # right side (bench scale) at full defaultParallelism pays 32 tasks of
-    # per-task scheduling overhead in EVERY round's cell join (measured
-    # r7: quartering it takes j17 4.4→3.9 s, j18 6.9→5.7 s at sf0.1),
-    # but a 100 TB right side must keep partitions shuffle-sized — so the
-    # quarter-parallelism floor applies only when the Catalyst size
-    # estimate says the whole side fits a few splits anyway (the same
-    # stats-only probe as operators/_guard.py; on estimate failure assume
-    # big and keep full parallelism).
-    sc = right.sparkSession.sparkContext
-    par_full = sc.defaultParallelism
-    try:
-        _rsize = int(
-            right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    # the one census job: occupied sub-cells of both sides, right counts
+    f = w / _SUB
+    census = [
+        r
+        for r in L.select(F.lit(1).alias("__left"), *cell("__lx", "__ly", f, nbx * _SUB, "f"))
+        .union(R.select(F.lit(0), *cell("__rx", "__ry", f, nbx * _SUB, "f")))
+        .groupBy("__left", "__fx", "__fy")
+        .count()
+        .collect()
+        if r["__fx"] is not None and r["__fy"] is not None
+    ]
+
+    def cells(rows) -> np.ndarray:
+        return np.array(list(rows), np.int64).reshape(-1, 2)
+
+    rrows = [r for r in census if not r["__left"]]
+    fine = _Grid(
+        f, nbx * _SUB, cells(r[1:3] for r in rrows), np.array([r["count"] for r in rrows])
+    )
+    grid = _Grid(w, nbx, fine.cells // _SUB, fine.rcount)
+    lcells, bound = grid.kth_bound(cells(r[1:3] for r in census if r["__left"]), fine, k)
+
+    def top_k(bound: np.ndarray, how: str) -> DataFrame:
+        """The left rows joined to the right rows of their cells' rings
+        (cell ``lcells[i]`` bounded by ``bound[i]``), ranked per row."""
+        pairs = left.sparkSession.createDataFrame(
+            grid.pairs(lcells, bound),
+            "__ocx long, __ocy long, __pcx long, __pcy long, __bound double",
         )
-    except Exception:
-        _rsize = None
-    small_r = _rsize is not None and _rsize < par_full * 8 * 1024 * 1024
-    par0 = max(8, par_full // 4) if small_r else par_full
-    R = (
-        right.select(
-            *[F.col(c) for c in right_pay_cols],
-            *[F.col(c) for c in r_extra],
-            rx.alias("__rx"),
-            ry.alias("__ry"),
-            wrap_cx(F.floor(rx / w)).alias("__rcx"),
-            F.floor(ry / w).alias("__rcy"),
-        )
-        .withColumn("__rid", F.monotonically_increasing_id())
-        .repartition(par0, "__rcx", "__rcy")
-        .transform(_barrier)
-    )
-
-    # the loop state: only id + coords + cell + best-so-far (+ condition
-    # columns) iterate
-    from pyspark.sql import types as T
-
-    best_t = _best_type(right, right_pay_cols, tie_break)
-    init_best = (
-        F.lit(None).cast(best_t)
-        if k == 1
-        else F.array().cast(T.ArrayType(best_t))
-    )
-    rem = left.select(
-        *[F.col(c) for c in left_id_cols],
-        *[F.col(c) for c in l_extra],
-        lx.alias("__lx"),
-        ly.alias("__ly"),
-    ).withColumn("__pid", F.monotonically_increasing_id())
-    payload = rem.transform(_barrier)  # joined back at the end
-    rem = payload.select(
-        "__pid",
-        *l_loop,
-        "__lx",
-        "__ly",
-        wrap_cx(F.floor(F.col("__lx") / w)).alias("__lcx"),
-        F.floor(F.col("__ly") / w).alias("__lcy"),
-        (F.abs(F.col("__ly")) >= F.lit(_POLAR_LAT)).alias("__polar"),
-        init_best.alias("__best"),
-        # per-row ring cap: once a row holds a full k, no point farther
-        # than its k-th distance can enter its top-k, so its remaining
-        # search radius (in cells) is bounded by its own d_k, not the
-        # global schedule — null until a full k exists
-        F.lit(None).cast("int").alias("__rcap"),
-    )
-
-    # occupied right cells: bounded by the GRID (≤ nbx·nby keys — 4140 at
-    # 4°), never by data volume, so COLLECTING it is always safe — one
-    # grid-bounded agg job both materializes the bucketed R checkpoint and
-    # returns the occupied-cell set with per-cell counts (n_right for the
-    # density-adaptive round-1 radius comes free, replacing a separate
-    # R.count() job).  occ becomes a literal local relation, so the
-    # per-round ring test broadcasts it without ever re-scanning R, and
-    # per-row candidate work is O(occupied ∩ ring), not O(r²) — empty
-    # ocean/desert cells cost nothing.
-    _t_setup = time.time()
-    cell_counts = R.groupBy("__rcx", "__rcy").count().collect()
-    if _DEBUG:
-        print(
-            f"[knn] setup: R bucket+checkpoint+cell-count "
-            f"{time.time() - _t_setup:.2f}s", flush=True,
-        )
-    n_right = sum(row["count"] for row in cell_counts)
-    occ = left.sparkSession.createDataFrame(
-        [(int(row["__rcx"]), int(row["__rcy"])) for row in cell_counts],
-        "__ocx long, __ocy long",
-    )
-
-    sel = _best_struct(right_pay_cols, tie_break)
-    resolved: DataFrame | None = None
-    # Schedule ending in forced global coverage; the per-row __rcap makes
-    # late rounds cheap, so the schedule only decides how soon rows
-    # ACQUIRE their cap (round 1) and how many driver round-trips the
-    # stragglers get before the forced global pass.  Round 1's radius is
-    # DENSITY-ADAPTIVE: sized so the disk holds ~4k right rows in
-    # expectation ((2r+1)² · |R|/ncells ≥ 4k) — a fixed radius either
-    # floods dense data with candidates or leaves sparse data's rows
-    # cap-less, sending them through the global ring at full price (the
-    # r5 j18 regression).  The occupied-cell agg doubles as the one-time
-    # materialization of the bucketed right checkpoint.
-    gmax = max(nbx, nby_r)
-    ncells = nbx * nby_r
-    r1 = max(
-        1,
-        math.ceil(
-            (math.sqrt(max(1.0, 16.0 * k * ncells / max(1, n_right))) - 1) / 2
-        ),
-    )
-    schedule: list[int] = []
-    r = r1
-    while len(schedule) < max(1, max_rounds) - 1 and (2 * r + 1) < gmax:
-        schedule.append(r)
-        r *= 8
-    schedule.append(gmax)
-
-    # k-th-best distance / full-k test (column exprs over __best, valid on
-    # any frame carrying it)
-    if k == 1:
-        d_best = F.col("__best.__d")
-        have_k = F.col("__best").isNotNull()
-    else:
-        d_best = F.when(F.size("__best") >= k, F.element_at("__best", k)["__d"])
-        have_k = d_best.isNotNull()
-    r_prev = -1  # first round is the full disk INCLUDING the own cell
-    for ri, r in enumerate(schedule):
-        _t0 = time.time()
-        global_cover = (2 * r + 1) >= nbx and (2 * r + 1) >= nby_r
-
-        # Candidate generation: broadcast-join the unresolved rows against
-        # the occupied-cell set with the wrap-aware Chebyshev ring
-        # condition, then equi-join the matched cells to R.  The min-wrap
-        # distance (dxw ≤ nbx/2 by construction) makes each occupied cell
-        # match a left row at most once per round — no duplicated right
-        # rows (which the k>1 top-array cannot tolerate) — and rounds stay
-        # disjoint through the `> r_prev` ring lower bound.  Polar rows
-        # sweep every longitude of their latitude band (their neighborhood
-        # IS the band), so only the dy ring applies to them.
-        dcx = F.abs(F.col("__lcx") - F.col("__ocx"))
-        dxw = F.least(dcx, F.lit(nbx) - dcx)
-        dy = F.abs(F.col("__lcy") - F.col("__ocy"))
-        cheb = F.greatest(dxw, dy)
-        # ring upper edge is the SMALLER of the schedule radius and the
-        # row's own cap — a row with a full k only sweeps the cells that
-        # could still beat its k-th distance (capped rows always resolve
-        # this round, so rounds stay disjoint through `> r_prev`)
-        rhi = F.least(F.lit(r), F.coalesce(F.col("__rcap"), F.lit(r)))
-        in_ring = F.when(
-            F.col("__polar"), (dy <= rhi) & (dy > F.lit(r_prev))
-        ).otherwise((cheb <= rhi) & (cheb > F.lit(r_prev)))
-        cand = (
-            rem.join(F.broadcast(occ), in_ring)
-            .join(
-                R,
-                (F.col("__ocx") == F.col("__rcx")) & (F.col("__ocy") == F.col("__rcy")),
-            )
-        )
+        rep = R.join(
+            F.broadcast(pairs),
+            (F.col("__rcx") == F.col("__ocx")) & (F.col("__rcy") == F.col("__ocy")),
+        ).drop("__ocx", "__ocy", "__rcx", "__rcy")
+        on = (F.col("__lcx") == F.col("__pcx")) & (F.col("__lcy") == F.col("__pcy"))
         if condition is not None:
-            cand = cand.where(condition)
-
-        cand = cand.withColumn(
-            "__d",
-            dist_expr(F.col("__lx"), F.col("__ly"), F.col("__rx"), F.col("__ry")),
+            on = on & condition
+        rank = Window.partitionBy("__lcx", "__lcy", "__pid").orderBy(
+            "__d", *tie_break, "__rid"
         )
-        # State merge in ONE exchange: candidate rows already carry every
-        # state column (cand derives from rem), so instead of aggregating
-        # candidates and joining the result back to rem (an agg exchange
-        # PLUS a join exchange PLUS the state repartition — three shuffles
-        # of the state per round, and at local scale three scheduling
-        # waves), union the current best-so-far into the candidate stream
-        # as one sentinel row per pid and aggregate the lot by pid.  The
-        # explicit repartition(n, __pid) BEFORE the groupBy both satisfies
-        # the aggregation's distribution requirement (Catalyst inserts no
-        # second exchange) and pins the state partition count against AQE
-        # coalescing (see the checkpoint note below).  first(state_col) is
-        # deterministic here because every row of a pid group carries
-        # identical state values — they are all copies of the same rem row.
-        state_cols = [c for c in rem.columns if c not in ("__pid", "__best")]
-        par = left.sparkSession.sparkContext.defaultParallelism
-        if k == 1:
-            cand_u = cand.select("__pid", *state_cols, sel.alias("__c"))
-            prev_u = rem.select(
-                "__pid", *state_cols, F.col("__best").alias("__c")
-            )
-            merge_agg = F.min("__c").alias("__best")
-        else:
-            # bound candidates to k per (row, cell) BEFORE anything crosses
-            # a pid shuffle: a bare collect_list would buffer every
-            # candidate of a dense ring in the hash aggregate (OOM at
-            # scale), and r5's bench showed the former per-pid row_number
-            # over ALL in-ring candidates sorting millions of rows per
-            # round.  The local window partitions by (pid, cell) — the cell
-            # join's output already clusters those keys (R is bucketed on
-            # them), so this is a within-partition sort with NO exchange —
-            # and only ≤ k survivors per (pid, cell) reach the groupBy,
-            # whose collect_list is then ring-cell-bounded (≤ k·|ring∩occ|).
-            from pyspark.sql.window import Window as _W
-
-            w_loc = _W.partitionBy("__pid", "__ocx", "__ocy").orderBy("__c")
-            bounded = (
-                cand.withColumn("__c", sel)
-                .withColumn("__rn", F.row_number().over(w_loc))
-                .where(F.col("__rn") <= k)
-            )
-            cand_u = bounded.select(
-                "__pid", *state_cols, F.array("__c").alias("__c")
-            )
-            prev_u = rem.select(
-                "__pid", *state_cols, F.col("__best").alias("__c")
-            )
-            merge_agg = F.slice(
-                F.array_sort(F.flatten(F.collect_list("__c"))), 1, k
-            ).alias("__best")
-        merged = (
-            cand_u.unionByName(prev_u)
-            .repartition(max(8, par // 4), "__pid")
-            .groupBy("__pid")
-            .agg(*[F.first(c).alias(c) for c in state_cols], merge_agg)
-        )
-        if not global_cover:
-            # next round's per-row cap, derived from the NEW k-th best: the
-            # smallest cell radius whose lat/lon exclusion bounds clear
-            # d_k (same bounds as the accept test below, solved for r with
-            # the conservative φ* = |φ| + d_k/_MPD_LAT)
-            rho_lat = F.ceil(d_best / F.lit(w * _MPD_LAT))
-            phi_c = F.least(
-                F.lit(_PHI_CAP),
-                F.abs(F.col("__ly")) + d_best / F.lit(_MPD_LAT),
-            )
-            # invert the chord bound for r: need 2·b·√(cosφ1·cosφc)·
-            # sin(r·w/2) ≥ d_k, so r = ⌈2·asin(q)/w⌉ with q = d_k/(2·b·√…);
-            # q ≥ 1 means no longitude ring ever clears d_k (near-polar or
-            # huge d_k) — the latitude bound alone caps those rows
-            q_lon = d_best / (
-                F.lit(2.0 * _RPOL)
-                * F.sqrt(
-                    F.cos(F.radians(F.abs(F.col("__ly"))))
-                    * F.cos(F.radians(phi_c))
-                )
-            )
-            rho_lon = F.when(
-                q_lon < 1.0,
-                F.ceil(F.degrees(F.asin(q_lon)) * F.lit(2.0 / w)),
-            ).otherwise(F.lit(gmax + 1).cast("long"))
-            rcap_new = F.when(
-                have_k,
-                F.least(
-                    F.lit(gmax + 1).cast("long"),
-                    F.when(F.col("__polar"), rho_lat).otherwise(
-                        F.greatest(rho_lat, rho_lon)
-                    ),
+        return (
+            L.join(rep.hint("merge"), on, how)
+            .withColumn(
+                "__d",
+                # null for the outer join's no-candidate row (the kernel
+                # expression would clamp a null to 0 m)
+                F.when(
+                    F.col("__rid").isNotNull(),
+                    dist_expr(F.col("__lx"), F.col("__ly"), F.col("__rx"), F.col("__ry")),
                 ),
-            ).cast("int")
-            merged = merged.withColumn(
-                "__rcap_old", F.col("__rcap")
-            ).withColumn("__rcap", rcap_new)
-        # ONE materialization per round, at quarter-parallelism state
-        # partitions (floor 8): the merge's explicit repartition(n, __pid)
-        # above already pinned the count — the loop state is id + coords +
-        # best-struct rows, and every downstream stage pays a fixed
-        # per-task scheduling cost per partition, so full parallelism here
-        # made each tiny round ~40% slower at local[32] (same trade as the
-        # streaming harness's state partitions); a real cluster's state
-        # rows per partition stay bounded because par scales with the
-        # executor count.  done/rem are then cheap filters over the
-        # checkpointed result, so neither the final union nor the next
-        # round recomputes this round's join.
-        # (r7 measured: skipping this for the FINAL round — "merged is
-        # consumed once, the checkpoint is a pure extra pass" — made
-        # j18 5.8→9.1s and j17 4.4→5.3s: the inline global-round join
-        # re-plans under AQE inside the one big final query and loses the
-        # small-partition state shape; keep the checkpoint every round.
-        # r11 measured the final round's EAGER variant against the lazy
-        # one: the plan truncation is what matters, not the up-front
-        # count — lazy folds the state materialization into the output
-        # job and saves a scheduled pass, j18 10.2→7.2s / f2 6.2→4.8s /
-        # j17 5.9→5.0s / j12 5.8→4.9s interleaved mins.)
-        merged = merged.transform(_barrier)
-
-        if global_cover:
-            have_any = (
-                F.col("__best").isNotNull() if k == 1 else F.size("__best") > 0
             )
-            final = merged.where(have_any).select("__pid", "__best")
-            resolved = final if resolved is None else resolved.unionByName(final)
-            if _DEBUG:
-                print(
-                    f"[knn] round r={r} (global): {time.time() - _t0:.1f}s",
-                    flush=True,
-                )
-            break
-
-        # Per-row resolution test: the best-so-far is provably THE nearest
-        # when no point outside the explored disk can be closer.
-        # - a row whose PREVIOUS cap fit inside this round's ring has, by
-        #   the cap's construction, already excluded everything beyond it
-        #   — it resolves unconditionally;
-        # - otherwise the row swept the full schedule ring, and the global
-        #   bounds apply:
-        #   latitude crossing (> r unseen lat cells): d > r·w·_MPD_LAT;
-        #   longitude crossing (Δλ > r·w) at lat offset Δφ from this row:
-        #   d ≥ max(Δφ·_MPD_LAT, 2·b·√(cosφ1·cos(|φ1|+Δφ))·sin(r·w/2))
-        #   (the chord bound — see _RPOL).  Offsets with Δφ·_MPD_LAT ≥ best
-        #   already lose on latitude alone, so only Δφ ≤ best/_MPD_LAT
-        #   matters — evaluating cos at THAT offset (not at the full ring
-        #   height, whose cos collapses to 0 as r grows) keeps the bound
-        #   convergent at every latitude.
-        # k > 1: the bound must clear the K-th best — then no unexplored
-        # point can displace any of the current top k (it would have to be
-        # closer than the k-th, contradicting the ring bound)
-        lat_ok = d_best <= F.lit(_MPD_LAT * r * w)
-        phi_star = F.least(
-            F.lit(_PHI_CAP),
-            F.abs(F.col("__ly"))
-            + F.least(F.lit((r + 1) * w), d_best / F.lit(_MPD_LAT)),
-        )
-        lon_ok = d_best <= (
-            F.lit(2.0 * _RPOL * math.sin(math.radians(min(r * w, 180.0)) / 2))
-            * F.sqrt(
-                F.cos(F.radians(F.abs(F.col("__ly"))))
-                * F.cos(F.radians(phi_star))
-            )
-        )
-        cap_done = F.col("__rcap_old").isNotNull() & (
-            F.col("__rcap_old") <= F.lit(r)
-        )
-        accept = cap_done | (
-            have_k
-            & lat_ok
-            & (F.lit((2 * r + 1) >= nbx) | F.col("__polar") | lon_ok)
+            .withColumn("__rn", F.row_number().over(rank))
+            .where(F.col("__rn") <= k)
         )
 
-        done = merged.where(accept).select("__pid", "__best")
-        resolved = done if resolved is None else resolved.unionByName(done)
-        rem = merged.where(~F.coalesce(accept, F.lit(False))).drop("__rcap_old")
-        if _DEBUG:
-            print(
-                f"[knn] round r={r}: rem_next={rem.count()} "
-                f"({time.time() - _t0:.1f}s)", flush=True,
-            )
-        # early-exit probe ONLY when rounds remain after the next one: the
-        # probe is a scheduled job, and when the next round is the forced
-        # global pass an empty `rem` flows through it for the same
-        # near-zero cost the probe itself would pay — so for the default
-        # two-round schedule the probe is pure overhead (one job per run)
-        if ri < len(schedule) - 2 and rem.isEmpty():
-            break
-        r_prev = r
-
-    joined = payload.join(resolved.select("__pid", "__best"), "__pid")
-    b = "__best" if k == 1 else "__b"
-    if k > 1:
-        joined = joined.withColumn("__b", F.explode("__best"))
     out_right = [
-        F.col(f"{b}.p.__p{i}").alias(out_names[len(left_id_cols) + i])
-        for i in range(len(right_pay_cols))
+        F.col(c).alias(out_names[len(left_id_cols) + i])
+        for i, c in enumerate(right_pay_cols)
     ]
     cols = [F.col(c).alias(n) for c, n in zip(left_id_cols, out_names)] + out_right
     if distance_column:
-        cols.append(
-            F.round(F.col(f"{b}.__d")).cast("int").alias(distance_column)
+        cols.append(F.round(F.col("__d")).cast("int").alias(distance_column))
+
+    if condition is not None:
+        # the condition's census: one pass with a left outer join (it keeps
+        # rows whose ring holds no allowed candidate) finds the unsettled
+        # rows; their cells get the ring of their largest k-th allowed
+        # distance, or the whole grid when a row has fewer than k
+        row = Window.partitionBy("__lcx", "__lcy", "__pid")
+        first = top_k(bound, "left").withColumn(
+            "__dk", F.when(F.count("__d").over(row) >= k, F.max("__d").over(row))
         )
-    return joined.select(*cols)
-
-
-def _best_struct(right_pay_cols: list[str], tie_break: list[str]) -> Column:
-    return F.struct(
-        F.col("__d").alias("__d"),
-        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(tie_break)],
-        F.col("__rid").alias("__rid"),
-        F.struct(
-            *[F.col(c).alias(f"__p{i}") for i, c in enumerate(right_pay_cols)]
-        ).alias("p"),
-    )
-
-
-def _best_type(right: DataFrame, right_pay_cols: list[str], tie_break: list[str]):
-    """StructType of the best-so-far column (for the initial NULL)."""
-    from pyspark.sql import types as T
-
-    fields = {f.name: f for f in right.schema.fields}
-    out = [T.StructField("__d", T.DoubleType())]
-    for i, c in enumerate(tie_break):
-        out.append(T.StructField(f"__tb{i}", fields[c].dataType))
-    out.append(T.StructField("__rid", T.LongType()))
-    out.append(
-        T.StructField(
-            "p",
-            T.StructType(
-                [
-                    T.StructField(f"__p{i}", fields[c].dataType)
-                    for i, c in enumerate(right_pay_cols)
-                ]
-            ),
+        settled = (F.col("__bound") == F.lit(math.inf)) | (
+            F.col("__dk") <= F.col("__bound")
         )
-    )
-    return T.StructType(out)
+        index = {tuple(c): i for i, c in enumerate(lcells.tolist())}
+        for r in (
+            first.where(~F.coalesce(settled, F.lit(False)))
+            .groupBy("__lcx", "__lcy")
+            .agg(F.max("__dk"), F.min(F.col("__dk").isNotNull()))
+            .collect()
+        ):
+            bound[index[(r[0], r[1])]] = r[2] if r[3] else math.inf
+    return top_k(bound, "inner").select(*cols)
+
+
+class _Grid:
+    """Driver-side geometry of one grid (cell width ``w``, ``nbx`` columns)
+    against its occupied right cells: ``rcells`` (an ``(n, 2)`` array of
+    ``(cx, cy)``, repeats summed) holding ``rcount`` rows.  Every method is
+    vectorized over left cells and bounded by the grid, never by data."""
+
+    #: left cells per numpy block (block × occupied right cells doubles)
+    BLOCK = 256
+
+    def __init__(self, w: float, nbx: int, rcells: np.ndarray, rcount: np.ndarray):
+        self.w, self.nbx = w, nbx
+        cells, inv = np.unique(rcells.reshape(-1, 2), axis=0, return_inverse=True)
+        #: the cell of each ``rcells`` row
+        self.parent = inv.reshape(-1)
+        self.cells = cells
+        self.rx, self.ry = cells[:, 0], cells[:, 1]
+        self.rcount = np.bincount(self.parent, rcount, len(cells)).astype(np.int64)
+
+    def _lat(self, cy: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Latitude bounds (degrees) of cell rows ``cy``."""
+        return np.clip(cy * self.w, -90.0, 90.0), np.clip((cy + 1) * self.w, -90.0, 90.0)
+
+    def _dxw(self, cx: np.ndarray, rx: np.ndarray) -> np.ndarray:
+        """Min-wrap column distance, left cells × right cells."""
+        d = np.abs(cx[:, None] - rx[None, :])
+        return np.minimum(d, self.nbx - d)
+
+    def _radius(self, cy: np.ndarray) -> np.ndarray:
+        """Central angle from a cell's center to any point of the cell:
+        hav ρ ≤ hav(half height) + cos φ_center · max cos φ · hav(w/2)."""
+        lo, hi = self._lat(cy)
+        near = np.where((lo <= 0) & (hi >= 0), 0.0, np.minimum(np.abs(lo), np.abs(hi)))
+        hav = np.sin(np.radians(hi - lo) / 4) ** 2 + np.cos(
+            np.radians((lo + hi) / 2)
+        ) * np.cos(np.radians(near)) * np.sin(np.radians(self.w) / 4) ** 2
+        return 2 * np.arcsin(np.sqrt(np.clip(hav, 0.0, 1.0)))
+
+    def _reach(self, lcells: np.ndarray, sel, k: int) -> np.ndarray:
+        """Per left cell, the smallest cell-to-cell upper distance (meters;
+        center angle + both cell radii, the triangle inequality) at which
+        the right cells ``sel`` hold ≥ k rows — an upper bound on the k-th
+        neighbor distance of every point of the cell; ``inf`` when they
+        hold fewer."""
+        rx, ry, n = self.rx[sel], self.ry[sel], self.rcount[sel]
+        if n.sum() < k:
+            return np.full(len(lcells), math.inf)
+        cx, cy = lcells[:, 0], lcells[:, 1]
+        lo, hi = self._lat(cy)
+        rlo, rhi = self._lat(ry)
+        lphi, rphi = np.radians((lo + hi) / 2)[:, None], np.radians((rlo + rhi) / 2)
+        hav = np.sin((rphi - lphi) / 2) ** 2 + np.cos(lphi) * np.cos(rphi) * np.sin(
+            np.radians(self._dxw(cx, rx) * self.w) / 2
+        ) ** 2
+        up = np.minimum(
+            math.pi,
+            2 * np.arcsin(np.sqrt(np.clip(hav, 0.0, 1.0)))
+            + self._radius(cy)[:, None]
+            + self._radius(ry),
+        )
+        order = np.argsort(up, axis=1)
+        reach = np.argmax(np.cumsum(n[order], axis=1) >= k, axis=1)
+        rows = np.arange(len(cx))
+        return up[rows, order[rows, reach]] * _R_MAX
+
+    def _ring(self, lcells: np.ndarray, bound: np.ndarray) -> np.ndarray:
+        """Left cells × right cells: the right cells inside each left
+        cell's ring — every right row outside it is farther than the
+        cell's ``bound`` from every point of the cell."""
+        cx, cy = lcells[:, 0], lcells[:, 1]
+        lo, hi = self._lat(cy)
+        phi = np.maximum(np.abs(lo), np.abs(hi))
+        with np.errstate(over="ignore", invalid="ignore", divide="ignore"):
+            # latitude: more than r_lat rows away means Δφ > r_lat·w
+            r_lat = np.ceil(bound / (self.w * _MPD_LAT))
+            # longitude: the chord bound at φ* = φ + D/_MPD_LAT solved for
+            # r; q ≥ 1 means no longitude ring clears D
+            phi_s = np.minimum(90.0, phi + bound / _MPD_LAT)
+            q = bound / (
+                2 * _RPOL * np.sqrt(np.cos(np.radians(phi)) * np.cos(np.radians(phi_s)))
+            )
+            every_lon = (phi >= _POLAR_LAT) | ~(q < 1.0)
+            r_lon = np.ceil(2 * np.degrees(np.arcsin(np.minimum(q, 1.0))) / self.w)
+        return (np.abs(self.ry[None, :] - cy[:, None]) <= r_lat[:, None]) & (
+            every_lon[:, None] | (self._dxw(cx, self.rx) <= r_lon[:, None])
+        )
+
+    def kth_bound(
+        self, lsub: np.ndarray, fine: "_Grid", k: int
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """The occupied left cells holding the occupied left sub-cells
+        ``lsub`` of ``fine`` (whose right cells nest in this grid's, in
+        ``fine.cells`` order), and per cell the bound ``D``: the cell-level
+        reach, tightened to the largest sub-cell reach over the right
+        sub-cells inside the cell's ring (every k-th neighbor of the cell
+        lies there)."""
+        lcells, inv = np.unique((lsub // _SUB).reshape(-1, 2), axis=0, return_inverse=True)
+        inv = inv.reshape(-1)
+        order = np.argsort(inv, kind="stable")
+        start = np.searchsorted(inv[order], np.arange(len(lcells) + 1))
+        out = np.full(len(lcells), math.inf)
+        for s in range(0, len(lcells), self.BLOCK):
+            block = lcells[s : s + self.BLOCK]
+            d = self._reach(block, slice(None), k)
+            ring = self._ring(block, d)
+            for i in np.flatnonzero(np.isfinite(d)):
+                subs = lsub[order[start[s + i] : start[s + i + 1]]]
+                d[i] = min(d[i], fine._reach(subs, ring[i][self.parent], k).max())
+            out[s : s + len(block)] = d
+        return lcells, out
+
+    def pairs(self, lcells: np.ndarray, bound: np.ndarray) -> pd.DataFrame:
+        """``(right cell, left cell, bound)`` for every occupied right cell
+        inside the ring of each left cell; the bound reads ``inf`` where
+        the ring holds every right cell."""
+        parts = [
+            pd.DataFrame(
+                {c: np.array([], np.int64) for c in ("__ocx", "__ocy", "__pcx", "__pcy")}
+                | {"__bound": np.array([], np.float64)}
+            )
+        ]
+        for s in range(0, len(lcells), self.BLOCK):
+            block, d = lcells[s : s + self.BLOCK], bound[s : s + self.BLOCK]
+            ring = self._ring(block, d)
+            li, ri = np.nonzero(ring)
+            parts.append(
+                pd.DataFrame(
+                    {
+                        "__ocx": self.rx[ri],
+                        "__ocy": self.ry[ri],
+                        "__pcx": block[li, 0],
+                        "__pcy": block[li, 1],
+                        "__bound": np.where(ring.all(axis=1), math.inf, d)[li],
+                    }
+                )
+            )
+        return pd.concat(parts, ignore_index=True)

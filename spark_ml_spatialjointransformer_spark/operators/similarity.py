@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from spark_ml_spatialjointransformer_spark.operators._compat import (
     barrier as _barrier,
+    unbarrier as _unbarrier,
 )
 
 
@@ -1211,7 +1212,7 @@ def kmeans_int(
     for _ in range(iters):
         asg = assign(cents)
         ex = asg.select("__cid", F.posexplode("__q").alias("__i", "__qv"))
-        cents = (
+        prev, cents = cents, (
             ex.groupBy("__cid", "__i")
             .agg(F.expr("sum(__qv) div count(1)").alias("__cv"))
             .groupBy("__cid")
@@ -1223,6 +1224,10 @@ def kmeans_int(
             )
             .transform(_barrier)
         )
+        # release the superseded round, as the graph loops do: on the
+        # persist() fallback each round's table would otherwise stay
+        # cached for the session
+        _unbarrier(prev)
     final = assign(cents)
     return final.select(
         F.col("__vid").alias(id_col),

@@ -701,6 +701,12 @@ def _compile_spatial_join(
     else:
         left, right, lt, rt = inp, ext, "i", "e"
 
+    if op == "nearest" and plan.strategy == "partitioned":
+        # big×big kNN: one certified grid pass, no broadcast of either
+        # side; its cell join shuffles the iterated side anyway, so the
+        # parallelism guard below would only add an exchange
+        return _partitioned_nearest_route(left, right, lt, rt, plan, input_cols)
+
     # Parallelism guard: the iterated side drives every task.  Small local
     # parquet collapses to 1-2 input splits, which would serialize the whole
     # join; at cluster scale the side already has >= defaultParallelism
@@ -714,10 +720,6 @@ def _compile_spatial_join(
         )
 
         left = ensure_min_parallelism(left)
-
-    if op == "nearest" and plan.strategy == "partitioned":
-        # big×big kNN: grid cells + radius-expansion rounds, no broadcast
-        return _partitioned_nearest_route(left, right, lt, rt, plan, input_cols)
 
     if op == "nearest":
         # fast path: vectorized broadcast-kNN, no join/shuffle at all.

@@ -229,11 +229,11 @@ def j16_knn3_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register("j12_nearest_partitioned", _J7_ORACLE)
 def j12_nearest_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The j7 kNN under strategy='partitioned': grid-cell bucketing +
-    radius-expansion rounds, neither side broadcast (operators/knn.py) —
-    the beyond-reference scale path lifting the reference's broadcast
-    memory bound for big×big nearest joins.  Same oracle as j7: hash
-    equality proves the iterative grid search returns the true nearest."""
+    """The j7 kNN under strategy='partitioned': one certified grid pass,
+    neither side broadcast (operators/knn.py) — the beyond-reference scale
+    path lifting the reference's broadcast memory bound for big×big
+    nearest joins.  Same oracle as j7: hash equality proves the per-cell
+    ring bound keeps every true nearest."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "lon", "lat")
     supp = suppliers_geo(spark, sf_dir)
     plan = SpatialJoinPlan(
@@ -266,9 +266,9 @@ FROM r WHERE rn = 1
 def j17_nearest_cond_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j10 under strategy='partitioned': nearest supplier in a DIFFERENT
     nation with neither side broadcast — the extra theta condition filters
-    candidates inside the grid loop's cell join (the per-row resolution
-    bound survives because a filter only removes candidates).  Same oracle
-    as j10: hash equality proves the big×big path honors the condition."""
+    candidates inside the cell join, and rows it leaves without a settled
+    neighbor go through one widened pass.  Same oracle as j10: hash
+    equality proves the big×big path honors the condition."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "c_nationkey", "lon", "lat")
     supp = suppliers_geo(spark, sf_dir)
     plan = SpatialJoinPlan(
@@ -299,8 +299,8 @@ FROM r WHERE rn <= 3
 )
 def j18_knn3_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """j16 under strategy='partitioned': k=3 nearest with neither side
-    broadcast — the grid loop carries a sorted k-element top-array and a
-    row resolves when its K-th best beats the unexplored-ring bound.  Same
+    broadcast — each cell's ring is sized from an upper bound on its rows'
+    3rd-neighbor distance, and a window keeps the top 3 per row.  Same
     oracle as j16: hash equality proves the big×big top-k agrees with the
     zero-shuffle broadcast path."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "lon", "lat")
@@ -1884,7 +1884,7 @@ def j34_assignment_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: supplier-side Catalyst size estimate above which j34's k=2 retrieval
 #: leaves the broadcast kernel (which ships all of R to every input
-#: partition and scans L×R) for the partitioned grid loop
+#: partition and scans L×R) for the partitioned grid kNN
 _J34_BROADCAST_BOUND_BYTES = 64 * 1024 * 1024
 
 

@@ -118,8 +118,8 @@ class BroadcastSpatialJoin(
         "joinStrategy",
         "'broadcast' (reference contract) or 'partitioned' (every predicate: "
         "both sides shuffle on grid-cell equi-keys — withindist uses "
-        "latitude bands, bbox predicates grid cells, nearest the iterative "
-        "radius-expansion loop incl. k>1 and extra conditions; lifts the "
+        "latitude bands, bbox predicates grid cells, nearest one certified "
+        "grid pass incl. k>1 and extra conditions; lifts the "
         "broadcast memory bound for big-by-big joins)",
     )
     numNeighbors = _str_param(

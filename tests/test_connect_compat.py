@@ -193,6 +193,36 @@ class TestBarrierFallback:
         _block_local_checkpoint(monkeypatch)
         assert run() == baseline
 
+    def test_kmeans_releases_superseded_centroids(self, spark, monkeypatch):
+        """On the persist() fallback kmeans_int keeps only the quantized
+        corpus and the last round's centroids cached, not one centroid
+        table per round, and returns the same assignments."""
+        from spark_ml_spatialjointransformer_spark.operators.similarity import (
+            kmeans_int,
+        )
+
+        df = spark.createDataFrame(
+            [(i, [0.01 * i, -0.02 * (i % 5)]) for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+
+        def run():
+            return collect_sorted(
+                kmeans_int(df, "vec_id", "embedding", dim=2, k=3, iters=4)
+            )
+
+        baseline = run()
+        _block_local_checkpoint(monkeypatch)
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        assert run() == baseline
+        new = set(jsc.getPersistentRDDs().keySet()) - before
+        try:
+            assert len(new) <= 2, new
+        finally:
+            for rid in new:
+                jsc.getPersistentRDDs().get(rid).unpersist(False)
+
 
 class TestGuardDegradation:
     def test_stats_probe_returns_none_without_jdf(self, spark):

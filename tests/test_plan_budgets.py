@@ -64,15 +64,18 @@ BUDGETS = {
     "j21_zorder_tiles": (1, 0),
     "t30_kmv_distinct": (4, 0),
     "p4_multimodal_pipeline": (1, 3),
-    "f2_transformer_knn_partitioned": (5, 0),
+    # one-pass kNN: the census aggregate, then the cell join's two sides
+    "f2_transformer_knn_partitioned": (3, 0),
     "j22_within_left_outer": (3, 1),
     "j7_nearest_supplier": (1, 1),
     "j6_withindist_pairs": (1, 0),
     "j11_withindist_partitioned": (1, 0),
     "j16_knn3_supplier": (1, 1),
-    "j12_nearest_partitioned": (5, 0),
+    "j12_nearest_partitioned": (3, 0),
+    # + the settled-row census of the first pass (the cell join's two
+    # sides again) before the final plan
     "j17_nearest_cond_partitioned": (5, 0),
-    "j18_knn3_partitioned": (5, 0),
+    "j18_knn3_partitioned": (3, 0),
     "j2_within_nation": (1, 1),
     "j14_within_partitioned": (1, 1),
     "j3_contains_nation": (1, 1),

@@ -5,8 +5,8 @@
   neighbors and near-pole latitudes (the latitude-aware chord window fixes
   the reference's >72°-latitude under-cover of its flat 1° ≈ 35 km
   inflation, so the full ±89° range is exercised);
-- ``nearest`` cardinality == iterated-side row count, and every reported
-  distance achieves the true minimum;
+- ``nearest`` (k=1 and k=3, with and without a selective condition)
+  returns each iterated-side row's true k nearest allowed neighbors;
 - ``within`` and ``contains`` are the same relation under direction swap;
 - param micro-parser properties (no Spark).
 
@@ -88,38 +88,119 @@ def test_withindist_equals_brute_force(spark, strategy, left, right, radius_km):
     assert got == expected
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
-@SPARK_SETTINGS
-@given(left=points, right=points)
-def test_nearest_cardinality_and_optimality(spark, strategy, left, right):
-    """Both nearest strategies achieve the true minimum on random point
-    sets spanning the antimeridian and near-pole latitudes — for the
-    partitioned path this exercises the grid loop's exclusion bounds
-    (latitude crossing + the chord-form longitude bound + per-row caps)
-    against a numpy brute force: a too-tight bound would resolve a row
-    early with a non-minimal neighbor and fail here."""
-    inp = _df(spark, left, "i")
-    ext = _df(spark, right, "e")
-    plan = SpatialJoinPlan(
+def _nearest_plan(strategy, k, condition=""):
+    return SpatialJoinPlan(
         predicate="nearest",
         external_side=_POINT,
         input_side=_POINT,
         data_columns=(("e_id", "e_id"),),
         distance_column="dist_m",
+        condition=condition,
         broadcast_input=False,  # iterate input: one row per input point
         distance_kernel="haversine",
         tie_break=("e_id",),
+        k=k,
         strategy=strategy,
     )
-    rows = spatial_join(inp, ext, plan).select("i_id", "e_id", "dist_m").collect()
-    assert len(rows) == len(left)  # cardinality == iterated side
 
+
+def _assert_top_k(rows, left, right, k, allowed=None):
+    """Every input row gets min(k, allowed candidates) distinct allowed
+    neighbors whose distances are the k smallest of a numpy brute force."""
     il = np.array([p[0] for p in left]); ia = np.array([p[1] for p in left])
     el = np.array([p[0] for p in right]); ea = np.array([p[1] for p in right])
     dm = haversine_np(il[:, None], ia[:, None], el[None, :], ea[None, :])
     dr = np.floor(dm + 0.5).astype(np.int64)
+    ok = np.ones(len(right), bool) if allowed is None else np.asarray(allowed)
+    got: dict[int, list] = {}
     for r in rows:
-        assert r.dist_m == int(dr[r.i_id].min())  # achieves the true minimum
+        got.setdefault(r.i_id, []).append((r.e_id, r.dist_m))
+    for i in range(len(left)):
+        want = sorted(dr[i, ok].tolist())[:k]
+        mine = got.get(i, [])
+        assert sorted(d for _, d in mine) == want, i
+        assert len({e for e, _ in mine}) == len(mine)
+        for e, d in mine:
+            assert ok[e] and dr[i, e] == d
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
+@SPARK_SETTINGS
+@given(left=points, data=st.data())
+def test_nearest_cardinality_and_optimality(spark, strategy, left, data):
+    """Both nearest strategies return each input row's true k nearest on
+    random point sets spanning the antimeridian and near-pole latitudes,
+    k=1 and k=3, also with fewer external rows than k — for the
+    partitioned path this exercises the cell bound and the ring's
+    exclusion bounds (latitude crossing + the chord-form longitude bound)
+    against a numpy brute force: a too-small ring would miss a neighbor
+    and fail here."""
+    inp = _df(spark, left, "i")
+    for k, max_right in ((1, 8), (3, 8), (3, 2)):
+        right = data.draw(
+            st.lists(st.tuples(lons, lats), min_size=1, max_size=max_right, unique=True)
+        )
+        ext = _df(spark, right, "e")
+        rows = (
+            spatial_join(inp, ext, _nearest_plan(strategy, k))
+            .select("i_id", "e_id", "dist_m")
+            .collect()
+        )
+        assert len(rows) == len(left) * min(k, len(right))  # cardinality
+        _assert_top_k(rows, left, right, k)
+
+
+#: tenths of a degree around a centre: neighbors within a few grid cells
+_near = st.tuples(
+    st.integers(min_value=-40, max_value=40), st.integers(min_value=-40, max_value=40)
+)
+
+
+@pytest.mark.parametrize("k", [1, 3])
+@SPARK_SETTINGS
+@given(
+    centre=st.tuples(
+        st.integers(min_value=-1795, max_value=1795),
+        st.integers(min_value=-800, max_value=800),
+    ),
+    left=st.lists(_near, min_size=1, max_size=6, unique=True),
+    near=st.lists(
+        # one near row in ten passes the condition
+        st.tuples(_near, st.integers(min_value=0, max_value=9).map(lambda v: v == 0)),
+        min_size=1,
+        max_size=12,
+        unique_by=lambda t: t[0],
+    ),
+    far=points,
+)
+def test_partitioned_nearest_condition_widens(spark, k, centre, left, near, far):
+    """A numeric condition that rejects most near candidates: external
+    rows around the input rows pass only when drawn ``ok``, and far rows
+    anywhere always pass.  Rows left with fewer than k allowed candidates
+    inside their first ring go through the widening pass; the result must
+    still be each row's true k nearest ALLOWED rows (rows with none drop)."""
+    cx, cy = centre
+
+    def at(dx, dy):
+        lon = (cx + dx + 1800) % 3600 - 1800
+        return lon / 10.0, (cy + dy) / 10.0
+
+    lpts = [at(*d) for d in left]
+    near_pts = [at(*d) for d, _ in near]
+    rpts = near_pts + [p for p in far if p not in near_pts]
+    ok = [flag for _, flag in near] + [True] * (len(rpts) - len(near))
+    inp = spark.createDataFrame(
+        [(i, 0, lon, lat) for i, (lon, lat) in enumerate(lpts)],
+        "i_id int, i_w int, lon double, lat double",
+    )
+    ext = spark.createDataFrame(
+        [(j, int(o), lon, lat) for j, ((lon, lat), o) in enumerate(zip(rpts, ok))],
+        "e_id int, e_w int, lon double, lat double",
+    )
+    plan = _nearest_plan("partitioned", k, condition="left.e_w > right.i_w")
+    rows = spatial_join(inp, ext, plan).select("i_id", "e_id", "dist_m").collect()
+    assert len(rows) == len(lpts) * min(k, sum(ok))
+    _assert_top_k(rows, lpts, rpts, k, ok)
 
 
 @SPARK_SETTINGS

@@ -2,7 +2,7 @@
 
 j34's above-broadcast route: the k=2 nearest retrieval must produce the
 IDENTICAL margin table whether it rides the broadcast argmin kernel or the
-partitioned grid loop (`operators/knn.partitioned_nearest`), and the
+partitioned grid kNN (`operators/knn.partitioned_nearest`), and the
 strategy probe must cross to the partitioned path when the supplier side's
 Catalyst size estimate exceeds the bound — the same guard-crossing contract
 j31 pins for `_grid_component_labels` (tests/test_r7_advice.py).

@@ -531,10 +531,41 @@ class TestPartitionedNearest:
         assert got == expected
         assert len(got) == cust.count()  # cardinality == iterated side
 
+    def test_one_pass_jobs_and_no_checkpoint(self, spark):
+        """A k=3 partitioned call (build + collect) schedules at most 8
+        Spark jobs and persists no checkpoint RDD: one census job, then
+        one query whose only shuffles are the cell join's two sides."""
+        from dataclasses import replace
+
+        from spark_ml_spatialjointransformer_spark.operators.spatial_join import (
+            spatial_join,
+        )
+        from spark_ml_spatialjointransformer_spark.sources.tables import (
+            customers_geo,
+            suppliers_geo,
+        )
+
+        sf = "/root/testdata/sf0.001"
+        cust = customers_geo(spark, sf).select("c_custkey", "lon", "lat")
+        supp = suppliers_geo(spark, sf)
+        plan = replace(self._plans()[1], k=3)
+        sc = spark.sparkContext
+        persisted = set(sc._jsc.getPersistentRDDs().keySet())
+        sc.setJobGroup("knn-one-pass", "knn-one-pass")
+        try:
+            rows = spatial_join(cust, supp, plan).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(rows) == 3 * cust.count()
+        jobs = sc.statusTracker().getJobIdsForGroup("knn-one-pass")
+        assert 0 < len(jobs) <= 8, sorted(jobs)
+        assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+
     def test_empty_right_side_yields_empty_inner_result(self, spark):
-        """Inner-join semantics with ZERO right rows: the occupied-cell
-        collect returns an empty local relation (createDataFrame([], …))
-        and every left row simply never resolves — no error, no rows."""
+        """Inner-join semantics with ZERO right rows: the census finds no
+        occupied right cell, the pair table is empty and so is the cell
+        join — no error, no rows."""
         from spark_ml_spatialjointransformer_spark.functions.geodesic import (
             haversine_expr,
         )
