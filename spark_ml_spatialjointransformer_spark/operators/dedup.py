@@ -5,20 +5,26 @@ small derived keys (LSH band buckets), never on document text:
 
 - exact/near-exact dedup: token-multiset fingerprint groupBy (see
   queries.py t2);
-- MinHash + LSH: shingle → k minhashes → banded bucket join → candidate
-  pairs with estimated Jaccard;
-- SimHash: 60-bit sign-random-projection over token hashes → banded bucket
-  join → Hamming-distance refine;
+- MinHash + LSH: shingle → k minhashes → one xxhash64 key per band →
+  banded self-join → candidate pairs with estimated Jaccard;
+- SimHash / generic Hamming: 60-bit sign-random-projection over token
+  hashes (or any int64 hash) → max_hamming + 1 bit-range bands → banded
+  self-join → Hamming-distance refine;
 - exact n-gram Jaccard: distinct-shingle explode + equi-join + group count
   (the exact verifier for the MinHash estimates; SQL-expressible, so it
   carries a DuckDB oracle).
 
+MinHash, SimHash and Hamming pairs all run through ONE banded self-join,
+``_banded_pairs``: explode (id, band, key) rows, drop hot buckets when
+capped, self-join on (band, key), and keep each pair only in its lowest
+matching band.
+
 Shingle/token extraction runs as an Arrow pandas_udf (microseconds per doc;
 the pure-JVM column formulations are kept as the spec and are bit-identical);
-everything downstream — hashes, permutation minima, band keys, joins,
-aggregates — is JVM whole-stage codegen.  Hash primitives are the md5-based
-``h60`` (functions/hashing.py), computable identically in Spark SQL, DuckDB,
-and hashlib — so the LSH signatures are BOTH bit-verified by the pytest
+everything downstream — permutation minima, band keys, joins, aggregates —
+is JVM whole-stage codegen.  Hash primitives are the md5-based ``h60``
+(functions/hashing.py), computable identically in Spark SQL, DuckDB, and
+hashlib — so the LSH signatures are BOTH bit-verified by the pytest
 oracles (tests/test_dedup.py) and fully SQL-expressible in the driver's
 DuckDB correctness gate (queries.py t6/t7 carry exact oracles).
 """
@@ -26,7 +32,7 @@ DuckDB correctness gate (queries.py t6/t7 carry exact oracles).
 from __future__ import annotations
 
 import logging
-from typing import Optional
+from typing import Callable, Optional
 
 import pandas as pd
 
@@ -36,7 +42,6 @@ from pyspark.sql import functions as F
 from spark_ml_spatialjointransformer_spark.functions.hashing import h60_col
 from spark_ml_spatialjointransformer_spark.operators._compat import (
     barrier as _barrier,
-    barrier_eager as _barrier_eager,
     unbarrier as _unbarrier,
 )
 
@@ -260,33 +265,31 @@ def minhash_signatures(
     cols = [
         "__id",
         F.col("__f.sig").alias("__sig"),
-        # distinct-shingle count rides the same kernel for free: the LSH
-        # band join carries it so candidate pairs emerge with both
-        # sizes in hand (enables the Jaccard size-bound prefilter
-        # BEFORE any shingle-hash array ships)
+        # distinct-shingle count rides the same kernel for free: LSH
+        # candidate pairs attach it so the Jaccard size-bound prefilter
+        # runs BEFORE any shingle-hash array ships
         F.col("__f.sz").alias("__sz"),
     ] + ([F.col("__f.hs").alias("__hs")] if with_hashes else [])
     return feats.where(F.col("__f.sz") > 0).select(*cols)
 
 
 def _drop_hot_buckets(banded: DataFrame, max_bucket: int, op: str) -> DataFrame:
-    """Skew cap shared by the banded self-join family (MinHash LSH,
-    SimHash, generic Hamming): drop every (band, key) bucket holding more
-    than ``max_bucket`` rows BEFORE the self-join.  A hot band key —
-    boilerplate-heavy corpora collapse thousands of near-identical docs
-    onto one key — otherwise turns one task into a B²/2 pair explosion
-    that AQE skew-splitting can only partially chop (it splits the probe
-    side, not the pair count).  Hot buckets are counted with one
+    """Skew cap of ``_banded_pairs``: drop every (band, key) bucket
+    holding more than ``max_bucket`` rows BEFORE the self-join.  A hot band
+    key — boilerplate-heavy corpora collapse thousands of near-identical
+    docs onto one key — otherwise turns one task into a B²/2 pair
+    explosion that AQE skew-splitting can only partially chop (it splits
+    the probe side, not the pair count).  Hot buckets are counted with one
     map-combinable aggregation; only keys ABOVE the cap (≤
     banded_rows/(max_bucket+1) of them) feed the anti-join, and the
     dropped volume is logged loudly.
 
-    Pair semantics under the cap: every caller's first-match dedup keys a
-    pair to its LOWEST matching band, so a pair whose lowest matching
-    band is dropped is suppressed entirely even when a later cool band
-    also matches — the cap trades recall ON HOT TEMPLATES ONLY for
-    bounded task skew, the standard production dedup trade (such buckets
-    are near-total duplicates better handled by exact dedup upstream).
+    Pair semantics under the cap: the first-match filter keys a pair to
+    its LOWEST matching band, so a pair whose lowest matching band is
+    dropped is suppressed entirely even when a later cool band also
+    matches — the cap trades recall ON HOT TEMPLATES ONLY for bounded
+    task skew, the standard production dedup trade (such buckets are
+    near-total duplicates better handled by exact dedup upstream).
     """
     if max_bucket < 2:
         raise ValueError(f"max_bucket must allow at least one pair, got {max_bucket}")
@@ -354,6 +357,67 @@ def _warn_hot_drops_async(hot: DataFrame, max_bucket: int, op: str) -> None:
     t.start()
 
 
+def _banded_pairs(
+    frame: DataFrame,
+    carry: str,
+    bands: int,
+    band_key: Callable[[Column, int], Column],
+    max_bucket: Optional[int],
+    op: str,
+) -> DataFrame:
+    """The one banded self-join behind MinHash LSH, SimHash and Hamming
+    pairs.  ``frame`` holds ``__id`` plus the ``carry`` column each doc's
+    band keys derive from; ``band_key(c, i)`` maps a carry column to the
+    bigint key of band ``i``.
+
+    Every doc explodes into ``bands`` rows (id, band, key, carry); with
+    ``max_bucket`` set, hot (band, key) buckets go first
+    (``_drop_hot_buckets``); the rows then self-join on (band, key).  A pair
+    colliding in several bands is emitted ONCE, in its lowest matching
+    band: the first-match filter keeps a joined row only if every earlier
+    band's keys differ, recomputed from both sides' carries — a codegen
+    filter, so no pair ``distinct`` shuffle exists, and under the cap it
+    is also what suppresses a pair whose lowest matching band is hot.
+    Only (id, band, key, carry) longs move; callers attach payloads to the
+    surviving pairs.  Output: (id_a, id_b, c_a, c_b) with id_a < id_b.
+    """
+    banded = frame.select(
+        "__id",
+        F.col(carry).alias("__c"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        band_key(F.col(carry), i).alias("key"),
+                    )
+                    for i in range(bands)
+                ]
+            )
+        ).alias("b"),
+    ).select("__id", "__c", "b.band", "b.key")
+    if max_bucket is not None:
+        banded = _drop_hot_buckets(banded, max_bucket, op)
+    c_a, c_b = F.col("a.__c"), F.col("b.__c")
+    first_match = F.lit(True)
+    for i in range(bands - 1):
+        first_match = first_match & (
+            (F.col("band") <= i) | (band_key(c_a, i) != band_key(c_b, i))
+        )
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(b, on=["band", "key"])
+        .where(F.col("a.__id") < F.col("b.__id"))
+        .where(first_match)
+        .select(
+            F.col("a.__id").alias("id_a"),
+            F.col("b.__id").alias("id_b"),
+            c_a.alias("c_a"),
+            c_b.alias("c_b"),
+        )
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -368,178 +432,78 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
 
-    ``max_bucket`` (skew hardening, off by default): drop every
-    (band, key) bucket holding more than this many docs BEFORE the
-    self-join.  A hot band key — boilerplate-heavy corpora collapse
-    thousands of near-identical docs onto one key — otherwise turns one
-    task into a B²/2 pair explosion that AQE skew-splitting can only
-    partially chop (it splits the probe side, not the pair count).  Hot
-    buckets are counted with one map-combinable aggregation; only keys
-    ABOVE the cap (≤ total_docs·bands/(max_bucket+1) of them) feed the
-    anti-join — broadcast-hinted while the counted key total stays under
-    1M, plain shuffle above that (small caps on duplicate-heavy corpora
-    can make the hot set O(N·bands), which must not be force-broadcast) —
-    and the dropped volume is logged loudly.  Semantics caveat: the first-match
-    dedup keys a pair to its LOWEST matching band, so a pair whose
-    lowest matching band is dropped is suppressed entirely — the cap
-    trades recall ON HOT TEMPLATES ONLY for bounded task skew, the
-    standard production dedup trade (such buckets are near-total
-    duplicates better handled by exact dedup upstream).
+    Band ``i`` of a doc is keyed by ``xxhash64`` over its ``k // bands``
+    signature longs; the per-band keys form the doc's carry (≤ ``bands``
+    longs) through ``_banded_pairs``, which emits each colliding pair once.
+    The agreement estimate and the sizes then attach to the SURVIVING pairs
+    by id-join against the signature frame, so the banded exchange never
+    carries the k-long signatures and the agreement fold runs once per
+    pair (mirrors MLlib MinHashLSH.approxSimilarityJoin, without its
+    per-band signature carry).  Two different band contents share a key
+    with probability ~2⁻⁶⁴ per key pair — the same convention as the h60
+    shingle hashes: such a collision can only add a candidate (which the
+    estimate filter, or the caller's exact verify, then judges) or move a
+    pair's first match to an earlier band.
 
-    Scale path (mirrors MLlib MinHashLSH.approxSimilarityJoin): the bucket
-    join shuffles (id, sig, band, key) — k longs per doc per band, never the
-    text — and the agreement estimate is computed from the carried
-    signatures, with no post-hoc signature lookups; the checkpoint below
-    makes the scan+shingle+sign pipeline run exactly ONCE.  The
-    estimate filter runs BEFORE the pair dedup, so the dedup shuffle only
-    carries surviving (id_a, id_b, est) triples.  The bucket equi-join is a
-    plain shuffled hash join, skew-safe under AQE.  Output: (id_a, id_b,
-    est_jaccard_e6) with the signature-agreement estimate ≥ threshold.
+    ``max_bucket`` (skew hardening, off by default) drops every
+    (band, key) bucket holding more than this many docs before the
+    self-join; a pair whose lowest matching band is hot is suppressed —
+    see ``_drop_hot_buckets`` for the skew/recall trade.
+
+    ``threshold <= 0`` is the candidate-generation mode: every band
+    collision is a pair, and no signature is attached.  ``sig`` lets a
+    caller pass its own (already-checkpointed) ``minhash_signatures``
+    frame.  Output: (id_a, id_b, est_jaccard_e6[, sz_a, sz_b]) with the
+    signature-agreement estimate ≥ threshold.
     """
     rows = k // bands
-    # localCheckpoint: the self-join references the signature plan twice and
-    # Spark's exchange reuse does not canonicalize across the join aliases —
-    # checkpointing materializes signatures ONCE (executor memory+disk) and
-    # both sides read the materialized partitions.  Trade-off: lineage is
-    # truncated, so losing an executor means recomputing the whole operator
-    # (acceptable for a bounded dedup stage; same caveat as MLlib's
-    # approxSimilarityJoin caching recommendation).  Callers that also need
-    # the per-doc hash arrays pass their own (already-checkpointed) frame.
+    # localCheckpoint: both join sides and the id-joins read the signature
+    # plan, and Spark's exchange reuse does not canonicalize across the join
+    # aliases — checkpointing runs scan+shingle+sign exactly ONCE.  Lineage
+    # is truncated, so losing an executor recomputes the whole operator (the
+    # same caveat as MLlib's approxSimilarityJoin caching recommendation).
     if sig is None:
         sig = minhash_signatures(df, id_col, text_col, k, n).transform(_barrier)
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.concat_ws("_", *[F.col("__sig")[i * rows + j] for j in range(rows)]).alias(
-                    "key"
-                ),
-            )
-            for i in range(bands)
-        ]
-    )
-
-    if max_bucket is None:
-        # LEAN uncapped shape (guide §8 — decide with small rows): the band
-        # self-join carries ONLY (id, band, key); each matching pair is
-        # deduped with a distinct over the id pair (uncapped, "emitted in
-        # the lowest matching band" and "emitted once" are the same output
-        # set, so no per-pair band bookkeeping is needed); sizes and — when
-        # an agreement estimate is wanted — the k-long signatures attach to
-        # the SURVIVING pairs by id-join against the checkpointed signature
-        # frame.  vs the carried-signature shape this cuts the banded
-        # shuffle from (id, sz, k longs, key) to (id, key) per banded row —
-        # at bands=16/k=64 about 5x fewer bytes through the operator's
-        # dominant exchange — and evaluates the agreement fold once per
-        # DISTINCT pair instead of once per band collision.  The id-keyed
-        # signature joins touch sig once per side over a pair set that is
-        # orders of magnitude smaller than the banded stream (candidates
-        # are rare by construction; capped callers bound them explicitly).
-        banded = sig.select("__id", F.explode(band_structs).alias("b")).select(
-            "__id", "b.band", "b.key"
-        )
-        a, b = banded.alias("a"), banded.alias("b")
-        pairs = (
-            a.join(b, on=["band", "key"])
-            .where(F.col("a.__id") < F.col("b.__id"))
-            .select(
-                F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b")
-            )
-            .distinct()
-        )
-        need_est = threshold > 0
-        if need_est or with_sizes:
-            side_cols = ["__id"] + (["__sig"] if need_est else []) + ["__sz"]
-            sa = sig.select(*side_cols).toDF(
-                *[c + "_a" for c in side_cols]
-            )
-            sb = sig.select(*side_cols).toDF(
-                *[c + "_b" for c in side_cols]
-            )
-            pairs = pairs.join(
-                sa, F.col("id_a") == F.col("__id_a")
-            ).join(sb, F.col("id_b") == F.col("__id_b"))
-        if need_est:
-            agree = F.aggregate(
-                F.zip_with(
-                    F.col("__sig_a"),
-                    F.col("__sig_b"),
-                    lambda x, y: F.when(x == y, 1).otherwise(0),
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            est = F.round((agree / F.lit(float(k))) * 1_000_000).cast("bigint")
-        else:
-            est = F.lit(0).cast("bigint")
-        out = [F.col("id_a"), F.col("id_b"), est.alias("est_jaccard_e6")]
-        if with_sizes:
-            out += [
-                F.col("__sz_a").alias("sz_a"),
-                F.col("__sz_b").alias("sz_b"),
+    keys = sig.select(
+        "__id",
+        F.array(
+            *[
+                F.xxhash64(*[F.col("__sig")[i * rows + j] for j in range(rows)])
+                for i in range(bands)
             ]
-        return pairs.select(*out).where(
-            F.col("est_jaccard_e6") >= int(threshold * 1_000_000)
+        ).alias("__bk"),
+    )
+    pairs = _banded_pairs(
+        keys, "__bk", bands, lambda c, i: c[i], max_bucket, "minhash_lsh_pairs"
+    ).select("id_a", "id_b")
+    need_est = threshold > 0
+    side_cols = (
+        ["__id"] + (["__sig"] if need_est else []) + (["__sz"] if with_sizes else [])
+    )
+    if len(side_cols) > 1:
+        sa = sig.select(*side_cols).toDF(*[c + "_a" for c in side_cols])
+        sb = sig.select(*side_cols).toDF(*[c + "_b" for c in side_cols])
+        pairs = pairs.join(sa, F.col("id_a") == F.col("__id_a")).join(
+            sb, F.col("id_b") == F.col("__id_b")
         )
-
-    banded = sig.select(
-        "__id", "__sig", "__sz", F.explode(band_structs).alias("b")
-    ).select("__id", "__sig", "__sz", "b.band", "b.key")
-
-    banded = _drop_hot_buckets(banded, max_bucket, "minhash_lsh_pairs")
-
-    # threshold <= 0 means "every band collision is a candidate" (the LSH
-    # candidate-generation mode): skip the per-pair agreement fold entirely
-    # — it is an interpreted HOF chain the caller would throw away
-    if threshold > 0:
+    if need_est:
         agree = F.aggregate(
             F.zip_with(
-                F.col("a.__sig"), F.col("b.__sig"), lambda x, y: F.when(x == y, 1).otherwise(0)
+                F.col("__sig_a"),
+                F.col("__sig_b"),
+                lambda x, y: F.when(x == y, 1).otherwise(0),
             ),
             F.lit(0),
             lambda acc, x: acc + x,
         )
-        est_e6 = F.round((agree / F.lit(float(k))) * 1_000_000).cast("bigint")
+        est = F.round((agree / F.lit(float(k))) * 1_000_000).cast("bigint")
     else:
-        est_e6 = F.lit(0).cast("bigint")
-
-    # first-match dedup instead of dropDuplicates: a pair matching in
-    # several bands is emitted only in its LOWEST matching band (no earlier
-    # band has all rows of the signature equal), so no pair-dedup shuffle
-    # exists — the check is a codegen filter over the carried signatures
-    def _band_differs(bi: int) -> Column:
-        diffs = [
-            F.col("a.__sig")[bi * rows + j] != F.col("b.__sig")[bi * rows + j]
-            for j in range(rows)
-        ]
-        out = diffs[0]
-        for x in diffs[1:]:
-            out = out | x
-        return out
-
-    # for join band `band`: every earlier band bi < band must differ
-    first_match = F.lit(True)
-    for bi in range(bands - 1):
-        first_match = first_match & ((F.col("band") <= bi) | _band_differs(bi))
-
-    a, b = banded.alias("a"), banded.alias("b")
-    out_cols = [
-        F.col("a.__id").alias("id_a"),
-        F.col("b.__id").alias("id_b"),
-        est_e6.alias("est_jaccard_e6"),
-    ]
+        est = F.lit(0).cast("bigint")
+    out = [F.col("id_a"), F.col("id_b"), est.alias("est_jaccard_e6")]
     if with_sizes:
-        out_cols += [
-            F.col("a.__sz").alias("sz_a"),
-            F.col("b.__sz").alias("sz_b"),
-        ]
-    return (
-        a.join(b, on=["band", "key"])
-        .where(F.col("a.__id") < F.col("b.__id"))
-        .where(first_match)
-        .select(*out_cols)
-        .where(F.col("est_jaccard_e6") >= int(threshold * 1_000_000))
+        out += [F.col("__sz_a").alias("sz_a"), F.col("__sz_b").alias("sz_b")]
+    return pairs.select(*out).where(
+        F.col("est_jaccard_e6") >= int(threshold * 1_000_000)
     )
 
 
@@ -669,66 +633,18 @@ def simhash_pairs(
     max_hamming: int = 3,
     max_bucket: Optional[int] = None,
 ) -> DataFrame:
-    """Near-duplicate pairs with SimHash Hamming distance ≤ max_hamming.
-
-    Candidate generation via 4 15-bit bands (pigeonhole: distance ≤ 3 ⇒ at
-    least one of 4 bands is equal), exact refine via bit_count(xor).
-    ``max_bucket`` drops hot (band, key) buckets before the self-join —
-    see ``_drop_hot_buckets`` for the skew/recall trade.
+    """Near-duplicate pairs with SimHash Hamming distance ≤ max_hamming:
+    ``hamming_pairs`` over the 60-bit ``simhash_values`` (``max_hamming + 1``
+    bands, so recall is exact at every radius).  ``max_bucket`` drops hot
+    (band, key) buckets before the self-join — see ``_drop_hot_buckets``.
     Output: (id_a, id_b, hamming)."""
-    n_bands = 4
-    width = SIMHASH_BITS // n_bands
-    # single materialization for the self-join — see minhash_lsh_pairs
-    sig = simhash_values(df, id_col, text_col).transform(_barrier)
-    banded = sig.select(
+    return hamming_pairs(
+        simhash_values(df, id_col, text_col),
         "__id",
         "__sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        # shiftright+mask, NOT division/modulo: double
-                        # division loses exactness above 2^53, and signed
-                        # remainder would corrupt keys for sign-bit hashes
-                        # (moot here — __sh < 2^60 — but see hamming_pairs)
-                        F.shiftright("__sh", i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("__id", "__sh", "b.band", "b.key")
-
-    if max_bucket is not None:
-        banded = _drop_hot_buckets(banded, max_bucket, "simhash_pairs")
-
-    # first-match dedup (see minhash_lsh_pairs): pair emitted only in its
-    # lowest matching band — codegen filter, no pair-dedup shuffle
-    def _band_key(side: str, bi: int) -> Column:
-        return F.shiftright(F.col(f"{side}.__sh"), bi * width).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-
-    first_match = F.lit(True)
-    for bi in range(n_bands - 1):
-        first_match = first_match & (
-            (F.col("band") <= bi) | (_band_key("a", bi) != _band_key("b", bi))
-        )
-
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, on=["band", "key"])
-        .where(F.col("a.__id") < F.col("b.__id"))
-        .where(first_match)
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.bit_count(F.col("a.__sh").bitwiseXOR(F.col("b.__sh"))).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
+        bits=SIMHASH_BITS,
+        max_hamming=max_hamming,
+        max_bucket=max_bucket,
     )
 
 
@@ -741,21 +657,18 @@ def hamming_pairs(
     max_bucket: Optional[int] = None,
 ) -> DataFrame:
     """Pairs within Hamming distance ``max_hamming`` over ANY int64 hash
-    column — ``simhash_pairs``' pigeonhole machinery generalized so
-    perceptual hashes (image ahash, audio fingerprints) get the same
-    banded self-join text simhash has, instead of exact-equality-only
-    dedup.
+    column — text SimHash and perceptual hashes (image ahash, audio
+    fingerprints) share this one banded self-join.
 
     Candidate generation: ``max_hamming + 1`` bands covering ``bits``
     (pigeonhole: ≤ d differing bits cannot touch all d+1 bands, so some
-    band is EXACTLY equal); exact refine via ``bit_count(xor)``.  Scale
-    shape: the band join shuffles (id, hash, band, key) longs only — one
-    self-join keyed on small band keys, skew-safe under AQE; no text or
-    binary payload ever moves.  ``max_bucket`` drops hot (band, key)
-    buckets before the self-join — perceptual hashes have the same
-    template-corpus exposure as text LSH (re-exported thumbnails of one
-    image collapse onto one key); see ``_drop_hot_buckets``.
-    Output: (id_a, id_b, hamming).
+    band is EXACTLY equal), run by ``_banded_pairs`` with the hash itself
+    as the carry; exact refine via ``bit_count(xor)``.  Only (id, band,
+    key, hash) longs shuffle; no text or binary payload ever moves.
+    ``max_bucket`` drops hot (band, key) buckets before the self-join —
+    perceptual hashes have the same template-corpus exposure as text LSH
+    (re-exported thumbnails of one image collapse onto one key); see
+    ``_drop_hot_buckets``.  Output: (id_a, id_b, hamming).
     """
     if not 0 < bits <= 63:
         raise ValueError(f"bits must be in 1..63, got {bits}")
@@ -784,45 +697,12 @@ def hamming_pairs(
     sig = df.select(
         F.col(id_col).alias("__id"), F.col(hash_col).cast("long").alias("__h")
     ).transform(_barrier)  # hash lineage (often a UDF chain) computes once
-    banded = sig.select(
-        "__id",
-        "__h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        _band_key(F.col("__h"), i).alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("__id", "__h", "b.band", "b.key")
-
-    if max_bucket is not None:
-        banded = _drop_hot_buckets(banded, max_bucket, "hamming_pairs")
-
-    # first-match dedup (see minhash_lsh_pairs): pair emitted only in its
-    # lowest matching band — codegen filter, no pair-dedup shuffle
-    first_match = F.lit(True)
-    for bi in range(n_bands - 1):
-        first_match = first_match & (
-            (F.col("band") <= bi)
-            | (_band_key(F.col("a.__h"), bi) != _band_key(F.col("b.__h"), bi))
-        )
-
-    a, b = banded.alias("a"), banded.alias("b")
     return (
-        a.join(b, on=["band", "key"])
-        .where(F.col("a.__id") < F.col("b.__id"))
-        .where(first_match)
+        _banded_pairs(sig, "__h", n_bands, _band_key, max_bucket, "hamming_pairs")
         .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.bit_count(F.col("a.__h").bitwiseXOR(F.col("b.__h"))).alias(
-                "hamming"
-            ),
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("c_a").bitwiseXOR(F.col("c_b"))).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
     )
@@ -832,29 +712,14 @@ def hamming_pairs(
 # exact n-gram Jaccard (the verifier; SQL-expressible)
 # ---------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.2, n: int = 3
-) -> DataFrame:
-    """Exact distinct-n-gram Jaccard for every pair sharing ≥ 1 shingle.
+def _shingle_h60(n: int):
+    """Pandas kernel: text → h60 of each distinct token n-gram — the
+    ``shingles_udf`` tokenization followed by ``h60_py`` (a test pins the
+    equivalence).  h60_py is inlined (hashlib only): the kernel must
+    survive cloudpickle to executors that don't have the package on
+    sys.path (the same rule as minhash_features_udf)."""
 
-    explode → equi-join on the shingle → per-pair intersection count; union
-    by inclusion-exclusion.  The per-doc distinct-shingle count rides along
-    the exploded rows (it is known BEFORE the explode), so no separate
-    sizes aggregation or lookup joins exist — one self-join, one groupBy.
-    Shuffles on shingle strings — the candidate-generator LSH variants
-    exist precisely to avoid this at 100TB, but as the exact verifier it is
-    the ground truth (and the DuckDB oracle)."""
-    # r12: the self-join keys on the shingle's 60-bit md5 hash (h60, the
-    # same reduction t35 and the LSH verify tier key on) instead of the
-    # raw n-gram string — 8-byte longs through the exchange and a long
-    # equi-join in place of ~25-byte string keys and string comparisons.
-    # Two distinct shingles colliding would need an h60 collision
-    # (~2^-60) — the documented cross-tier convention; the DuckDB oracle
-    # stays the string-exact formulation and hash-matches at both SFs.
-    def _shingle_h60(text: pd.Series) -> pd.Series:
-        # h60_py inlined (hashlib only): the kernel must survive
-        # cloudpickle to executors that don't have the package on
-        # sys.path (the same rule as minhash_features_udf)
+    def _kernel(text: pd.Series) -> pd.Series:
         import hashlib
 
         out = []
@@ -877,7 +742,29 @@ def ngram_jaccard_pairs(
                 )
         return pd.Series(out)
 
-    shingle_h60_udf = F.pandas_udf(_shingle_h60, "array<bigint>")
+    return _kernel
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.2, n: int = 3
+) -> DataFrame:
+    """Exact distinct-n-gram Jaccard for every pair sharing ≥ 1 shingle.
+
+    explode → equi-join on the shingle → per-pair intersection count; union
+    by inclusion-exclusion.  The per-doc distinct-shingle count rides along
+    the exploded rows (it is known BEFORE the explode), so no separate
+    sizes aggregation or lookup joins exist — one self-join, one groupBy.
+    Shuffles on shingle strings — the candidate-generator LSH variants
+    exist precisely to avoid this at 100TB, but as the exact verifier it is
+    the ground truth (and the DuckDB oracle)."""
+    # r12: the self-join keys on the shingle's 60-bit md5 hash (h60, the
+    # same reduction t35 and the LSH verify tier key on) instead of the
+    # raw n-gram string — 8-byte longs through the exchange and a long
+    # equi-join in place of ~25-byte string keys and string comparisons.
+    # Two distinct shingles colliding would need an h60 collision
+    # (~2^-60) — the documented cross-tier convention; the DuckDB oracle
+    # stays the string-exact formulation and hash-matches at both SFs.
+    shingle_h60_udf = F.pandas_udf(_shingle_h60(n), "array<bigint>")
     sh = (
         _parallelize(df).select(
             F.col(id_col).alias("__id"),
@@ -922,7 +809,7 @@ def neardup_pairs_lsh_verified(
     """Exact-Jaccard near-dup pairs with LSH candidate generation — the
     100 TB shape of ``ngram_jaccard_pairs``: banded MinHash proposes
     candidate pairs (every band collision, no estimate filter — shuffles
-    only band keys and k-long signatures), and the exact distinct-shingle
+    only ids and per-band keys), and the exact distinct-shingle
     Jaccard is then computed ONLY for candidate pairs, as
     ``size(array_intersect)`` over per-doc h60 shingle-hash arrays carried
     by two id-keyed joins.  NO shingle string is ever a shuffle key: the

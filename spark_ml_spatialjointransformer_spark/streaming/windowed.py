@@ -975,93 +975,6 @@ def click_attribution_stream(
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas: the Spark 4 stateful-processor API
-# ---------------------------------------------------------------------------
-
-
-class _UserTotalsProcessor:
-    """Stateful processor for ``user_totals_tws_stream`` — defined at
-    module top level (with lazy base-class import) so cloudpickle ships it
-    by value to executors; the kernel is byte-identical arithmetic to the
-    legacy `_update_user_state` so both APIs must produce the same state."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("totals", "n LONG, total_e4 LONG")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import numpy as np
-
-        n, total_e4 = (
-            self._state.get() if self._state.exists() else (0, 0)
-        )
-        for pdf in rows:
-            n += len(pdf)
-            v = pdf["value"].to_numpy(dtype="float64")
-            total_e4 += int(
-                np.floor(v * 10000.0 + 0.5).astype("int64").sum()
-            )
-        self._state.update((n, total_e4))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value_e4": [total_e4],
-            }
-        )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def user_totals_tws_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-stateful API (typed named state slots, timers, TTL,
-    initial-state hydration) that supersedes ``applyInPandasWithState``'s
-    single opaque tuple.  Same integer kernel as the legacy-API e3
-    operator, so the two APIs are held to the SAME batch oracle — an
-    engine-level parity check between Spark's old and new state stores.
-    State is one (long, long) ValueState per user: RocksDB-ready,
-    O(users), trigger-order independent.
-
-    DEPENDENCY GATE: the v2 API's Python state client speaks protobuf
-    RPC to the JVM state server; without ``google.protobuf`` installed
-    the streaming runner crashes at init, so refuse loudly up front (the
-    legacy-API `sessionized_counts_stream` covers the same semantics
-    everywhere protobuf is unavailable — e3 holds it to the oracle)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf (the v2 "
-            "state client is protobuf-RPC based); install protobuf or use "
-            "sessionized_counts_stream (applyInPandasWithState) — same "
-            "semantics, same oracle"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    ensure_udf_portability()
-    proc = type(
-        "UserTotalsProcessor", (StatefulProcessor,), dict(_UserTotalsProcessor.__dict__)
-    )()
-    return (
-        events_stream(spark, sf_dir)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType="user_id LONG, n_events LONG, total_value_e4 LONG",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def latest_state_upsert_stream(spark: SparkSession, events_path: str) -> DataFrame:
     """foreachBatch idempotent MERGE sink: maintain a "latest event per
     user" state table across micro-batches — the streaming-upsert /
@@ -1212,7 +1125,7 @@ def _throttle_first_n(
     OLDER window would restart that window's quota — the documented
     caveat class of e20's no-watermark note (the file-replay harness
     keeps each user's rows inside one trigger; production keys a TTL'd
-    map state by window via transformWithState, README's gated tier)."""
+    map state by window via transformWithState)."""
     win_last, n_last = state.get if state.exists else (-1, 0)
     chunks = [pdf for pdf in batches if len(pdf)]
     if chunks:

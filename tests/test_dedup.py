@@ -91,27 +91,24 @@ def test_minhash_lsh_pairs_subset_of_similar(spark, docs_pd):
         assert ja & jb, "estimated-similar pair shares no shingle"
 
 
-def test_minhash_lsh_pairs_lean_matches_carried_shape(spark):
-    """The r12 lean uncapped band join (ids-only banded rows, pair
-    distinct, sizes/signatures attached by id-join) must emit exactly the
-    set the carried-signature first-match shape emits — pin it against
-    the capped path with a cap far above every bucket size, which still
-    runs the carried-signature implementation, on each supported output
-    flavor (estimate-filtered and candidate-generation with sizes)."""
+def test_minhash_lsh_pairs_cap_above_buckets_is_uncapped(spark):
+    """The capped band join with a cap far above every bucket size drops
+    nothing, so it must emit exactly the uncapped set — on each supported
+    output flavor (estimate-filtered and candidate-generation with sizes)
+    — and the first-match filter must emit every pair once."""
     docs = load_table(spark, SF, "documents")
     for kwargs in (
         {"threshold": 0.2},
         {"threshold": 0.0, "with_sizes": True},
     ):
-        lean = dedup.minhash_lsh_pairs(
+        uncapped = dedup.minhash_lsh_pairs(
             docs, "doc_id", "text", k=32, bands=16, **kwargs
         ).collect()
-        carried = dedup.minhash_lsh_pairs(
+        capped = dedup.minhash_lsh_pairs(
             docs, "doc_id", "text", k=32, bands=16, max_bucket=10**9, **kwargs
         ).collect()
-        lean_rows = sorted(map(tuple, lean))
-        assert lean_rows == sorted(map(tuple, carried)), kwargs
-        assert len({(r[0], r[1]) for r in lean}) == len(lean), (
+        assert sorted(map(tuple, uncapped)) == sorted(map(tuple, capped)), kwargs
+        assert len({(r[0], r[1]) for r in uncapped}) == len(uncapped), (
             "a candidate pair was emitted more than once"
         )
 
@@ -131,13 +128,29 @@ def test_simhash_pairs_hamming_correct(spark, docs_pd):
             h = bin(sims[a] ^ sims[b]).count("1")
             if h <= 8:
                 expected[(a, b)] = h
-    # pigeonhole guarantee only holds for <= 3 with 4 bands; for 8 we check
-    # soundness (reported values correct) and that all <=3 pairs are found
-    for k, v in found.items():
-        assert expected.get(k) == v
-    for k, v in expected.items():
-        if v <= 3:
-            assert k in found
+    assert found == expected
+
+
+def test_shingle_h60_matches_shingles_then_h60(spark, docs_pd):
+    """The exact tier's fused shingle-hash kernel equals ``shingles_udf``
+    followed by ``h60_py`` — the same tokenization contract, including
+    docs shorter than n and non-string docs (both yield no shingles)."""
+    import pandas as pd
+
+    texts = list(docs_pd.text[:40]) + [
+        "",
+        "one",
+        "two words",
+        "Three Words Here",
+        "a  b c",
+        None,
+        42,
+    ]
+    for n in (1, 3):
+        got = dedup._shingle_h60(n)(pd.Series(texts, dtype=object))
+        want = dedup.shingles_udf(n).func(pd.Series(texts, dtype=object))
+        for g, w in zip(got, want):
+            assert sorted(g) == sorted(h60_py(s) for s in w)
 
 
 def test_ngram_jaccard_exact(spark, docs_pd):

@@ -572,46 +572,6 @@ class TestOuterJoinStream:
         assert got == [(1, 2), (1, 3), (4, None), (6, None)]
 
 
-class TestTransformWithState:
-    """Spark 4's v2 stateful API, held to the same oracle as the legacy
-    applyInPandasWithState operator — skipped where google.protobuf (the
-    v2 state client's RPC layer) is unavailable; the import gate itself
-    is pinned unconditionally."""
-
-    def test_matches_legacy_api_or_gates_loudly(self, spark):
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-            have_protobuf = True
-        except ImportError:
-            have_protobuf = False
-        if not have_protobuf:
-            with pytest.raises(ImportError, match="protobuf"):
-                windowed.user_totals_tws_stream(
-                    spark, f"{SF}/events.parquet"
-                )
-            return
-        out = windowed.run_to_memory(
-            windowed.user_totals_tws_stream(spark, f"{SF}/events.parquet"),
-            "t_tws",
-            output_mode="update",
-        )
-        legacy = windowed.run_to_memory(
-            windowed.sessionized_counts_stream(spark, f"{SF}/events.parquet"),
-            "t_tws_legacy",
-            output_mode="update",
-        )
-
-        def finals(df):
-            pdf = df.toPandas()
-            pdf = pdf.sort_values("n_events").groupby("user_id").last()
-            return {
-                int(i): (int(r.n_events), int(r.total_value_e4))
-                for i, r in pdf.iterrows()
-            }
-
-        assert finals(out) == finals(legacy)
-
-
 def test_audio_frame_energy_known_waveform(spark):
     """Framing against a hand-computable waveform: constant amplitude A
     over n samples framed at f gives ceil(n/f) frames, each full frame

@@ -97,15 +97,14 @@ BUDGETS = {
     "t10_bpe_token_count": (0, 0),
     "t2_dedup_exact": (1, 0),
     "t5_ngram_jaccard": (2, 2),
-    # r12 lean band join: the ONE exchange is the (id_a, id_b) pair
-    # distinct — two longs per candidate — traded for dropping the k-long
-    # signature carry from the banded self-join (its dominant exchange)
-    "t6_minhash_lsh_pairs": (2, 1),
+    # one banded self-join with the first-match filter (no pair distinct);
+    # the band self-join and the signature attach joins broadcast at this
+    # size
+    "t6_minhash_lsh_pairs": (1, 1),
     "t7_simhash_pairs": (1, 1),
     "t8_winnow_fingerprints": (2, 1),
-    # r12: +1 for the lean band join's pair distinct (see t6)
-    "t9_dedup_keeper": (4, 1),
-    "t11_dedup_closure": (14, 1),
+    "t9_dedup_keeper": (3, 1),
+    "t11_dedup_closure": (13, 1),
     "t12_stratified_sample": (1, 1),
     "t13_sequence_packing": (4, 0),
     # r11: was (0, 1) — the 0 was an artifact of the localCheckpoint
@@ -239,9 +238,9 @@ BUDGETS = {
     "g4_kcore": (8, 2),
     # pure per-row explode of JVM window slices — no shuffle, no Python
     "t39_sliding_chunks": (0, 0),
-    # r12 lean band join: pair distinct + the ≤9-cell agg; the doc_id
-    # split joins broadcast (was 6 with the carried-signature shape)
-    "p7_split_leakage": (3, 1),
+    # first-match band join (no pair distinct) + the ≤9-cell agg; the
+    # doc_id split joins broadcast
+    "p7_split_leakage": (2, 1),
     # window and (nation, decile) rollup share one nation-keyed exchange
     "a16_balance_deciles": (1, 0),
     # synth → transcode → resize → ahash Arrow chain over a no-shuffle
@@ -483,7 +482,7 @@ BUDGETS = {
     # t11's closure machinery runs as checkpointed jobs; the final plan
     # is the doc_id-keyed quality join + ONE cluster-keyed election
     # window (ordered-window first(), no ranked/elected self-join)
-    "t55_quality_keeper": (15, 1),
+    "t55_quality_keeper": (14, 1),
     # broadcast dim join + ONE quasi-key exchange for the count window
     "p14_k_anonymity": (1, 0),
     # bigrams drop to (doc_id, bucket) ints before the bucket-count
@@ -532,8 +531,7 @@ BUDGETS = {
     "p16_label_agreement": (1, 0),
     # t9's LSH+verify machinery runs checkpointed; the flow stage is the
     # two doc_id-keyed source joins + the |sources|^2 matrix rollup
-    # (r12: +1 for the lean band join's pair distinct, see t6)
-    "t59_dup_flow": (5, 1),
+    "t59_dup_flow": (4, 1),
     # ONE cohort-keyed equi join of int triples + the (cohort, relation)
     # map-combinable rollup (<= 7 * |cohorts| output rows)
     "d29_interval_relations": (1, 0),
@@ -546,8 +544,7 @@ BUDGETS = {
     "m14_archive_members": (0, 2),
     # t9's keeper machinery (checkpointed band join) + the doc_id keeper
     # join and ONE source-keyed int-triple rollup
-    # (r12: +1 for the lean band join's pair distinct, see t6)
-    "p17_effective_tokens": (6, 1),
+    "p17_effective_tokens": (5, 1),
     # synth/resize/hash mapInPandas chain runs inside hamming_pairs'
     # checkpointed hash frame; the visible plan is the band self-join
     # (band keys pre-clustered) + the doc-keyed degree rollup
