@@ -22,6 +22,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -120,7 +121,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     src = f"{sf_dir}/events.parquet"
-    rep = "/tmp/sjt_state_measure_5x"
+    scratch = tempfile.mkdtemp(prefix="sjt_state_measure_")
+    rep = os.path.join(scratch, "events_5x")
     build_replica(spark, src, rep)
 
     plans = {"e3_user_totals_stateful": e3_plan, "e20_dynamic_session_stream": e20_plan}
@@ -145,6 +147,7 @@ def main() -> None:
                     }
                 )
             )
+    shutil.rmtree(scratch)
     spark.stop()
 
 

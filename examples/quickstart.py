@@ -9,7 +9,9 @@ deterministic sharded export.  Uses the driver testdata tables.
 """
 
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -75,11 +77,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     topk.show(5)
 
     # -- 4. deterministic sharded export ---------------------------------
-    out = "/tmp/sjt_quickstart_export"
+    scratch = tempfile.mkdtemp(prefix="sjt_quickstart_")
+    out = os.path.join(scratch, "export")
     write_sharded(joined.select("c_custkey", "nearest_supp"), out,
                   "c_custkey", n_shards=4)
     n = spark.read.parquet(out).count()
     print(f"4. sharded export: {n} rows under {out}/__shard=*/")
+    shutil.rmtree(scratch)
 
     # -- 5. distributed k-means over the embedding corpus ----------------
     from spark_ml_spatialjointransformer_spark.operators.similarity import kmeans_int

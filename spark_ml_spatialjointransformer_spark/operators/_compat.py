@@ -33,14 +33,21 @@ state so the persist() fallback path does not accumulate one round of
 blocks per iteration across a long run (on classic localCheckpoint the
 call is a harmless no-op: checkpoint blocks are lifetime-managed by the
 ContextCleaner, not the catalog cache).
+
+``scratch_dir`` is the one place that decides where the engine's own
+files (stream source directories, round-trip exports, bucketed tables)
+live: under the SparkContext's files root, which Spark removes on
+``spark.stop()``, so concurrent sessions on one host never share a path.
 """
 
 from __future__ import annotations
 
 import logging
+import os
 
+from pyspark import SparkFiles
 from pyspark.errors import AnalysisException, PySparkNotImplementedError
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _log = logging.getLogger(__name__)
 
@@ -121,3 +128,15 @@ def unbarrier(df: DataFrame) -> DataFrame:
     except Exception:  # noqa: BLE001 — cleanup must never kill the loop
         pass
     return df
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """Path ``name`` under ``spark``'s files root
+    (``<spark.local.dir>/spark-<uuid>/userFiles-<uuid>`` on the driver).
+
+    The root belongs to the session's SparkContext: no other session or
+    process writes there, and Spark deletes it on ``spark.stop()``.  The
+    caller creates the path.  Needs the driver's local filesystem, so a
+    Spark Connect session raises here."""
+    spark.sparkContext  # raises on Connect: no driver-local files root
+    return os.path.join(SparkFiles.getRootDirectory(), name)

@@ -36,6 +36,7 @@ from spark_ml_spatialjointransformer_spark.operators.dedup import (
 )
 from spark_ml_spatialjointransformer_spark.operators._compat import (
     barrier as _barrier,
+    scratch_dir,
 )
 from spark_ml_spatialjointransformer_spark.operators.spatial_join import spatial_join
 from spark_ml_spatialjointransformer_spark.plans.config import (

@@ -14,6 +14,7 @@ from spark_ml_spatialjointransformer_spark.queries._core import (
     _sql_query,
     load_events,
     load_table,
+    scratch_dir,
 )
 
 
@@ -413,7 +414,7 @@ def a9_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             df.write.bucketBy(16, key)
             .sortBy(key)
-            .option("path", f"/tmp/{name}")
+            .option("path", scratch_dir(spark, name))
             .mode("overwrite")
             .saveAsTable(name)
         )

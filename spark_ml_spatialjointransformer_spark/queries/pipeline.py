@@ -17,6 +17,7 @@ from spark_ml_spatialjointransformer_spark.queries._core import (
     h60_sql,
     load_events,
     load_table,
+    scratch_dir,
 )
 
 
@@ -384,7 +385,7 @@ def p6_partitioned_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out_dir = f"/tmp/sjt_p6_{tag}"
+    out_dir = scratch_dir(spark, f"sjt_p6_{tag}")
     ev = load_events(spark, sf_dir).select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),

@@ -26,6 +26,7 @@ from spark_ml_spatialjointransformer_spark.queries._core import (
     load_events,
     load_table,
     nations_rect,
+    scratch_dir,
     spatial_join,
     suppliers_geo,
     suppliers_rect,
@@ -1005,7 +1006,7 @@ def j24_bucketed_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             df.write.bucketBy(8, "band")
             .sortBy("band")
-            .option("path", f"/tmp/{name}")
+            .option("path", scratch_dir(spark, name))
             .mode("overwrite")
             .saveAsTable(name)
         )

@@ -18,6 +18,7 @@ from spark_ml_spatialjointransformer_spark.queries._core import (
     h60_sql,
     load_events,
     load_table,
+    scratch_dir,
 )
 
 #: the Spark twin (identical expression text modulo nothing — Spark parses
@@ -349,7 +350,6 @@ def e10_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the readback aggregation is partition-pruned by the shard column."""
     import hashlib
     import shutil
-    import tempfile
 
     from spark_ml_spatialjointransformer_spark.streaming.ingest import (
         stream_to_sharded,
@@ -358,10 +358,8 @@ def e10_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         events_stream,
     )
 
-    out_dir = (
-        tempfile.gettempdir()
-        + "/sjt_e10_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    out_dir = scratch_dir(
+        spark, "sjt_e10_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     )
     shutil.rmtree(out_dir, ignore_errors=True)
     q = stream_to_sharded(

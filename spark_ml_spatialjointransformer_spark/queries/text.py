@@ -23,6 +23,7 @@ from spark_ml_spatialjointransformer_spark.queries._core import (
     load_events,
     load_table,
     minhash_coefficients,
+    scratch_dir,
 )
 
 
@@ -1481,13 +1482,10 @@ def t36_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no driver data); explicit read schema because schema
     inference is a full extra pass over the data at 100 TB."""
     import hashlib
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    out_dir = (
-        tempfile.gettempdir()
-        + "/sjt_t36_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    out_dir = scratch_dir(
+        spark, "sjt_t36_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     )
     docs.write.mode("overwrite").json(out_dir)
     back = spark.read.schema(docs.schema).json(out_dir)
@@ -2446,13 +2444,10 @@ def t47_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver data; explicit schema because CSV inference is a full extra
     pass (and type-lossy) at 100 TB."""
     import hashlib
-    import tempfile
 
     docs = load_table(spark, sf_dir, "documents")
-    out_dir = (
-        tempfile.gettempdir()
-        + "/sjt_t47_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    out_dir = scratch_dir(
+        spark, "sjt_t47_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     )
     opts = {"header": "true", "quote": '"', "escape": '"'}
     docs.write.mode("overwrite").options(**opts).csv(out_dir)
@@ -2488,13 +2483,10 @@ def t48_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition files, predicate-pushdown-capable on re-read, no
     shuffle."""
     import hashlib
-    import tempfile
 
     ev = load_events(spark, sf_dir)
-    out_dir = (
-        tempfile.gettempdir()
-        + "/sjt_t48_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    out_dir = scratch_dir(
+        spark, "sjt_t48_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
     )
     ev.write.mode("overwrite").orc(out_dir)
     back = spark.read.orc(out_dir)

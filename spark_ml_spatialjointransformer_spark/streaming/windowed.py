@@ -28,16 +28,21 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from spark_ml_spatialjointransformer_spark.functions._serde import (
     ensure_udf_portability,
 )
+from spark_ml_spatialjointransformer_spark.operators._compat import scratch_dir
 
-def _as_stream_dir(path: str) -> str:
+
+def _as_stream_dir(spark: SparkSession, path: str) -> str:
     """The streaming file source requires a directory; wrap a single parquet
-    file in a stable symlink directory (read-only testdata can't be moved)."""
+    file in a symlink directory under the session's scratch root
+    (read-only testdata can't be moved)."""
     import hashlib
     import os
 
     if os.path.isdir(path):
         return path
-    d = f"/tmp/sjt_stream_{hashlib.md5(path.encode()).hexdigest()[:12]}"
+    d = scratch_dir(
+        spark, f"sjt_stream_{hashlib.md5(path.encode()).hexdigest()[:12]}"
+    )
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, os.path.basename(path))
     if not os.path.exists(link):
@@ -59,7 +64,7 @@ def events_stream(
     TimestampType column (UTC-pinned sessions make every cast
     value-preserving), which watermarks/windows require."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    d = _as_stream_dir(sf_dir)
+    d = _as_stream_dir(spark, sf_dir)
     batch_schema = spark.read.parquet(d).schema
     raw = (
         spark.readStream.schema(batch_schema)
@@ -377,10 +382,10 @@ def run_to_memory(
     (emit closed windows / evict join state) when no further data will
     do it — but every append-mode query here routes watermark
     advancement through real data batches by construction
-    (`_flushed_events_dir`'s far-future sentinels; see its docstring:
-    "null emission does not depend on the engine scheduling a trailing
-    no-data micro-batch"), and update/complete-mode queries emit on data
-    batches regardless.  The trailing no-data batch still paid the full
+    (`_flushed_events_dir`'s ``n_data + 1`` far-future sentinels span
+    two post-data triggers: the first advances the watermark, the second
+    applies it), and update/complete-mode queries emit on data batches
+    regardless.  The trailing no-data batch still paid the full
     per-batch price — incremental planning plus a state-store commit per
     (operator, partition): the r11 profile measured it at 1.08 s of
     e6's 4.4 s and 0.6-0.8 s of e15/e17 (`plans/r11/` notes).  On an
@@ -470,7 +475,7 @@ def kmv_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ml_spatialjointransformer_spark.functions.hashing import h60_col
 
     ensure_udf_portability()
-    d = _as_stream_dir(f"{sf_dir}/documents.parquet")
+    d = _as_stream_dir(spark, f"{sf_dir}/documents.parquet")
     batch_schema = spark.read.parquet(d).schema
     docs = (
         spark.readStream.schema(batch_schema)
@@ -581,7 +586,7 @@ def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade; the fixture-scale exact map is what makes the batch oracle
     checkable."""
     ensure_udf_portability()
-    d = _as_stream_dir(f"{sf_dir}/documents.parquet")
+    d = _as_stream_dir(spark, f"{sf_dir}/documents.parquet")
     batch_schema = spark.read.parquet(d).schema
     docs = (
         spark.readStream.schema(batch_schema)
@@ -738,57 +743,26 @@ def asof_enrich_stream(
 # ---------------------------------------------------------------------------
 
 
-#: (path, data-file signature) -> (flush dir, n data files).  The build
-#: runs a max-ts SCAN JOB over the source parquet; within one process the
-#: source is immutable (the signature carries every file's name, size and
-#: mtime, so regenerated testdata misses the cache and rebuilds), so the
-#: repeated stream setups of e15/e17 skip straight to the prepared dir.
-_FLUSH_DIR_CACHE: "dict[tuple, tuple[str, int]]" = {}
-
-
 def _src_data_signature(path: str) -> tuple:
     import os
 
     if os.path.isdir(path):
-        src_dir = path
-        names = sorted(
-            f
+        files = sorted(
+            os.path.join(path, f)
             for f in os.listdir(path)
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
     else:
-        src_dir = os.path.dirname(path)
-        names = [os.path.basename(path)]
+        files = [path]
     return tuple(
-        (n, st.st_size, st.st_mtime)
-        for n in names
-        for st in (os.stat(os.path.join(src_dir, n)),)
+        (f, st.st_size, st.st_mtime) for f in files for st in (os.stat(f),)
     )
 
 
-def _flush_dir_intact(d: str, n_data: int) -> bool:
-    """True iff a cached flush dir still holds both watermark-flush
-    sentinels and ``n_data`` resolvable data symlinks."""
-    import os
-
-    if not os.path.isdir(d):
-        return False
-    flush, data = 0, 0
-    for f in os.listdir(d):
-        full = os.path.join(d, f)
-        if f.startswith("flush") and f.endswith(".parquet"):
-            flush += 1
-        elif f.endswith(".parquet"):
-            if not os.path.exists(full):  # dangling symlink
-                return False
-            data += 1
-    return flush == n_data + 1 and data == n_data
-
-
 def _flushed_events_dir(spark: SparkSession, path: str) -> "tuple[str, int]":
-    """Build (idempotently) a stream directory holding the events parquet
-    plus ``n_data + 1`` tiny WATERMARK-FLUSH files; return (dir, number of
-    data files).
+    """Build (once per session and source generation) a stream directory
+    holding the events parquet plus ``n_data + 1`` tiny WATERMARK-FLUSH
+    files; return (dir, number of data files).
 
     An outer stream-stream join only emits its NULL rows when the
     watermark passes a buffered row's last-possible-match time — on an
@@ -816,80 +790,34 @@ def _flushed_events_dir(spark: SparkSession, path: str) -> "tuple[str, int]":
     several triggers would late-drop whichever slices batch after the
     watermark first advances.
 
-    Files are keyed by the data's max timestamp.  Stale flush files from
-    a PREVIOUS testdata generation are NOT harmless: they keep their old
-    creation mtimes, which sort BEFORE freshly regenerated data files, so
-    the first trigger would consume the stale far-future sentinels, push
-    the watermark past the real data, and silently late-drop everything.
-    On entry this function therefore deletes any flush file whose tag
-    doesn't match the current max-ts tag, drops dangling symlinks left by
-    renamed part files, and re-applies utime to surviving flush files so
-    they always sort strictly after every current data file."""
+    The directory lives in the session's scratch root and is named by the
+    source path and its data-file signature (every file's name, size and
+    mtime): a regenerated source gets a fresh directory.  It is built
+    under a temporary name and renamed into place, so an existing one is
+    complete, and repeat calls (e15/e17) skip the max-ts scan job."""
     import hashlib
     import os
     import shutil
+    import tempfile
 
-    cache_key = (path, _src_data_signature(path))
-    hit = _FLUSH_DIR_CACHE.get(cache_key)
-    if hit is not None and _flush_dir_intact(*hit):
-        # cheap revalidation on every hit: the dir lives in /tmp under an
-        # md5(path) name, so a tmp cleaner or a concurrent process can
-        # remove sentinels/symlinks mid-session — running a stream on a
-        # dir missing its flush files would silently drop the outer-join
-        # NULL rows (r8 ADVICE).  Any damage falls through to the full
-        # rebuild below, which is idempotent.
-        return hit
+    sig = _src_data_signature(path)
+    key = hashlib.md5(repr((path, sig)).encode()).hexdigest()[:16]
+    d = scratch_dir(spark, f"sjt_stream_oj_{key}")
+    if os.path.isdir(d):
+        return d, len(sig)
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     base = spark.read.parquet(path)
     schema = base.schema
     ts_long = isinstance(schema["ts"].dataType, T.LongType)
     mx = base.agg(F.max("ts")).first()[0]
-    d = f"/tmp/sjt_stream_oj_{hashlib.md5(path.encode()).hexdigest()[:12]}"
-    os.makedirs(d, exist_ok=True)
-    tag = hashlib.md5(str(mx).encode()).hexdigest()[:8]
-    for f in os.listdir(d):
-        full = os.path.join(d, f)
-        if f.startswith("flush") and f"_{tag}.parquet" not in f:
-            os.remove(full)  # stale sentinel from a prior data generation
-        elif os.path.islink(full) and not os.path.exists(full):
-            os.remove(full)  # dangling symlink: part file was renamed
-    if os.path.isdir(path):
-        srcs = sorted(
-            f
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    else:
-        srcs = [os.path.basename(path)]
-    src_dir = path if os.path.isdir(path) else os.path.dirname(path)
-    for f in srcs:
-        link = os.path.join(d, f)
-        if not os.path.exists(link):
-            os.symlink(os.path.join(src_dir, f), link)
-    data_mtime = max(
-        os.stat(os.path.join(src_dir, f)).st_mtime for f in srcs
-    )
+    build = tempfile.mkdtemp(prefix=".build_", dir=os.path.dirname(d))
+    for f, _, _ in sig:
+        os.symlink(f, os.path.join(build, os.path.basename(f)))
+    data_mtime = max(mtime for _, _, mtime in sig)
     day_ns = 86_400 * 10**9
-    n_flush = len(srcs) + 1
-    # drop surplus same-tag sentinels from a build with more data files
-    # (they would only add harmless extra triggers, but keep the dir in
-    # the exact shape _flush_dir_intact revalidates)
-    for f in os.listdir(d):
-        if f.startswith("flush") and f"_{tag}.parquet" in f:
-            try:
-                idx = int(f[len("flush"):].split("_", 1)[0])
-            except ValueError:
-                continue
-            if idx > n_flush:
-                os.remove(os.path.join(d, f))
-    for i in range(1, n_flush + 1):
-        dest = os.path.join(d, f"flush{i}_{tag}.parquet")
-        if os.path.exists(dest):
-            # data may have been rewritten (newer mtimes) since this
-            # sentinel was created — re-pin it after every data file
-            os.utime(dest, (data_mtime + 10 * i, data_mtime + 10 * i))
-            continue
+    for i in range(1, len(sig) + 2):
+        dest = os.path.join(build, f"flush{i}.parquet")
         if ts_long:  # legacy nanos-as-long encoding
             fts = int(mx) + i * day_ns
         else:
@@ -906,22 +834,20 @@ def _flushed_events_dir(spark: SparkSession, path: str) -> "tuple[str, int]":
             }
             rows.append(tuple(vals.get(f.name) for f in schema.fields))
         tmp = dest + ".tmp"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
         part = next(
             f for f in os.listdir(tmp) if f.endswith(".parquet")
         )
         os.replace(os.path.join(tmp, part), dest)
-        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp)
         # deterministic processing order: the file source batches by
         # mtime, so pin each flush file strictly AFTER every data file
         # (resolved through the symlinks) — flush-before-data would replay
         # the data against the sentinel-advanced watermark and late-drop
         # every real row
         os.utime(dest, (data_mtime + 10 * i, data_mtime + 10 * i))
-    _FLUSH_DIR_CACHE[cache_key] = (d, len(srcs))
-    return d, len(srcs)
+    os.rename(build, d)
+    return d, len(sig)
 
 
 def click_attribution_stream(
@@ -999,7 +925,9 @@ def latest_state_upsert_stream(spark: SparkSession, events_path: str) -> DataFra
     import hashlib
     import shutil
 
-    base = "/tmp/sjt_upsert_" + hashlib.md5(events_path.encode()).hexdigest()[:12]
+    base = scratch_dir(
+        spark, "sjt_upsert_" + hashlib.md5(events_path.encode()).hexdigest()[:12]
+    )
     shutil.rmtree(base, ignore_errors=True)
 
     cols = ["user_id", "ts_us", "event_id", "event_type", "value_e4"]
@@ -1064,7 +992,7 @@ def bloom_decontaminated_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_udf_portability()
-    d = _as_stream_dir(sf_dir)
+    d = _as_stream_dir(spark, sf_dir)
     bad = (
         spark.read.parquet(d)
         .select("user_id")

@@ -124,3 +124,35 @@ class TestBroadcastParamValidation:
         )
         df = spark.createDataFrame([(0, 1.0, 3.0)], ["id", "lon", "lat"])
         assert t.transform(df).count() == 1
+
+
+class TestScratchDir:
+    """The engine's own files live under the session's files root, which
+    Spark deletes on stop(): concurrent sessions never share a path."""
+
+    def test_under_session_files_root(self, spark):
+        import os
+
+        from pyspark import SparkFiles
+
+        from spark_ml_spatialjointransformer_spark.operators._compat import (
+            scratch_dir,
+        )
+
+        root = SparkFiles.getRootDirectory()
+        a, b = scratch_dir(spark, "a"), scratch_dir(spark, "b")
+        assert os.path.dirname(a) == root == os.path.dirname(b)
+        assert a != b
+
+    def test_package_has_no_fixed_tmp_paths(self):
+        import pathlib
+
+        import spark_ml_spatialjointransformer_spark as pkg
+
+        hits = [
+            f"{p}: {needle}"
+            for p in pathlib.Path(pkg.__file__).parent.rglob("*.py")
+            for needle in ("/tmp/", "gettempdir")
+            if needle in p.read_text()
+        ]
+        assert hits == []

@@ -542,6 +542,90 @@ class TestOuterJoinStream:
             os.stat(os.path.join(d, f)).st_mtime > data_m for f in flushes
         )
 
+    def _assert_flush_dir(self, spark, d, n_data):
+        """The flush-dir contract: n_data data links that resolve, n_data
+        + 1 sentinels of the CURRENT data generation (timestamps after
+        every data row), each sorting after every data file by mtime (the
+        file source batches by mtime; flush-first would late-drop the
+        whole replay)."""
+        import os
+
+        flush = [f for f in os.listdir(d) if f.startswith("flush")]
+        data = [f for f in os.listdir(d) if not f.startswith("flush")]
+        assert len(flush) == n_data + 1
+        assert len(data) == n_data
+        assert all(os.path.exists(os.path.join(d, f)) for f in data)
+        fm = min(os.stat(os.path.join(d, f)).st_mtime for f in flush)
+        dm = max(os.stat(os.path.join(d, f)).st_mtime for f in data)
+        assert fm > dm
+        rows = spark.read.parquet(d).select("user_id", "ts").collect()
+        sent = [r.ts for r in rows if r.user_id == -1]
+        real = [r.ts for r in rows if r.user_id != -1]
+        assert len(sent) == 2 * (n_data + 1)
+        assert min(sent) > max(real)
+
+    @pytest.mark.parametrize("n_parts", [1, 2, 3])
+    def test_sentinels_are_n_data_plus_one(self, spark, tmp_path, n_parts):
+        """run_to_memory disables no-data micro-batches, so NULL emission
+        must come from data batches alone: n_data + 1 sentinels always
+        span two post-data triggers under maxFilesPerTrigger = n_data.
+        A repeat call returns the same directory without rebuilding."""
+        import os
+
+        import pyarrow.parquet as pq
+
+        p = os.path.join(str(tmp_path), "events.parquet")
+        self._write_events(p)
+        if n_parts > 1:
+            t = pq.read_table(p)
+            p = os.path.join(str(tmp_path), "events_dir.parquet")
+            os.makedirs(p)
+            step = -(-t.num_rows // n_parts)
+            for i in range(n_parts):
+                pq.write_table(
+                    t.slice(i * step, step),
+                    os.path.join(p, f"part-{i}.parquet"),
+                )
+        d, n_data = windowed._flushed_events_dir(spark, p)
+        assert n_data == n_parts
+        self._assert_flush_dir(spark, d, n_data)
+        assert windowed._flushed_events_dir(spark, p) == (d, n_data)
+
+    @pytest.mark.parametrize("shift_days", [31, 0])
+    def test_regenerated_source_gets_fresh_sentinels(
+        self, spark, tmp_path, shift_days
+    ):
+        """A source regenerated within the session — with newer data
+        (shift_days=31) or the same rows rewritten in place (0) — yields
+        a directory holding only that generation's sentinels, pinned
+        after the new data files."""
+        import os
+
+        import pandas as pd
+
+        path = str(tmp_path / "events")
+
+        def write(days):
+            pdf = pd.DataFrame(
+                {
+                    "event_id": [0, 1],
+                    "ts": pd.to_datetime(["2024-01-01", "2024-01-02"])
+                    + pd.Timedelta(days=days),
+                    "user_id": [1, 2],
+                    "event_type": ["click", "purchase"],
+                }
+            )
+            spark.createDataFrame(pdf).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(path)
+
+        write(0)
+        d1, n1 = windowed._flushed_events_dir(spark, path)
+        self._assert_flush_dir(spark, d1, n1)
+        write(shift_days)
+        d2, n2 = windowed._flushed_events_dir(spark, path)
+        self._assert_flush_dir(spark, d2, n2)
+
     def test_multi_file_dataset_dir(self, spark, tmp_path):
         """A Spark-written dataset DIRECTORY (several row-sliced part
         files) must stream correctly: all parts ingest in ONE trigger —

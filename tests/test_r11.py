@@ -274,82 +274,6 @@ class TestHoltPartitionKernel:
         assert got == want
 
 
-class TestFlushSentinelCount:
-    """r11: run_to_memory disables no-data micro-batches, so NULL emission
-    in the flushed-dir streams must come from DATA batches alone — the
-    sentinel count must be n_data + 1 so the flush files always span at
-    least two post-data triggers under maxFilesPerTrigger = n_data."""
-
-    def _make_events(self, spark, path, n_parts):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pa.table(
-            {
-                "event_id": pa.array([1, 2, 3, 4], pa.int64()),
-                "ts": pa.array(
-                    [1_700_000_000_000_000 + i * 60_000_000 for i in range(4)],
-                    pa.timestamp("us"),
-                ),
-                "user_id": pa.array([10, 10, 11, 11], pa.int64()),
-                "event_type": pa.array(
-                    ["click", "purchase", "click", "purchase"]
-                ),
-            }
-        )
-        if n_parts == 1:
-            pq.write_table(tbl, path)
-        else:
-            os.makedirs(path)
-            step = -(-4 // n_parts)
-            for i in range(n_parts):
-                pq.write_table(
-                    tbl.slice(i * step, step),
-                    os.path.join(path, f"part-{i}.parquet"),
-                )
-
-    @pytest.mark.parametrize("n_parts", [1, 2, 3])
-    def test_sentinels_are_n_data_plus_one(self, spark, tmp_path, n_parts):
-        import os
-
-        from spark_ml_spatialjointransformer_spark.streaming.windowed import (
-            _flushed_events_dir,
-        )
-
-        suffix = "events.parquet" if n_parts == 1 else "events_dir.parquet"
-        src = os.path.join(str(tmp_path), suffix)
-        self._make_events(spark, src, n_parts)
-        d, n_data = _flushed_events_dir(spark, src)
-        assert n_data == n_parts
-        flush = sorted(
-            f for f in os.listdir(d) if f.startswith("flush")
-        )
-        data = [
-            f
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith("flush")
-        ]
-        assert len(flush) == n_data + 1
-        assert len(data) == n_data
-        # idempotent revalidation keeps the same shape
-        d2, n2 = _flushed_events_dir(spark, src)
-        assert (d2, n2) == (d, n_data)
-        assert (
-            len([f for f in os.listdir(d) if f.startswith("flush")])
-            == n_data + 1
-        )
-        # every flush file sorts after every data file by mtime (batching
-        # order) — the property the null-emission schedule depends on
-        fm = min(os.stat(os.path.join(d, f)).st_mtime for f in flush)
-        dm = max(
-            os.stat(os.path.realpath(os.path.join(d, f))).st_mtime
-            for f in data
-        )
-        assert fm > dm
-
-
 class TestCdcChunkKernel:
     """r11: the fused CDC chunk kernel must reproduce the former
     higher-order-function formulation bit-for-bit — same boundaries,

@@ -1,7 +1,7 @@
-"""Round-7 regression tests pinning the five r6 ADVICE.md fixes:
+"""Round-7 regression tests pinning r6 ADVICE.md fixes 2-5 (fix 1, the
+stream flush sentinels of streaming/windowed.py _flushed_events_dir, is
+pinned in tests/test_multimodal_streaming.py TestOuterJoinStream):
 
-1. stale stream flush-sentinels are purged/re-pinned on entry
-   (streaming/windowed.py _flushed_events_dir);
 2. triangles_per_node fails loud on ids that would collide the packed
    (degree, id) orientation key (operators/graph.py);
 3. frame_byte_sums walks any netpbm-legal header, not just the byte
@@ -12,10 +12,7 @@
    (operators/multimodal.py).
 """
 
-import os
-
 import numpy as np
-import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -130,99 +127,6 @@ class TestPoisonRowMode:
         assert out["afp"].isna().all()
         with pytest.raises(Exception, match="equal windows"):
             multimodal.audio_fingerprint(df, "wav", n_windows=4).collect()
-
-
-class TestFlushSentinelStaleness:
-    def test_stale_sentinels_purged_and_repinned(self, spark, tmp_path):
-        from spark_ml_spatialjointransformer_spark.streaming.windowed import (
-            _flushed_events_dir,
-        )
-
-        path = str(tmp_path / "events")
-
-        def write(ts_vals):
-            pdf = pd.DataFrame(
-                {
-                    "event_id": range(len(ts_vals)),
-                    "ts": pd.to_datetime(ts_vals),
-                    "user_id": [1] * len(ts_vals),
-                    "event_type": ["click"] * len(ts_vals),
-                }
-            )
-            spark.createDataFrame(pdf).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(path)
-
-        write(["2024-01-01 00:00:00", "2024-01-01 01:00:00"])
-        d1, n1 = _flushed_events_dir(spark, path)
-        tag1 = {
-            f for f in os.listdir(d1) if f.startswith("flush")
-        }
-        assert len(tag1) == 2
-
-        # regenerate the data with a NEWER max ts (new tag) and newer
-        # file mtimes — the old sentinels keep their old mtimes and would
-        # sort FIRST, advancing the watermark past the real data
-        write(["2024-02-01 00:00:00", "2024-02-01 01:00:00"])
-        d2, n2 = _flushed_events_dir(spark, path)
-        assert d2 == d1
-        flushes = {f for f in os.listdir(d2) if f.startswith("flush")}
-        # stale tag purged, fresh tag present
-        assert flushes.isdisjoint(tag1)
-        assert len(flushes) == 2
-        # no dangling symlinks survive the regeneration
-        for f in os.listdir(d2):
-            assert os.path.exists(os.path.join(d2, f)), f
-        # every sentinel sorts strictly after every data file by mtime
-        data_mtimes = [
-            os.stat(os.path.join(d2, f)).st_mtime
-            for f in os.listdir(d2)
-            if not f.startswith("flush")
-        ]
-        flush_mtimes = [
-            os.stat(os.path.join(d2, f)).st_mtime for f in flushes
-        ]
-        assert min(flush_mtimes) > max(data_mtimes)
-
-    def test_same_data_repin_after_rewrite_in_place(self, spark, tmp_path):
-        """Rewriting IDENTICAL data (same max ts, same tag) must still
-        re-pin surviving sentinels after the new data mtimes."""
-        from spark_ml_spatialjointransformer_spark.streaming.windowed import (
-            _flushed_events_dir,
-        )
-
-        path = str(tmp_path / "events")
-        pdf = pd.DataFrame(
-            {
-                "event_id": [0, 1],
-                "ts": pd.to_datetime(["2024-01-01", "2024-01-02"]),
-                "user_id": [1, 2],
-                "event_type": ["click", "purchase"],
-            }
-        )
-
-        def write():
-            spark.createDataFrame(pdf).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(path)
-
-        write()
-        d1, _ = _flushed_events_dir(spark, path)
-        write()  # same content, fresh mtimes
-        d2, _ = _flushed_events_dir(spark, path)
-        assert d2 == d1
-        data_mtimes = [
-            os.stat(os.path.join(d2, f)).st_mtime
-            for f in os.listdir(d2)
-            if not f.startswith("flush") and os.path.exists(os.path.join(d2, f))
-        ]
-        flush_mtimes = [
-            os.stat(os.path.join(d2, f)).st_mtime
-            for f in os.listdir(d2)
-            if f.startswith("flush")
-        ]
-        assert data_mtimes and flush_mtimes
-        assert min(flush_mtimes) > max(data_mtimes)
 
 
 class TestGridDbscanFallback:

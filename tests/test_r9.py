@@ -1,8 +1,7 @@
 """Round-9 regression tests.
 
 Covers the r8 ADVICE fixes (f3/f5 numPartitions contract moved out of the
-production path, v17 sim quantization, flush-dir cache revalidation) and
-the r9 additions.
+production path, v17 sim quantization) and the r9 additions.
 """
 
 import pytest
@@ -27,44 +26,6 @@ class TestTransformerNumPartitionsContract:
     def test_output_partitions(self, spark, qname, want):
         out = Q.QUERIES[qname].fn(spark, SF_DIR)
         assert out.rdd.getNumPartitions() == want
-
-
-class TestFlushDirCacheRevalidation:
-    """_FLUSH_DIR_CACHE must not return a /tmp dir whose sentinels or
-    data symlinks were removed behind its back (tmp cleaner, concurrent
-    md5-colliding process) — that stream would silently drop outer-join
-    NULL rows (r8 ADVICE)."""
-
-    def test_damaged_cache_hit_rebuilds(self, spark, tmp_path):
-        import os
-
-        from spark_ml_spatialjointransformer_spark.streaming import (
-            windowed as W,
-        )
-
-        src = str(tmp_path / "events.parquet")
-        spark.createDataFrame(
-            [(1, 1000000000000, 7, "click"), (2, 2000000000000, 7, "purchase")],
-            "event_id long, ts long, user_id long, event_type string",
-        ).coalesce(1).write.parquet(src)
-
-        d, n = W._flushed_events_dir(spark, src)
-        assert W._flush_dir_intact(d, n)
-        # damage 1: a tmp cleaner removes one flush sentinel
-        victim = next(f for f in os.listdir(d) if f.startswith("flush1"))
-        os.remove(os.path.join(d, victim))
-        d2, n2 = W._flushed_events_dir(spark, src)
-        assert (d2, n2) == (d, n)
-        assert W._flush_dir_intact(d2, n2)  # sentinel restored
-        # damage 2: a data symlink dangles (part file renamed away)
-        link = next(
-            f
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith("flush")
-        )
-        os.remove(os.path.join(d, link))
-        d3, n3 = W._flushed_events_dir(spark, src)
-        assert W._flush_dir_intact(d3, n3)
 
 
 class TestT53SpanDedup:
