@@ -9,16 +9,15 @@ estimate (driver-side Catalyst statistics — for a parquet relation this is
 the file footprint scaled by column pruning) and compares it against what
 ``defaultParallelism`` splits of ``spark.sql.files.maxPartitionBytes`` would
 hold.  No plan→RDD conversion ever happens at plan-build time (the previous
-``df.rdd.getNumPartitions()`` probe forced one per query).  Disable
-entirely with ``spark.sjt.parallelismGuard=false``.
+``df.rdd.getNumPartitions()`` probe forced one per query).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: parquet's default maxPartitionBytes, used if the internal conf accessor
-#: is unavailable (e.g. Connect-style sessions without a _jsparkSession)
+#: parquet's default maxPartitionBytes, used when the conf value does not
+#: parse
 _DEFAULT_MAX_SPLIT = 128 * 1024 * 1024
 
 
@@ -53,17 +52,13 @@ def estimated_plan_bytes(df: DataFrame) -> int | None:
 
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff its estimated scan
-    size cannot produce that many input splits; identity otherwise."""
-    spark = df.sparkSession
-    if spark.conf.get("spark.sjt.parallelismGuard", "true") != "true":
+    size cannot produce that many input splits; identity otherwise, and
+    when no estimate is available (assume big, do not add a shuffle)."""
+    size = estimated_plan_bytes(df)
+    if size is None:
         return df
+    spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        max_split = _max_partition_bytes(spark)
-    except Exception:
-        max_split = _DEFAULT_MAX_SPLIT
-        size = par * max_split  # unknown: assume big, do not add a shuffle
-    if size < par * max_split:
+    if size < par * _max_partition_bytes(spark):
         return df.repartition(par)
     return df

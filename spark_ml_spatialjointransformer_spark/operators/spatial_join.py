@@ -24,10 +24,13 @@ Semantics (parity with reference BroadcastSpatialJoin.scala:349-478):
 
 Execution strategy (Spark-first, nothing leaves DataFrame land):
 
-- candidate enumeration = ``join(F.broadcast(small), on=<sargable bbox
-  window>)`` → Catalyst picks BroadcastNestedLoopJoin; bbox columns are
-  extracted from WKT **JVM-side** (regexp + higher-order array functions, no
-  Python) so the prefilter runs inside whole-stage codegen;
+- candidate enumeration for ``withindist`` and the bbox predicates = an
+  equi-join on grid-cell keys with the degree/bbox window as residual, so
+  Catalyst picks a hash join; the strategy only decides whether the right
+  side carries ``F.broadcast`` (BroadcastHashJoin) or both sides shuffle
+  (``partitioned``).  bbox columns are extracted from WKT **JVM-side**
+  (regexp + higher-order array functions, no Python) so the prefilter runs
+  inside whole-stage codegen;
 - exact geometry predicates and the WGS84 geodesic run as Arrow
   ``pandas_udf`` batches (vectorized numpy; per-batch WKT parse memoization);
   point-point joins with the haversine kernel stay 100% JVM-side;
@@ -286,22 +289,28 @@ def _prepare_side(
         return df
 
     wcol = F.col(side.wkt_column)
-    nums = _wkt_number_array(wcol)
-    xs = F.filter(nums, lambda v, i: i % 2 == 0)
-    ys = F.filter(nums, lambda v, i: i % 2 == 1)
     if need_bbox:
-        df = df.withColumns(
-            {
-                x0: F.array_min(xs),
-                y0: F.array_min(ys),
-                x1: F.array_max(xs),
-                y1: F.array_max(ys),
-            }
+        # the numbers are extracted once, into their own column, and the
+        # four bbox values leave through a generator: Catalyst copies a
+        # projected expression into every isnotnull filter it infers from
+        # the join and pushes down, but it does not push across a Generate
+        nums = f"__sjt_{tag}_nums"
+        xs = f"filter({nums}, (v, i) -> i % 2 = 0)"
+        ys = f"filter({nums}, (v, i) -> i % 2 = 1)"
+        df = (
+            df.withColumn(nums, _wkt_number_array(wcol))
+            .selectExpr(
+                "*",
+                f"inline(array(named_struct('{x0}', array_min({xs}), "
+                f"'{y0}', array_min({ys}), '{x1}', array_max({xs}), "
+                f"'{y1}', array_max({ys}))))",
+            )
+            .drop(nums)
         )
         df = df.where(F.col(x0).isNotNull() & F.col(y0).isNotNull())
     else:
         # null-geometry drop without bbox columns
-        df = df.where(F.size(nums) >= 2)
+        df = df.where(F.size(_wkt_number_array(wcol)) >= 2)
     if need_centroid:
         c = _wkt_centroid_udf()(wcol)
         df = df.withColumns({gx: c.getField("x"), gy: c.getField("y")})
@@ -309,27 +318,6 @@ def _prepare_side(
     if need_wkt:
         df = df.withColumn(wktc, wcol.cast("string"))
     return df
-
-
-def _bbox_condition(op: str, lt: str, rt: str) -> Column | None:
-    """Sargable coarse prefilter relating the two sides' bboxes.
-
-    - within  (left within right):   left bbox ⊆ right bbox
-    - contains (left contains right): right bbox ⊆ left bbox
-    - intersects/overlaps:            bbox intersection
-    - withindist: handled by ``_withindist_bins`` (grid-cell equi-keys +
-      degree windows), not here
-    - nearest: None (unbounded search)
-    """
-    lx0, ly0, lx1, ly1 = (F.col(f"__sjt_{lt}_{c}") for c in ("x0", "y0", "x1", "y1"))
-    rx0, ry0, rx1, ry1 = (F.col(f"__sjt_{rt}_{c}") for c in ("x0", "y0", "x1", "y1"))
-    if op == "within":
-        return (lx0 >= rx0) & (lx1 <= rx1) & (ly0 >= ry0) & (ly1 <= ry1)
-    if op == "contains":
-        return (rx0 >= lx0) & (rx1 <= lx1) & (ry0 >= ly0) & (ry1 <= ly1)
-    if op in ("intersects", "overlaps"):
-        return (lx0 <= rx1) & (lx1 >= rx0) & (ly0 <= ry1) & (ly1 >= ry0)
-    return None
 
 
 #: withindist grid binning: the bin width is DECOUPLED from the radius (a
@@ -514,9 +502,10 @@ def _withindist_bins(
 def _bbox_bins(
     op: str, left: DataFrame, right: DataFrame, lt: str, rt: str
 ) -> tuple[DataFrame, DataFrame, Column]:
-    """Grid-cell equi-keys for the bbox predicates under
-    ``strategy='partitioned'`` — big×big joins with no broadcast for
-    within/contains/intersects/overlaps.
+    """Grid-cell equi-keys for the bbox predicates (within / contains /
+    intersects / overlaps), under either strategy: with the right side
+    broadcast Catalyst plans a BroadcastHashJoin, without it a shuffled
+    equi-join for big×big inputs.
 
     - ``within`` (left ⊆ right): the left side emits only its bbox
       MIN-CORNER cell — containment implies the right side's covered cells
@@ -527,65 +516,67 @@ def _bbox_bins(
       corner (the withindist reference-point dedup at radius 0).
 
     Cells are planar (no antimeridian wrap), matching the reference's
-    planar bbox semantics for these predicates; sequences clamp to the
-    globe range so degenerate geometry can't explode rows.  The precise
-    bbox window stays in the residual condition and the exact DE-9IM
-    refine runs downstream unchanged.
+    planar bbox semantics for these predicates; cell indices clamp to the
+    globe range so degenerate geometry can't explode rows.
+
+    Returns ``(left, right, condition)`` with the cell columns attached and
+    the full coarse condition (equi-keys + dedup + the precise bbox
+    window); the exact DE-9IM refine runs downstream.  Keys and condition
+    are SQL text: one parse per side instead of a Py4J call per Column
+    node keeps the plan build cheap.
     """
     w = _BIN_W_MAX
-    ww = F.lit(w)
-    lat_lo, lat_hi = math.floor(-90.0 / w), math.floor(90.0 / w)
-    lon_lo, lon_hi = math.floor(-180.0 / w), math.floor(180.0 / w)
+    lims = {
+        "x": (math.floor(-180.0 / w), math.floor(180.0 / w)),
+        "y": (math.floor(-90.0 / w), math.floor(90.0 / w)),
+    }
 
-    def clamp(c: Column, lo: int, hi: int) -> Column:
-        return F.greatest(F.least(c, F.lit(hi)), F.lit(lo))
+    def cell(v: str, axis: str) -> str:
+        lo, hi = lims[axis]
+        return f"greatest(least(floor(({v}) / {w}D), {hi}), {lo})"
 
-    def cover(df: DataFrame, tag: str) -> DataFrame:
-        x0, y0, x1, y1 = (F.col(f"__sjt_{tag}_{c}") for c in ("x0", "y0", "x1", "y1"))
-
-        def seq(lo: Column, hi: Column, lo_lim: int, hi_lim: int) -> Column:
-            lo, hi = clamp(lo, lo_lim, hi_lim), clamp(hi, lo_lim, hi_lim)
-            return F.when(lo <= hi, F.sequence(lo, hi)).otherwise(
-                F.array().cast("array<bigint>")
-            )
-
-        return df.withColumn(
-            f"__sjt_cx_{tag}",
-            F.explode(seq(F.floor(x0 / ww), F.floor(x1 / ww), lon_lo, lon_hi)),
-        ).withColumn(
-            f"__sjt_cy_{tag}",
-            F.explode(seq(F.floor(y0 / ww), F.floor(y1 / ww), lat_lo, lat_hi)),
-        )
+    def bbox(tag: str, c: str) -> str:
+        return f"__sjt_{tag}_{c}"
 
     def corner(df: DataFrame, tag: str) -> DataFrame:
-        x0, y0 = F.col(f"__sjt_{tag}_x0"), F.col(f"__sjt_{tag}_y0")
-        return df.withColumn(
-            f"__sjt_cx_{tag}", clamp(F.floor(x0 / ww), lon_lo, lon_hi)
-        ).withColumn(f"__sjt_cy_{tag}", clamp(F.floor(y0 / ww), lat_lo, lat_hi))
-
-    dedup: Column | None = None
-    if op == "within":
-        left, right = corner(left, lt), cover(right, rt)
-    elif op == "contains":
-        left, right = cover(left, lt), corner(right, rt)
-    else:  # intersects / overlaps
-        left, right = cover(left, lt), cover(right, rt)
-        lx0, ly0 = F.col(f"__sjt_{lt}_x0"), F.col(f"__sjt_{lt}_y0")
-        rx0, ry0 = F.col(f"__sjt_{rt}_x0"), F.col(f"__sjt_{rt}_y0")
-        dedup = (
-            F.col(f"__sjt_cx_{lt}")
-            == clamp(F.floor(F.greatest(lx0, rx0) / ww), lon_lo, lon_hi)
-        ) & (
-            F.col(f"__sjt_cy_{lt}")
-            == clamp(F.floor(F.greatest(ly0, ry0) / ww), lat_lo, lat_hi)
+        return df.selectExpr(
+            "*",
+            f"{cell(bbox(tag, 'x0'), 'x')} AS __sjt_cx_{tag}",
+            f"{cell(bbox(tag, 'y0'), 'y')} AS __sjt_cy_{tag}",
         )
 
-    cond = (F.col(f"__sjt_cx_{lt}") == F.col(f"__sjt_cx_{rt}")) & (
-        F.col(f"__sjt_cy_{lt}") == F.col(f"__sjt_cy_{rt}")
-    )
-    if dedup is not None:
-        cond = cond & dedup
-    return left, right, cond
+    def cover(df: DataFrame, tag: str) -> DataFrame:
+        # x0 <= x1 and y0 <= y1 by construction, so each sequence ascends
+        xs, ys = (
+            f"sequence({cell(bbox(tag, f'{a}0'), a)}, {cell(bbox(tag, f'{a}1'), a)})"
+            for a in ("x", "y")
+        )
+        return df.selectExpr(
+            "*",
+            f"inline(flatten(transform({xs}, cx -> transform({ys}, cy -> "
+            f"named_struct('__sjt_cx_{tag}', cx, '__sjt_cy_{tag}', cy)))))",
+        )
+
+    keys = [f"__sjt_c{a}_{lt} = __sjt_c{a}_{rt}" for a in ("x", "y")]
+    if op in ("within", "contains"):
+        inner, outer = (lt, rt) if op == "within" else (rt, lt)
+        keyed = {inner: corner, outer: cover}
+        window = [f"{bbox(inner, c)} >= {bbox(outer, c)}" for c in ("x0", "y0")]
+        window += [f"{bbox(inner, c)} <= {bbox(outer, c)}" for c in ("x1", "y1")]
+    else:  # intersects / overlaps
+        keyed = {lt: cover, rt: cover}
+        window = [
+            f"{bbox(lt, f'{a}0')} <= {bbox(rt, f'{a}1')} AND "
+            f"{bbox(lt, f'{a}1')} >= {bbox(rt, f'{a}0')}"
+            for a in ("x", "y")
+        ]
+        keys += [
+            f"__sjt_c{a}_{lt} = "
+            + cell(f"greatest({bbox(lt, f'{a}0')}, {bbox(rt, f'{a}0')})", a)
+            for a in ("x", "y")
+        ]
+    left, right = keyed[lt](left, lt), keyed[rt](right, rt)
+    return left, right, F.expr(" AND ".join(keys + window))
 
 
 def prepare_external(df: DataFrame, plan: SpatialJoinPlan) -> DataFrame:
@@ -748,15 +739,7 @@ def _compile_spatial_join(
         left = left.withColumn("__sjt_lid", F.monotonically_increasing_id())
         right = right.withColumn("__sjt_rid", F.monotonically_increasing_id())
 
-    cond = (
-        None if op == "withindist" else _bbox_condition(op, lt, rt)
-    )
-    if plan.condition:
-        rewritten = rewrite_condition(plan.condition, EXT_PREFIX)
-        _validate_condition_syntax(input_df, rewritten, plan.condition)
-        extra = F.expr(rewritten)
-        cond = extra if cond is None else (cond & extra)
-
+    cond = None  # nearest: its extra condition is the whole join condition
     if op == "withindist":
         l_cfg = ext_side if lt == "e" else plan.input_side
         r_cfg = plan.input_side if rt == "i" else ext_side
@@ -765,28 +748,26 @@ def _compile_spatial_join(
             and not r_cfg.is_wkt
             and plan.radius_degrees < _LON_BIN_MAX_RADIUS_DEG
         )
-        left, right, bin_cond = _withindist_bins(
+        left, right, cond = _withindist_bins(
             left, right, lt, rt, plan.radius_degrees, plan.radius_meters,
             lon_binnable,
         )
-        cond = bin_cond if cond is None else (bin_cond & cond)
-    elif plan.strategy == "partitioned":
-        # bbox predicates under partitioned strategy: grid-cell equi-keys
-        # turn the would-be nested loop into a shuffled hash join
-        left, right, bin_cond = _bbox_bins(op, left, right, lt, rt)
-        cond = bin_cond if cond is None else (bin_cond & cond)
+    elif need_refine:
+        left, right, cond = _bbox_bins(op, left, right, lt, rt)
+    if plan.condition:
+        rewritten = rewrite_condition(plan.condition, EXT_PREFIX)
+        _validate_condition_syntax(input_df, rewritten, plan.condition)
+        extra = F.expr(rewritten)
+        cond = extra if cond is None else (cond & extra)
 
-    if plan.strategy == "partitioned":
-        # big×big join: no broadcast — both sides shuffle on the grid-cell
-        # equi-keys built above (sort-merge/shuffled-hash under AQE,
-        # skew-split on hot cells)
-        joined = left.join(right, on=cond, how="inner")
-    else:
-        joined = (
-            left.crossJoin(F.broadcast(right))
-            if cond is None
-            else left.join(F.broadcast(right), on=cond, how="inner")
-        )
+    # the strategy is only a broadcast hint: ``partitioned`` lets both
+    # sides shuffle on the grid-cell equi-keys (sort-merge/shuffled-hash
+    # under AQE, skew-split on hot cells) for big×big joins
+    joined = left.join(
+        right if plan.strategy == "partitioned" else F.broadcast(right),
+        on=cond,
+        how="inner",
+    )
 
     if need_refine:
         def side_args(tag: str, side: SideConfig):

@@ -160,8 +160,10 @@ class SpatialJoinPlan:
     distance_kernel: str = "geodesic"  # 'geodesic' (WGS84, parity) | 'haversine' (pure JVM)
     tie_break: tuple[str, ...] = ()  # input-side cols for deterministic nearest ties
     #: 'broadcast' (reference contract: small side fits in memory) or
-    #: 'partitioned' (both sides shuffle on grid cells — lifts the
-    #: broadcast memory bound; supported for every predicate)
+    #: 'partitioned'.  withindist and the bbox predicates join on grid-cell
+    #: keys either way; 'partitioned' only drops the broadcast hint so both
+    #: sides shuffle on them (nearest: one certified grid pass) — lifts
+    #: the broadcast memory bound; supported for every predicate
     strategy: str = "broadcast"
     #: for 'nearest': the k nearest broadcast-side rows per iterated row
     #: (k=1 is the reference's semantics; k>1 is a beyond-reference

@@ -705,7 +705,7 @@ def j22_within_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast_input=False,
     )
     # the inner join result feeds BOTH legs (the output union and the
-    # matched-id anti join); without an RDD barrier the BNLJ + Arrow
+    # matched-id anti join); without an RDD barrier the cell join + Arrow
     # refine subtree compiles into — and executes in — each leg, doubling
     # the Python refine passes (measured in the executed plan: two
     # ArrowEvalPython nodes).  The lazy checkpoint computes it once.

@@ -116,11 +116,13 @@ class BroadcastSpatialJoin(
     )
     joinStrategy = _str_param(
         "joinStrategy",
-        "'broadcast' (reference contract) or 'partitioned' (every predicate: "
-        "both sides shuffle on grid-cell equi-keys — withindist uses "
-        "latitude bands, bbox predicates grid cells, nearest one certified "
-        "grid pass incl. k>1 and extra conditions; lifts the "
-        "broadcast memory bound for big-by-big joins)",
+        "'broadcast' (reference contract) or 'partitioned'.  withindist "
+        "and the bbox predicates always join on grid-cell equi-keys "
+        "(latitude bands / grid cells); 'partitioned' only drops the "
+        "broadcast hint so both sides shuffle on those keys, and runs "
+        "nearest as one certified grid pass incl. k>1 and extra "
+        "conditions — lifts the broadcast memory bound for big-by-big "
+        "joins",
     )
     numNeighbors = _str_param(
         "numNeighbors",

@@ -3,8 +3,9 @@ be visible in the executed plan, not just implied by the code shape.
 
 - nearest fast path: no join operator, no hash-partition shuffle, Arrow
   mapInPandas over the iterated side, scan pruned to the referenced columns;
-- predicate joins: broadcast (nested-loop) join — never sort-merge — with
-  the bbox prefilter as the JVM join condition;
+- bbox predicate joins: broadcast hash join on grid-cell keys — never a
+  nested loop or sort-merge — with the bbox window as the JVM residual, and
+  each WKT's numbers extracted once;
 - withindist point-point: zero Python in the plan (haversine is JVM expr);
 - pre-join `filter` param reaches the parquet scan as a pushed filter.
 """
@@ -33,13 +34,61 @@ def test_nearest_fast_path_has_no_join_no_hash_shuffle(spark):
     assert "ReadSchema: struct<c_custkey:bigint>" in plan
 
 
-def test_within_uses_broadcast_nested_loop_join(spark):
-    plan = plan_of(QUERIES["j2_within_nation"].fn(spark, SF))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "BroadcastExchange" in plan
-    assert "SortMergeJoin" not in plan
-    # exact DE-9IM refine is the only Python in the plan
-    assert "ArrowEvalPython" in plan
+def plans_run_by(spark, name: str):
+    """Query ``name``'s DataFrame, and its final executed plan plus the plan
+    of every SQL execution its build ran (j22's lazy barrier executes the
+    spatial join while the DataFrame is built; its final plan only reads
+    the checkpointed RDD)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution(i: int):
+        return store.executionsList(i, 1).apply(0)
+
+    n = int(store.executionsCount())
+    # by id, not by position: the store evicts its oldest executions
+    mark = int(execution(n - 1).executionId()) if n else -1
+    df = QUERIES[name].fn(spark, SF)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = [plan_of(df)]
+    i = int(store.executionsCount()) - 1
+    while i >= 0 and int(execution(i).executionId()) > mark:
+        plans.append(execution(i).physicalPlanDescription())
+        i -= 1
+    return df, "\n".join(plans)
+
+
+#: bbox-predicate queries on the default broadcast strategy -> WKT sides
+#: in the optimized plan (j22's join sits behind its barrier)
+_BBOX_BROADCAST_QUERIES = {
+    "j2_within_nation": 1,
+    "j3_contains_nation": 1,
+    "j4_intersects_rects": 2,
+    "j5_overlaps_rects": 2,
+    "f3_transformer_within_filtered": 1,
+    "j22_within_left_outer": 0,
+}
+
+
+def test_bbox_predicates_plan_broadcast_hash_join(spark):
+    """Every bbox predicate joins on grid-cell keys whatever the strategy:
+    under the default one the cells broadcast into a BroadcastHashJoin,
+    the exact DE-9IM refine is the only Python, and the regexp over a WKT
+    column runs once per side (not again in each inferred null filter)."""
+    for name, wkt_sides in _BBOX_BROADCAST_QUERIES.items():
+        df, plan = plans_run_by(spark, name)
+        assert "BroadcastHashJoin" in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
+        assert "SortMergeJoin" not in plan, name
+        assert "ArrowEvalPython" in plan, name
+        for py_op in (
+            "BatchEvalPython",
+            "MapInPandas",
+            "FlatMapGroupsInPandas",
+            "FlatMapCoGroupsInPandas",
+        ):
+            assert py_op not in plan, f"{name}: unexpected python stage {py_op}"
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("regexp_extract_all") <= wkt_sides, name
 
 
 def test_withindist_point_point_is_pure_jvm(spark):

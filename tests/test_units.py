@@ -368,10 +368,10 @@ def test_broadcast_knn_null_tiebreak(spark):
     assert rows[0].poi_name is None  # nulls-first tie-break won the tie
 
 
-def test_parallelism_guard_is_stats_only_and_conf_gated(spark):
+def test_parallelism_guard_is_stats_only(spark):
     """The small-input guard must repartition tiny scans to
-    defaultParallelism, honor the disable conf, and never convert the plan
-    to an RDD while deciding (the decision reads Catalyst statistics)."""
+    defaultParallelism and never convert the plan to an RDD while deciding
+    (the decision reads Catalyst statistics)."""
     from spark_ml_spatialjointransformer_spark.operators._guard import (
         ensure_min_parallelism,
     )
@@ -382,13 +382,6 @@ def test_parallelism_guard_is_stats_only_and_conf_gated(spark):
     guarded = ensure_min_parallelism(small)
     assert "Repartition" in guarded._jdf.queryExecution().logical().toString()
     assert guarded.rdd.getNumPartitions() == par
-
-    spark.conf.set("spark.sjt.parallelismGuard", "false")
-    try:
-        off = ensure_min_parallelism(small)
-        assert off is small
-    finally:
-        spark.conf.set("spark.sjt.parallelismGuard", "true")
 
 
 class TestZorder:
