@@ -44,6 +44,9 @@ from spark_ml_spatialjointransformer_spark.operators._compat import (
     barrier as _barrier,
     unbarrier as _unbarrier,
 )
+from spark_ml_spatialjointransformer_spark.operators._guard import (
+    ensure_min_parallelism,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -140,16 +143,6 @@ def minhash_signature_col(text: Column, k: int = 64, n: int = 3) -> Column:
     return F.when(F.size(hashes) > 0, F.array(*mins)).otherwise(
         F.array().cast("array<bigint>")
     )
-
-
-def _parallelize(df: DataFrame) -> DataFrame:
-    """Small-input parallelism guard — stats-only probe, see
-    :func:`operators._guard.ensure_min_parallelism`."""
-    from spark_ml_spatialjointransformer_spark.operators._guard import (
-        ensure_min_parallelism,
-    )
-
-    return ensure_min_parallelism(df)
 
 
 def minhash_features_udf(k: int = 64, n: int = 3):
@@ -258,7 +251,7 @@ def minhash_signatures(
     array (``__hs``) from the SAME kernel pass — the exact-verify stage
     (``neardup_pairs_lsh_verified``) then reuses this frame instead of
     running the shingle pipeline a second and third time."""
-    feats = _parallelize(df).select(
+    feats = ensure_min_parallelism(df).select(
         F.col(id_col).alias("__id"),
         minhash_features_udf(k, n)(F.col(text_col)).alias("__f"),
     )
@@ -617,7 +610,7 @@ def simhash_values(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     exchange (the previous explode → 61-sum-aggregate shape paid an
     id-keyed shuffle for the same numbers)."""
     return (
-        _parallelize(df)
+        ensure_min_parallelism(df)
         .select(
             F.col(id_col).alias("__id"),
             simhash_features_udf()(F.col(text_col)).alias("__sh"),
@@ -766,7 +759,7 @@ def ngram_jaccard_pairs(
     # stays the string-exact formulation and hash-matches at both SFs.
     shingle_h60_udf = F.pandas_udf(_shingle_h60(n), "array<bigint>")
     sh = (
-        _parallelize(df).select(
+        ensure_min_parallelism(df).select(
             F.col(id_col).alias("__id"),
             shingle_h60_udf(F.col(text_col)).alias("__sh"),
         )

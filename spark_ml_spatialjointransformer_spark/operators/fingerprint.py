@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from spark_ml_spatialjointransformer_spark.operators.dedup import _parallelize
+from spark_ml_spatialjointransformer_spark.operators._guard import ensure_min_parallelism
 
 
 def kgrams_udf(k: int = 3):
@@ -210,7 +210,7 @@ def winnow_fingerprints(
     substring of at least k+w-1 tokens produces at least one shared
     fingerprint."""
     base = (
-        _parallelize(df)
+        ensure_min_parallelism(df)
         .select(
             F.col(id_col).alias("doc_id"),
             kgrams_udf(k)(F.col(text_col)).alias("__kg"),

@@ -34,20 +34,25 @@ Execution strategy (Spark-first, nothing leaves DataFrame land):
 - exact geometry predicates and the WGS84 geodesic run as Arrow
   ``pandas_udf`` batches (vectorized numpy; per-batch WKT parse memoization);
   point-point joins with the haversine kernel stay 100% JVM-side;
-- ``nearest`` = ``groupBy(iterated-row-id).agg(F.min(struct(distance,
-  tie-break, payload)))`` — min is partially aggregatable, so Spark combines
-  map-side and shuffles ONE candidate row per iterated row instead of
-  windowing the full candidate set (this is the 100TB-scale reason to prefer
-  min-over-struct to ``row_number() == 1``);
+- ``nearest`` takes one of two routes.  The broadcast kernel
+  (``_broadcast_knn``) collects the broadcast side into numpy arrays and
+  answers each iterated-side partition with a vectorized distance matrix +
+  argmin / top-k in ``mapInPandas`` — no join, no shuffle; a simple numeric
+  ``left.<col> op right.<col>`` condition rides along as a candidate mask.
+  The ``partitioned`` strategy and every condition the kernel cannot mask
+  take the certified grid pass of ``operators/knn.py`` (one cell-keyed
+  join, top-k per row; any SQL condition filters candidates inside the
+  join);
 - ties broken deterministically by (distance, tie_break cols, broadcast row
-  id) — the reference leaves ties to index-traversal order
-  (nondeterministic); we document and pin ours.
+  order) on both routes — the reference leaves ties to index-traversal
+  order (nondeterministic); we document and pin ours.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -77,6 +82,7 @@ from spark_ml_spatialjointransformer_spark.plans.config import (
     SideConfig,
     SpatialJoinPlan,
     condition_external_columns,
+    condition_input_columns,
     rewrite_condition,
 )
 
@@ -638,8 +644,9 @@ def spatial_join(
     ``num_partitions`` honors the reference X1 contract (output has exactly
     N partitions — BroadcastSpatialJoinTest.scala:151): broadcast plans that
     iterate the repartitioned external side carry N through for free; plans
-    that shuffle after the join (nearest aggregation/window, partitioned
-    strategy) append one explicit repartition.
+    that may shuffle after the join (nearest with a condition, which can
+    take the grid pass; the partitioned strategy) append one explicit
+    repartition.
     """
     out = _compile_spatial_join(input_df, external_df, plan)
     if plan.num_partitions:
@@ -658,11 +665,6 @@ def _compile_spatial_join(
 ) -> DataFrame:
     ensure_udf_portability()
     op = plan.op
-    if plan.strategy == "partitioned" and op == "nearest":
-        if plan.external_side.is_wkt or plan.input_side.is_wkt:
-            raise ValueError(
-                "strategy='partitioned' nearest requires point geometry on both sides"
-            )
     if op == "withindist" and plan.radius_meters <= 0:
         raise ValueError(
             "withindist requires a positive radius in meters, e.g. "
@@ -692,11 +694,20 @@ def _compile_spatial_join(
     else:
         left, right, lt, rt = inp, ext, "i", "e"
 
-    if op == "nearest" and plan.strategy == "partitioned":
-        # big×big kNN: one certified grid pass, no broadcast of either
-        # side; its cell join shuffles the iterated side anyway, so the
-        # parallelism guard below would only add an exchange
-        return _partitioned_nearest_route(left, right, lt, rt, plan, input_cols)
+    if op == "nearest":
+        # the broadcast kernel answers the plain case and masks a simple
+        # numeric condition; the partitioned strategy and every other
+        # condition take the certified grid pass, whose cell join shuffles
+        # the iterated side anyway, so the parallelism guard below would
+        # only add an exchange
+        routing = _nearest_routing(plan, lt, input_cols)
+        cond_spec = (
+            _kernel_condition_spec(plan.condition, ext, inp)
+            if plan.condition and plan.strategy == "broadcast"
+            else None
+        )
+        if plan.strategy == "partitioned" or (plan.condition and cond_spec is None):
+            return _partitioned_nearest_route(left, right, lt, rt, plan, routing)
 
     # Parallelism guard: the iterated side drives every task.  Small local
     # parquet collapses to 1-2 input splits, which would serialize the whole
@@ -713,33 +724,8 @@ def _compile_spatial_join(
         left = ensure_min_parallelism(left)
 
     if op == "nearest":
-        # fast path: vectorized broadcast-kNN, no join/shuffle at all.
-        # A simple `left.<col> op right.<col>` numeric condition rides
-        # along as an in-kernel candidate mask (distances of disallowed
-        # pairs set to +inf before the argmin) — same semantics as the
-        # min-struct path's post-join filter, but without the
-        # BroadcastNestedLoopJoin + 15M-row SortAggregate it forces
-        # (measured sf0.1: j10 2.9s agg path → ~1s masked kernel).
-        # Conditions the parser doesn't recognize fall through to the
-        # general aggregation path below.
-        cond_spec = (
-            _kernel_condition_spec(plan.condition, ext, inp)
-            if plan.condition
-            else None
-        )
-        if not plan.condition or cond_spec is not None:
-            return _broadcast_knn(
-                left, right, lt, plan, input_cols, inp, ext, cond_spec
-            )
+        return _broadcast_knn(left, right, lt, plan, routing, inp, ext, cond_spec)
 
-    if op == "nearest":
-        # per-row ids only exist for the nearest aggregation/window paths
-        # (group key + deterministic tie order); predicate joins never read
-        # them — and leaving them off keeps those plans streaming-legal
-        left = left.withColumn("__sjt_lid", F.monotonically_increasing_id())
-        right = right.withColumn("__sjt_rid", F.monotonically_increasing_id())
-
-    cond = None  # nearest: its extra condition is the whole join condition
     if op == "withindist":
         l_cfg = ext_side if lt == "e" else plan.input_side
         r_cfg = plan.input_side if rt == "i" else ext_side
@@ -752,13 +738,12 @@ def _compile_spatial_join(
             left, right, lt, rt, plan.radius_degrees, plan.radius_meters,
             lon_binnable,
         )
-    elif need_refine:
+    else:
         left, right, cond = _bbox_bins(op, left, right, lt, rt)
     if plan.condition:
         rewritten = rewrite_condition(plan.condition, EXT_PREFIX)
         _validate_condition_syntax(input_df, rewritten, plan.condition)
-        extra = F.expr(rewritten)
-        cond = extra if cond is None else (cond & extra)
+        cond = cond & F.expr(rewritten)
 
     # the strategy is only a broadcast hint: ``partitioned`` lets both
     # sides shuffle on the grid-cell equi-keys (sort-merge/shuffled-hash
@@ -810,90 +795,15 @@ def _compile_spatial_join(
             F.round(F.col("__sjt_dist")).cast("int") <= int(plan.radius_meters)
         )
 
-    if op != "nearest":
-        # output assembly: input cols ++ selected external ++ distance
-        out_cols: list[Column] = [F.col(c) for c in input_cols]
-        for name, alias in plan.data_columns:
-            out_cols.append(F.col(f"{EXT_PREFIX}{name}").alias(alias))
-        if plan.distance_column:
-            out_cols.append(
-                F.round(F.col("__sjt_dist")).cast("int").alias(plan.distance_column)
-            )
-        return joined.select(*out_cols)
-
-    if op == "nearest" and plan.k > 1:
-        # k-nearest with extra condition: row_number over the candidate set
-        # (a k-row min-struct would not be partially aggregatable; the
-        # window shuffles the post-condition candidates once)
-        from pyspark.sql.window import Window
-
-        tb_order = [
-            F.col(c if rt == "i" else f"{EXT_PREFIX}{c}") for c in plan.tie_break
-        ]
-        wnd = Window.partitionBy("__sjt_lid").orderBy(
-            F.col("__sjt_dist"), *tb_order, F.col("__sjt_rid")
-        )
-        out_cols = [F.col(c) for c in input_cols]
-        for name, alias in plan.data_columns:
-            out_cols.append(F.col(f"{EXT_PREFIX}{name}").alias(alias))
-        if plan.distance_column:
-            out_cols.append(
-                F.round(F.col("__sjt_dist")).cast("int").alias(plan.distance_column)
-            )
-        return (
-            joined.withColumn("__sjt_rn", F.row_number().over(wnd))
-            .where(F.col("__sjt_rn") <= plan.k)
-            .select(*out_cols)
-        )
-
-    # nearest (with extra condition): min-by-(distance, tie-break, rid) per
-    # iterated row.  min is partially aggregatable, so only one candidate
-    # per group crosses the shuffle; columns of the iterated side are
-    # group-constants and travel via first() instead of inflating the
-    # compared struct.
-    out_items: list[tuple[str, int, str]] = []  # (side, idx, out_name)
-    left_exprs: list[Column] = []
-    right_exprs: list[Column] = []
-
-    def _route(col: Column, out_name: str, from_left: bool) -> None:
-        if from_left:
-            out_items.append(("left", len(left_exprs), out_name))
-            left_exprs.append(col)
-        else:
-            out_items.append(("right", len(right_exprs), out_name))
-            right_exprs.append(col)
-
-    for c in input_cols:
-        _route(F.col(c), c, from_left=(lt == "i"))
+    # output assembly: input cols ++ selected external ++ distance
+    out_cols: list[Column] = [F.col(c) for c in input_cols]
     for name, alias in plan.data_columns:
-        _route(F.col(f"{EXT_PREFIX}{name}"), alias, from_left=(lt == "e"))
+        out_cols.append(F.col(f"{EXT_PREFIX}{name}").alias(alias))
     if plan.distance_column:
-        _route(
-            F.round(F.col("__sjt_dist")).cast("int"),
-            plan.distance_column,
-            from_left=False,  # varies per candidate — must ride the min-struct
+        out_cols.append(
+            F.round(F.col("__sjt_dist")).cast("int").alias(plan.distance_column)
         )
-
-    tb_cols = [
-        F.col(c if rt == "i" else f"{EXT_PREFIX}{c}").alias(f"__tb{i}")
-        for i, c in enumerate(plan.tie_break)
-    ]
-    sel = F.struct(
-        F.col("__sjt_dist").alias("__d"),
-        *tb_cols,
-        F.col("__sjt_rid").alias("__rid"),
-        F.struct(
-            *[e.alias(f"__p{i}") for i, e in enumerate(right_exprs)]
-        ).alias("p"),
-    )
-    aggs = [F.min(sel).alias("__m")] + [
-        F.first(e).alias(f"__l{i}") for i, e in enumerate(left_exprs)
-    ]
-    final = [
-        (F.col(f"__l{idx}") if side == "left" else F.col(f"__m.p.__p{idx}")).alias(name)
-        for side, idx, name in out_items
-    ]
-    return joined.groupBy("__sjt_lid").agg(*aggs).select(*final)
+    return joined.select(*out_cols)
 
 
 def _validate_condition_syntax(df: DataFrame, rewritten: str, original: str) -> None:
@@ -915,40 +825,58 @@ def _validate_condition_syntax(df: DataFrame, rewritten: str, original: str) -> 
         ) from e
 
 
+class _NearestRouting(NamedTuple):
+    """Where each ``nearest`` output column comes from, for one join
+    direction: the iterated (left) side keeps its own columns, the
+    broadcast (right) side contributes the payload of the winning rows."""
+
+    #: iterated-side source columns carried to the output, and their names
+    left_keep: list[str]
+    left_out: list[str]
+    #: broadcast-side payload columns, and their output names
+    right_pay: list[str]
+    right_out: list[str]
+    #: broadcast-side tie-break columns (after distance, before row order)
+    tie_break: list[str]
+    #: the contract order: input cols ++ data cols ++ distance
+    order: list[str]
+
+
+def _nearest_routing(
+    plan: SpatialJoinPlan, lt: str, input_cols: list[str]
+) -> _NearestRouting:
+    ext_src = [f"{EXT_PREFIX}{n}" for n, _ in plan.data_columns]
+    ext_out = [a for _, a in plan.data_columns]
+    order = list(input_cols) + ext_out
+    if plan.distance_column:
+        order.append(plan.distance_column)
+    if lt == "i":  # the external side is broadcast: its data columns ride
+        tb = [f"{EXT_PREFIX}{c}" for c in plan.tie_break]
+        return _NearestRouting(input_cols, input_cols, ext_src, ext_out, tb, order)
+    # the input side is broadcast: every input column rides
+    tb = list(plan.tie_break)
+    return _NearestRouting(ext_src, ext_out, input_cols, input_cols, tb, order)
+
+
 def _partitioned_nearest_route(
     left: DataFrame,
     right: DataFrame,
     lt: str,
     rt: str,
     plan: SpatialJoinPlan,
-    input_cols: list[str],
+    routing: _NearestRouting,
 ) -> DataFrame:
     """Adapter from the plan surface to operators/knn.partitioned_nearest:
-    routes payload/tie-break columns per join direction and restores the
-    contract output order (input cols ++ data cols ++ distance)."""
+    the grid pass for the partitioned strategy and for every condition the
+    broadcast kernel cannot mask."""
     from spark_ml_spatialjointransformer_spark.operators.knn import (
         partitioned_nearest,
     )
-
-    if lt == "i":
-        left_ids = list(input_cols)
-        right_pay = [f"{EXT_PREFIX}{n}" for n, _ in plan.data_columns]
-        out_names = list(input_cols) + [a for _, a in plan.data_columns]
-        tb = [f"{EXT_PREFIX}{c}" for c in plan.tie_break]
-    else:
-        left_ids = [f"{EXT_PREFIX}{n}" for n, _ in plan.data_columns]
-        right_pay = list(input_cols)
-        out_names = [a for _, a in plan.data_columns] + list(input_cols)
-        tb = list(plan.tie_break)
 
     cond_col = None
     l_extra: list[str] = []
     r_extra: list[str] = []
     if plan.condition:
-        from spark_ml_spatialjointransformer_spark.plans.config import (
-            condition_input_columns,
-        )
-
         rewritten = rewrite_condition(plan.condition, EXT_PREFIX)
         _validate_condition_syntax(left, rewritten, plan.condition)
         cond_col = F.expr(rewritten)
@@ -960,34 +888,28 @@ def _partitioned_nearest_route(
             (inp_cond, ext_cond) if lt == "i" else (ext_cond, inp_cond)
         )
 
-    if plan.distance_kernel == "haversine":
-        dist_fn = haversine_expr
-    else:
-        _geo = geodesic_distance_udf()
-
-        def dist_fn(a, b, c, d):  # noqa: ANN001 — Column quadruple
-            return _geo(a, b, c, d)
-
+    dist_fn = (
+        haversine_expr
+        if plan.distance_kernel == "haversine"
+        else geodesic_distance_udf()
+    )
     res = partitioned_nearest(
         left,
         right,
-        left_ids,
+        routing.left_keep,
         (f"__sjt_{lt}_gx", f"__sjt_{lt}_gy"),
-        right_pay,
+        routing.right_pay,
         (f"__sjt_{rt}_gx", f"__sjt_{rt}_gy"),
-        tb,
+        routing.tie_break,
         dist_fn,
         plan.distance_column,
-        out_names,
+        routing.left_out + routing.right_out,
         condition=cond_col,
         l_extra_cols=l_extra,
         r_extra_cols=r_extra,
         k=plan.k,
     )
-    order = list(input_cols) + [a for _, a in plan.data_columns]
-    if plan.distance_column:
-        order.append(plan.distance_column)
-    return res.select(*order)
+    return res.select(*routing.order)
 
 
 def _knn_kernel(kernel: str):
@@ -1039,11 +961,12 @@ def _kernel_condition_spec(
     and only if — the vectorized kNN kernel can evaluate it exactly:
     single comparison, both columns plain NUMERIC (int/float) columns of
     their sides.  Anything else (compound booleans, string/timestamp
-    operands, expressions) returns None and the caller routes the join
-    through the general min-struct aggregation path, whose F.expr handles
-    arbitrary SQL.  Values are compared in float64 inside the kernel, so
-    integral operands are loudly rejected at runtime beyond 2^53 (see
-    the kernel's ``_cond_f64_local``) rather than silently losing equality precision."""
+    operands, expressions, parentheses) returns None and the caller
+    routes the join through the grid pass of ``operators/knn.py``, which
+    filters candidates with any SQL condition.  Values are compared in
+    float64 inside the kernel, so integral operands are loudly rejected at
+    runtime beyond 2^53 (see the kernel's ``_cond_f64_local``) rather than
+    silently losing equality precision."""
     m = _KERNEL_COND_RE.match(condition)
     if m is not None:
         ext_col, op_s, inp_col = m.group(1), m.group(2), m.group(3)
@@ -1069,7 +992,7 @@ def _broadcast_knn(
     right: DataFrame,
     lt: str,
     plan: SpatialJoinPlan,
-    input_cols: list[str],
+    routing: _NearestRouting,
     inp: DataFrame,
     ext: DataFrame,
     cond_spec: "tuple[str, str, str] | None" = None,
@@ -1079,7 +1002,7 @@ def _broadcast_knn(
     Spark broadcast of numpy arrays, and each iterated-side partition
     computes a vectorized distance matrix + argmin via mapInPandas.
 
-    Compared to cross-join + min-aggregate this removes the joined
+    Compared to a candidate join + per-row ranking this removes the joined
     intermediate AND the shuffle entirely: output partitioning == iterated
     side partitioning, O(L·R/cores) numpy flops.  Ties break by the
     tie_break columns then by broadcast collect order (stable argmin on a
@@ -1090,16 +1013,7 @@ def _broadcast_knn(
     kernel = _knn_kernel(plan.distance_kernel)
 
     # ---- broadcast side: payload + coordinates, deterministically ordered
-    if lt == "i":  # right == external: contributes the selected data columns
-        pay_src = [f"{EXT_PREFIX}{name}" for name, _ in plan.data_columns]
-        out_right = [alias for _, alias in plan.data_columns]
-        r_df, r_schema_src = ext, ext
-        tb = [f"{EXT_PREFIX}{c}" for c in plan.tie_break]
-    else:  # right == input: contributes every input column
-        pay_src = list(input_cols)
-        out_right = list(input_cols)
-        r_df, r_schema_src = inp, inp
-        tb = list(plan.tie_break)
+    pay_src, out_right, tb = routing.right_pay, routing.right_out, routing.tie_break
 
     # condition mask operands: ext col rides with whichever side holds it
     if cond_spec is not None:
@@ -1113,7 +1027,7 @@ def _broadcast_knn(
     # unlike toPandas' float64 coercion of nullable ints)
     rt_tag = "i" if lt == "e" else "e"
     npay = len(pay_src)
-    sel = r_df.select(
+    sel = right.select(
         *[F.col(c).alias(f"__pay{i}") for i, c in enumerate(pay_src)],
         F.col(f"__sjt_{rt_tag}_gx").alias("__gx"),
         F.col(f"__sjt_{rt_tag}_gy").alias("__gy"),
@@ -1149,7 +1063,7 @@ def _broadcast_knn(
     order = list(range(n_rows))
     if tb:
         # None-safe sort key, nulls FIRST — matching the SQL null ordering
-        # of the min-struct aggregate path (a bare tuple key would raise
+        # of the grid pass's ranking window (a bare tuple key would raise
         # TypeError on None vs non-None comparisons)
         tbvals = [cols[f"__tb{i}"] for i in range(len(tb))]
         order.sort(
@@ -1175,9 +1089,9 @@ def _broadcast_knn(
         if np.any(np.abs(out[finite]) >= 2.0**53):
             raise ValueError(
                 "spatial_join condition kernel: operand magnitude >= 2^53 "
-                "loses comparison precision in float64 — use the "
-                "aggregation path (rewrite the condition so the kernel "
-                "parser skips it)"
+                "loses comparison precision in float64 — use the grid "
+                "pass (rewrite the condition so the kernel parser skips "
+                "it, e.g. wrap it in parentheses)"
             )
         return out
 
@@ -1191,6 +1105,7 @@ def _broadcast_knn(
     # ---- output schema: input cols ++ aliased data cols ++ distance
     src_fields = {f.name: f for f in inp.schema.fields}
     ext_fields = {f.name: f for f in ext.schema.fields}
+    input_cols = routing.left_keep if lt == "i" else routing.right_pay
     fields = [
         T.StructField(c, src_fields[c].dataType, src_fields[c].nullable)
         for c in input_cols
@@ -1202,11 +1117,10 @@ def _broadcast_knn(
         fields.append(T.StructField(plan.distance_column, T.IntegerType(), True))
     out_schema = T.StructType(fields)
 
-    left_keep = (
-        list(input_cols) if lt == "i" else [f"{EXT_PREFIX}{n}" for n, _ in plan.data_columns]
-    )
-    left_out_names = (
-        list(input_cols) if lt == "i" else [a for _, a in plan.data_columns]
+    # the executor closure takes the lists, not the routing: a type defined
+    # in this module would not unpickle where the package is not installed
+    left_keep, left_out_names, out_order = (
+        routing.left_keep, routing.left_out, routing.order
     )
     lgx, lgy = f"__sjt_{lt}_gx", f"__sjt_{lt}_gy"
     distance_column = plan.distance_column
@@ -1276,7 +1190,7 @@ def _broadcast_knn(
                 rep = np.arange(len(pdf))
             else:
                 # top-k: stable argsort keeps equal distances in broadcast
-                # (tie-break) order, matching the window path's ordering
+                # (tie-break) order, matching the grid pass's ordering
                 idx2 = np.empty((len(pdf), take), dtype=np.int64)
                 dk = np.empty((len(pdf), take), dtype=np.float64)
                 for s in range(0, len(pdf), step):
@@ -1305,12 +1219,8 @@ def _broadcast_knn(
                 out[name] = arr[idx]
             if distance_column:
                 out[distance_column] = np.floor(dmin + 0.5).astype(np.int32)
-            yield pd.DataFrame(out)
+            # in the schema's (contract) order, so columns match it by name
+            # and by position alike
+            yield pd.DataFrame({c: out[c] for c in out_order})
 
-    res = left.mapInPandas(knn_batches, schema=out_schema)
-    # mapInPandas emits columns in dict order == left-then-right; reorder to
-    # the contract: input cols ++ data cols ++ distance
-    order = list(input_cols) + [a for _, a in plan.data_columns]
-    if distance_column:
-        order.append(distance_column)
-    return res.select(*order)
+    return left.mapInPandas(knn_batches, schema=out_schema)

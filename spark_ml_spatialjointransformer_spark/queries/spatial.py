@@ -621,9 +621,9 @@ FROM r WHERE rn = 1
 )
 def j10_nearest_other_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7+J8 combined: nearest supplier in a DIFFERENT nation per customer.
-    The extra condition disables the zero-shuffle kNN fast path, so this
-    exercises the min-struct aggregation path (one candidate per group
-    crosses the shuffle) through the oracle gate."""
+    The numeric condition rides the zero-shuffle kNN kernel as a candidate
+    mask; the same condition in a spelling the kernel's parser rejects takes
+    the grid pass with the same rows (tests/test_plans.py pins both)."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "c_nationkey", "lon", "lat")
     supp = suppliers_geo(spark, sf_dir)
     plan = SpatialJoinPlan(

@@ -122,7 +122,9 @@ class BroadcastSpatialJoin(
         "broadcast hint so both sides shuffle on those keys, and runs "
         "nearest as one certified grid pass incl. k>1 and extra "
         "conditions — lifts the broadcast memory bound for big-by-big "
-        "joins",
+        "joins.  Under 'broadcast', nearest with a condition the kernel "
+        "cannot mask (anything but one numeric left.<col> op right.<col> "
+        "comparison) takes the same grid pass",
     )
     numNeighbors = _str_param(
         "numNeighbors",

@@ -1,17 +1,18 @@
 """The vectorized broadcast-kNN fast path with an in-kernel condition mask
 (spatial_join.py `_kernel_condition_spec` / `_broadcast_knn(cond_spec=...)`).
 
-A simple `left.<col> op right.<col>` numeric condition used to force the
-min-struct aggregation path (BroadcastNestedLoopJoin + SortAggregate over
-every candidate pair); it now rides as a numpy +inf mask inside the same
-zero-join kernel the unconditioned nearest uses.  These tests pin that the
-masked kernel keeps EXACT agg-path semantics: inner-join row drops, SQL
-NULL-never-matches, both broadcast directions, k>1, the 2^53 precision
-guard, and the fallback for conditions the parser can't take.
+A simple `left.<col> op right.<col>` numeric condition rides as a numpy
++inf mask inside the same zero-join kernel the unconditioned nearest uses;
+every other condition takes the grid pass of operators/knn.py, which
+filters candidates with the SQL expression inside its cell join.  These
+tests pin that the masked kernel keeps EXACT grid-pass semantics: inner-join
+row drops, SQL NULL-never-matches, both broadcast directions, k>1, the 2^53
+precision guard, and the fallback for conditions the parser can't take.
 """
 
 import pytest
 
+from spark_ml_spatialjointransformer_spark.functions.geodesic import haversine_np
 from spark_ml_spatialjointransformer_spark.operators.spatial_join import (
     _kernel_condition_spec,
     spatial_join,
@@ -95,10 +96,10 @@ class TestMaskedKernel:
         # nothing; iid=100 -> eid=2 (20 != 10)
         assert {r.iid: r.near_id for r in out} == {100: 2}
 
-    def test_matches_aggregation_path_exactly(self, spark):
+    def test_matches_grid_pass_exactly(self, spark):
         """Same data through a condition the parser TAKES vs one it must
         REJECT (spelled to defeat the regex, semantically identical) —
-        kernel path and agg path must agree row-for-row."""
+        the masked kernel and the grid pass must agree row-for-row."""
         ext = spark.createDataFrame(
             [(i, i % 3, 0.0, float(i)) for i in range(8)],
             "eid long, grp int, lon double, lat double",
@@ -159,18 +160,38 @@ class TestMaskedKernel:
         assert [r.near_id for r in gt] == [2]
 
     def test_precision_guard_beyond_2_53(self, spark):
-        big = (1 << 53) + 1
+        """Beyond 2^53 the kernel refuses (float64 would merge distinct
+        ids); the rewritten condition its error advises takes the grid
+        pass, which compares the longs exactly."""
+        big = 1 << 53
+        # eid=1 is nearest but shares grp with the probe; eid=2 and eid=3
+        # differ from it only in the last bit (equal once cast to float64)
         ext = spark.createDataFrame(
-            [(1, big, 0.0, 0.0)], "eid long, grp long, lon double, lat double"
+            [(1, big, 0.0, 0.0), (2, big + 1, 0.0, 1.0), (3, big, 0.0, 2.0)],
+            "eid long, grp long, lon double, lat double",
         )
         inp = spark.createDataFrame(
-            [(100, big + 1, 0.0, 0.1)],
+            [(100, big, 0.0, 0.1), (200, big + 1, 0.0, 1.9)],
             "iid long, grp long, lon double, lat double",
         )
         with pytest.raises(Exception, match="2\\^53"):
             spatial_join(
                 inp, ext, _plan(condition="left.grp != right.grp")
             ).collect()
+        got = spatial_join(
+            inp, ext, _plan(condition="(left.grp != right.grp)")
+        ).select("iid", "near_id", "dist_m").collect()
+        # brute force over the exact longs
+        expect = []
+        for iid, igrp, ilon, ilat in inp.collect():
+            d, eid = min(
+                (float(haversine_np(ilon, ilat, elon, elat)), eid)
+                for eid, egrp, elon, elat in ext.collect()
+                if egrp != igrp
+            )
+            expect.append((iid, eid, int(d + 0.5)))
+        assert sorted(map(tuple, got)) == sorted(expect)
+        assert [(iid, eid) for iid, eid, _ in sorted(expect)] == [(100, 2), (200, 3)]
 
 
 class TestParser:

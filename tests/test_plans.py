@@ -3,6 +3,8 @@ be visible in the executed plan, not just implied by the code shape.
 
 - nearest fast path: no join operator, no hash-partition shuffle, Arrow
   mapInPandas over the iterated side, scan pruned to the referenced columns;
+- nearest with a condition the kernel cannot mask: the grid pass's cell
+  join, never a nested loop;
 - bbox predicate joins: broadcast hash join on grid-cell keys — never a
   nested loop or sort-merge — with the bbox window as the JVM residual, and
   each WKT's numbers extracted once;
@@ -34,11 +36,11 @@ def test_nearest_fast_path_has_no_join_no_hash_shuffle(spark):
     assert "ReadSchema: struct<c_custkey:bigint>" in plan
 
 
-def plans_run_by(spark, name: str):
-    """Query ``name``'s DataFrame, and its final executed plan plus the plan
-    of every SQL execution its build ran (j22's lazy barrier executes the
-    spatial join while the DataFrame is built; its final plan only reads
-    the checkpointed RDD)."""
+def plans_run_by(spark, build):
+    """The DataFrame ``build()`` returns, and its final executed plan plus
+    the plan of every SQL execution its build ran (j22's lazy barrier
+    executes the spatial join while the DataFrame is built, and the nearest
+    grid pass collects its cell census; the final plan shows neither)."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def execution(i: int):
@@ -47,7 +49,7 @@ def plans_run_by(spark, name: str):
     n = int(store.executionsCount())
     # by id, not by position: the store evicts its oldest executions
     mark = int(execution(n - 1).executionId()) if n else -1
-    df = QUERIES[name].fn(spark, SF)
+    df = build()
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     plans = [plan_of(df)]
     i = int(store.executionsCount()) - 1
@@ -75,7 +77,7 @@ def test_bbox_predicates_plan_broadcast_hash_join(spark):
     the exact DE-9IM refine is the only Python, and the regexp over a WKT
     column runs once per side (not again in each inferred null filter)."""
     for name, wkt_sides in _BBOX_BROADCAST_QUERIES.items():
-        df, plan = plans_run_by(spark, name)
+        df, plan = plans_run_by(spark, lambda: QUERIES[name].fn(spark, SF))
         assert "BroadcastHashJoin" in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "SortMergeJoin" not in plan, name
@@ -89,6 +91,43 @@ def test_bbox_predicates_plan_broadcast_hash_join(spark):
             assert py_op not in plan, f"{name}: unexpected python stage {py_op}"
         optimized = df._jdf.queryExecution().optimizedPlan().toString()
         assert optimized.count("regexp_extract_all") <= wkt_sides, name
+
+
+def test_nearest_unmaskable_condition_plans_no_nested_loop(spark):
+    """j10's inputs with its condition in parentheses, which the broadcast
+    kernel's parser rejects: the grid pass answers with j10's rows, and
+    neither the final plan nor any SQL execution its build runs holds a
+    BroadcastNestedLoopJoin."""
+    from spark_ml_spatialjointransformer_spark.operators.spatial_join import (
+        spatial_join,
+    )
+    from spark_ml_spatialjointransformer_spark.plans.config import (
+        PointColumns,
+        SideConfig,
+        SpatialJoinPlan,
+    )
+    from spark_ml_spatialjointransformer_spark.sources.tables import customers_geo
+
+    cust = customers_geo(spark, SF).select("c_custkey", "c_nationkey", "lon", "lat")
+    supp = suppliers_geo(spark, SF)
+    point = SideConfig(point_columns=PointColumns("lon", "lat"))
+    plan = SpatialJoinPlan(
+        predicate="nearest",
+        external_side=point,
+        input_side=point,
+        data_columns=(("s_suppkey", "supp_key"),),
+        distance_column="dist_m",
+        condition="(left.s_nationkey != right.c_nationkey)",
+        broadcast_input=False,
+        distance_kernel="haversine",
+        tie_break=("s_suppkey",),
+    )
+    df, plans = plans_run_by(spark, lambda: spatial_join(cust, supp, plan))
+    assert "BroadcastNestedLoopJoin" not in plans
+    assert "SortMergeJoin" in plans  # the grid pass's cell join
+    got = sorted(df.select("c_custkey", "supp_key", "dist_m").collect())
+    j10 = sorted(QUERIES["j10_nearest_other_nation"].fn(spark, SF).collect())
+    assert got == j10 and len(got) > 0
 
 
 def test_withindist_point_point_is_pure_jvm(spark):

@@ -585,7 +585,11 @@ class TestPartitionedNearest:
         assert out.count() == 0
         assert out.columns == ["id", "nrid", "dist_m"]
 
-    def test_validation(self, spark):
+    def test_wkt_external_side_matches_broadcast(self, spark):
+        """A WKT external side takes the grid pass through the centroid
+        columns every nearest route reads: nations as rectangles × customer
+        points returns the broadcast kernel's rows, for k = 1 and k = 3 and
+        both broadcast directions."""
         from spark_ml_spatialjointransformer_spark.operators.spatial_join import (
             spatial_join,
         )
@@ -594,21 +598,38 @@ class TestPartitionedNearest:
             SideConfig,
             SpatialJoinPlan,
         )
+        from spark_ml_spatialjointransformer_spark.sources.tables import (
+            customers_geo,
+            nations_rect,
+        )
+        from tests.test_plans import SF
 
-        P = SideConfig(point_columns=PointColumns("lon", "lat"))
-        W = SideConfig(wkt_column="wkt")
-        df = input_df(spark, SMOKE_INPUT)
-        # extra condition + k>1 are SUPPORTED under partitioned since r3
-        # (j17/j18 prove hash equality); only WKT sides stay rejected
-        with pytest.raises(ValueError, match="point geometry"):
-            spatial_join(
-                df,
-                df,
-                SpatialJoinPlan(
-                    predicate="nearest", external_side=W, input_side=P,
-                    data_columns=(("id", "id2"),), strategy="partitioned",
-                ),
+        cust = customers_geo(spark, SF).select("c_custkey", "lon", "lat")
+        nations = nations_rect(spark, SF)
+
+        def run(strategy, broadcast_input, k):
+            plan = SpatialJoinPlan(
+                predicate="nearest",
+                external_side=SideConfig(wkt_column="wkt"),
+                input_side=SideConfig(point_columns=PointColumns("lon", "lat")),
+                data_columns=(("n_nationkey", "nat_key"),),
+                distance_column="dist_m",
+                broadcast_input=broadcast_input,
+                distance_kernel="haversine",
+                # tie_break names broadcast-side columns
+                tie_break=("c_custkey",) if broadcast_input else ("n_nationkey",),
+                strategy=strategy,
+                k=k,
             )
+            return sorted(tuple(r) for r in spatial_join(cust, nations, plan).collect())
+
+        for broadcast_input in (False, True):
+            iterated = nations.count() if broadcast_input else cust.count()
+            for k in (1, 3):
+                expected = run("broadcast", broadcast_input, k)
+                assert len(expected) == k * iterated
+                got = run("partitioned", broadcast_input, k)
+                assert got == expected, (broadcast_input, k)
 
 
 def test_num_partitions_output_contract(spark):
@@ -642,7 +663,7 @@ def test_num_partitions_output_contract(spark):
                          tie_break=("poi_id",), **base), "repartition: input side"),
         (SpatialJoinPlan(predicate="nearest", broadcast_input=True,
                          condition="left.poi_id != right.id",
-                         tie_break=("id",), **base), "repartition: agg path"),
+                         tie_break=("id",), **base), "repartition: condition"),
         (SpatialJoinPlan(predicate="withindist 500000", broadcast_input=False,
                          strategy="partitioned", **base), "repartition: partitioned"),
     ]
@@ -714,9 +735,19 @@ def test_partitioned_bbox_predicates_match_broadcast(spark, predicate):
     assert len(got) > 0
 
 
-def test_knn_k3_with_condition_window_path(spark):
-    """k>1 nearest WITH an extra condition runs the row_number window path;
-    verify against a python brute force over the real sf0.001 tables."""
+@pytest.mark.parametrize(
+    "condition",
+    [
+        "left.s_nationkey != right.c_nationkey",
+        "(left.s_nationkey != right.c_nationkey)",
+    ],
+    ids=["kernel", "grid"],
+)
+def test_knn_k3_with_condition(spark, condition):
+    """k>1 nearest WITH an extra condition, verified against a python brute
+    force over the real sf0.001 tables: the plain spelling rides the
+    broadcast kernel as a mask, the parenthesised one (which the kernel's
+    parser rejects) takes the grid pass."""
     from spark_ml_spatialjointransformer_spark.functions.geodesic import haversine_np
     from spark_ml_spatialjointransformer_spark.operators.spatial_join import (
         spatial_join,
@@ -741,7 +772,7 @@ def test_knn_k3_with_condition_window_path(spark):
         input_side=P,
         data_columns=(("s_suppkey", "supp_key"),),
         distance_column="dist_m",
-        condition="left.s_nationkey != right.c_nationkey",
+        condition=condition,
         broadcast_input=False,
         distance_kernel="haversine",
         tie_break=("s_suppkey",),
