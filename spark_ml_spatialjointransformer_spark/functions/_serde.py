@@ -44,3 +44,29 @@ def ensure_udf_portability() -> None:
         # best-effort: falls back to by-reference pickling (package must then
         # be importable on executors, like any PySpark library)
         _registered = True
+
+
+def per_session(build):
+    """Memoize a UDF factory per (arguments, active SparkContext).
+
+    A UDF object pickles its function and creates its JVM handle on first
+    use; reusing it across ``transform()`` calls skips both.  Keying on the
+    context means a stopped session's handle is never reused."""
+    import functools
+    import weakref
+
+    built: dict = {}
+
+    @functools.wraps(build)
+    def get(*args):
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        hit = built.get(args)
+        if hit is not None and hit[0]() is sc:
+            return hit[1]
+        udf = build(*args)
+        built[args] = (weakref.ref(sc) if sc is not None else lambda: None, udf)
+        return udf
+
+    return get

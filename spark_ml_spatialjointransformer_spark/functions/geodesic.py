@@ -22,6 +22,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from spark_ml_spatialjointransformer_spark.functions._serde import per_session
+
 # WGS84
 _A = 6378137.0
 _F = 1.0 / 298.257223563
@@ -112,11 +114,12 @@ def haversine_np(lon1, lat1, lon2, lat2):
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
 
 
+@per_session
 def geodesic_distance_udf():
     """Arrow pandas_udf: (lon1, lat1, lon2, lat2) → meters (double, unrounded).
 
     Built lazily so importing this module does not require an active Spark
-    session.
+    session, and once per session.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -158,16 +161,21 @@ def haversine_expr(lon1, lat1, lon2, lat2):
     return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(h))
 
 
-def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
+def haversine_sql(
+    lon1: str, lat1: str, lon2: str, lat2: str, double_suffix: str = ""
+) -> str:
     """The exact same haversine formula as ANSI SQL text (for DuckDB oracles).
 
     Arithmetic is kept structurally identical to :func:`haversine_expr` so
-    both engines evaluate the same double-precision expression tree.
+    both engines evaluate the same double-precision expression tree.  With
+    ``double_suffix="D"`` the literals are Spark doubles and the text parses
+    to exactly the :func:`haversine_expr` tree.
     """
     rlat1 = f"radians({lat1})"
     rlat2 = f"radians({lat2})"
     sdlat = f"sin((radians({lat2}) - radians({lat1})) / 2)"
     sdlon = f"sin((radians({lon2}) - radians({lon1})) / 2)"
     h = f"({sdlat} * {sdlat} + cos({rlat1}) * cos({rlat2}) * {sdlon} * {sdlon})"
-    h = f"least(1.0, greatest(0.0, {h}))"  # same clamp as haversine_expr
-    return f"({2.0 * EARTH_RADIUS_M!r} * asin(sqrt({h})))"
+    d = double_suffix
+    h = f"least(1.0{d}, greatest(0.0{d}, {h}))"  # same clamp as haversine_expr
+    return f"({2.0 * EARTH_RADIUS_M!r}{d} * asin(sqrt({h})))"

@@ -101,10 +101,11 @@ def partitioned_nearest(
     k: int = 1,
 ) -> DataFrame:
     """For every left row, the ``k`` nearest right rows — no broadcast of
-    either side.  ``dist_expr(lx, ly, rx, ry) -> Column`` computes meters;
-    ``out_names`` = output columns in order left_id_cols ++ renamed
-    right_pay_cols (++ distance_column).  Ties break on (distance,
-    tie_break right columns, right insertion id) like the broadcast paths.
+    either side.  ``dist_expr(lx, ly, rx, ry) -> Column`` computes meters
+    from four column names; ``out_names`` = output columns in order
+    left_id_cols ++ renamed right_pay_cols (++ distance_column).  Ties
+    break on (distance, tie_break right columns, right insertion id) like
+    the broadcast paths.
 
     One pass: the cell-level bound ``D`` of a left cell is an upper bound
     on the k-th distance of each of its rows (≥ k right rows lie within
@@ -196,7 +197,7 @@ def partitioned_nearest(
                 # expression would clamp a null to 0 m)
                 F.when(
                     F.col("__rid").isNotNull(),
-                    dist_expr(F.col("__lx"), F.col("__ly"), F.col("__rx"), F.col("__ry")),
+                    dist_expr("__lx", "__ly", "__rx", "__ry"),
                 ),
             )
             .withColumn("__rn", F.row_number().over(rank))

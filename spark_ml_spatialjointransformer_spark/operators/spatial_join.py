@@ -46,6 +46,12 @@ Execution strategy (Spark-first, nothing leaves DataFrame land):
 - ties broken deterministically by (distance, tie_break cols, broadcast row
   order) on both routes — the reference leaves ties to index-traversal
   order (nondeterministic); we document and pin ours.
+
+Plan building: every derived column, filter and join condition is SQL text
+from the templates below (``plans/sqltext.py`` quotes names and writes
+exact double literals), applied one ``selectExpr``/``where`` per step, so
+a ``transform()`` costs ~110-140 Py4J commands (pinned ≤150 by
+tests/test_build_budget.py); the pandas UDFs are built once per session.
 """
 
 from __future__ import annotations
@@ -57,16 +63,17 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_ml_spatialjointransformer_spark.functions._serde import (
     ensure_udf_portability,
+    per_session,
 )
 from spark_ml_spatialjointransformer_spark.functions.geodesic import (
     geodesic_distance_udf,
-    haversine_expr,
+    haversine_sql,
 )
 from spark_ml_spatialjointransformer_spark.functions.geometry import (
     PREDICATE_FUNCS,
@@ -79,30 +86,39 @@ from spark_ml_spatialjointransformer_spark.functions.geometry import (
     rect_predicate_np,
 )
 from spark_ml_spatialjointransformer_spark.plans.config import (
+    PointColumns,
     SideConfig,
     SpatialJoinPlan,
     condition_external_columns,
     condition_input_columns,
     rewrite_condition,
 )
+from spark_ml_spatialjointransformer_spark.plans.sqltext import (
+    sql_col,
+    sql_double,
+    sql_ident,
+)
 
 EXT_PREFIX = "__sjt_e__"
-_NUM_PATTERN = r"[-+]?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][-+]?[0-9]+)?"
+# no backslash, so the SQL string literal reads the same whatever
+# spark.sql.parser.escapedStringLiterals says
+_NUM_PATTERN = "[-+]?(?:[0-9]+[.]?[0-9]*|[.][0-9]+)(?:[eE][-+]?[0-9]+)?"
 
 # geometry-kind capability flags per predicate
 _NEEDS_BBOX = {"withindist", "within", "contains", "intersects", "overlaps"}
 _NEEDS_REFINE = {"within", "contains", "intersects", "overlaps"}
 
 
-def _wkt_number_array(col: Column) -> Column:
-    """All numeric tokens of a WKT string as array<double> — pure JVM
+def _wkt_numbers(wkt: str) -> str:
+    """All numeric tokens of a WKT column as array<double> — pure JVM
     (regexp_extract_all + transform), stays in whole-stage codegen."""
-    return F.transform(
-        F.regexp_extract_all(col, F.lit(_NUM_PATTERN), F.lit(0)),
-        lambda x: x.cast("double"),
+    return (
+        f"transform(regexp_extract_all({wkt}, '{_NUM_PATTERN}', 0), "
+        "x -> CAST(x AS DOUBLE))"
     )
 
 
+@per_session
 def _wkt_centroid_udf():
     """Arrow pandas_udf: WKT → struct(x, y); nulls for unparseable input.
     Parse results are memoized per batch (broadcast sides repeat heavily)."""
@@ -136,6 +152,7 @@ def _wkt_centroid_udf():
     return _centroid.asNondeterministic()
 
 
+@per_session
 def _refine_udf(op: str, l_is_wkt: bool = True, r_is_wkt: bool = True):
     """Arrow pandas_udf evaluating ``op(left_geom, right_geom)`` over
     (wkt|point) encodings of both sides; unparseable/null geometry → False
@@ -282,19 +299,23 @@ def _prepare_side(
     wktc = f"__sjt_{tag}_wkt"
 
     if not side.is_wkt:
-        lon = F.col(side.point_columns.lon).cast("double")
-        lat = F.col(side.point_columns.lat).cast("double")
+        lon = f"CAST({sql_col(side.point_columns.lon)} AS DOUBLE)"
+        lat = f"CAST({sql_col(side.point_columns.lat)} AS DOUBLE)"
         # lenient coercion parity: DatasetGeometry.scala:90-96,105-107
-        df = df.where(lon.isNotNull() & lat.isNotNull())
+        df = df.where(f"{lon} IS NOT NULL AND {lat} IS NOT NULL")
+        derived: dict[str, str] = {}
         if need_centroid:
-            df = df.withColumns({gx: lon, gy: lat})
+            derived.update({gx: lon, gy: lat})
         if need_bbox:
-            df = df.withColumns({x0: lon, y0: lat, x1: lon, y1: lat})
+            derived.update({x0: lon, y0: lat, x1: lon, y1: lat})
         if need_wkt:
-            df = df.withColumn(wktc, F.lit(None).cast("string"))
-        return df
+            derived[wktc] = "CAST(NULL AS STRING)"
+        return df.selectExpr("*", *(f"{e} AS {n}" for n, e in derived.items()))
 
-    wcol = F.col(side.wkt_column)
+    wkt = sql_col(side.wkt_column)
+    # the side's last projection: everything, or, after the bbox generator,
+    # the columns it came with (its number array dropped) and the bbox
+    out = ["*"]
     if need_bbox:
         # the numbers are extracted once, into their own column, and the
         # four bbox values leave through a generator: Catalyst copies a
@@ -303,27 +324,31 @@ def _prepare_side(
         nums = f"__sjt_{tag}_nums"
         xs = f"filter({nums}, (v, i) -> i % 2 = 0)"
         ys = f"filter({nums}, (v, i) -> i % 2 = 1)"
+        out = [*map(sql_ident, df.columns), x0, y0, x1, y1]
         df = (
-            df.withColumn(nums, _wkt_number_array(wcol))
+            df.selectExpr("*", f"{_wkt_numbers(wkt)} AS {nums}")
             .selectExpr(
                 "*",
                 f"inline(array(named_struct('{x0}', array_min({xs}), "
                 f"'{y0}', array_min({ys}), '{x1}', array_max({xs}), "
                 f"'{y1}', array_max({ys}))))",
             )
-            .drop(nums)
+            .where(f"{x0} IS NOT NULL AND {y0} IS NOT NULL")
         )
-        df = df.where(F.col(x0).isNotNull() & F.col(y0).isNotNull())
     else:
         # null-geometry drop without bbox columns
-        df = df.where(F.size(_wkt_number_array(wcol)) >= 2)
+        df = df.where(f"size({_wkt_numbers(wkt)}) >= 2")
     if need_centroid:
-        c = _wkt_centroid_udf()(wcol)
+        # the centroid UDF is nondeterministic, so no projection moves
+        # across it: the number array goes before it
+        if out != ["*"]:
+            df, out = df.selectExpr(*out), ["*"]
+        c = _wkt_centroid_udf()(side.wkt_column)
         df = df.withColumns({gx: c.getField("x"), gy: c.getField("y")})
-        df = df.where(F.col(gx).isNotNull())
+        df = df.where(f"{gx} IS NOT NULL")
     if need_wkt:
-        df = df.withColumn(wktc, wcol.cast("string"))
-    return df
+        out.append(f"CAST({wkt} AS STRING) AS {wktc}")
+    return df if out == ["*"] else df.selectExpr(*out)
 
 
 #: withindist grid binning: the bin width is DECOUPLED from the radius (a
@@ -345,14 +370,15 @@ _MPD_LON_CHORD = 70600.0
 _PHI_CAP_DEG = 89.99
 
 
-def _lon_window_deg(radius_m: float, d: float, phi_basis: Column) -> Column:
+def _lon_window_deg(radius_m: float, d: float, phi_basis: str) -> str:
     """Safe longitude half-window (degrees) for a side whose partner's
     latitude can reach ``|phi_basis| + d`` (the inflated lat window):
     ``radius / (70600 · cos(φmax))``, capped so near-pole rows get the
     'whole circle' sentinel (≥ 180)."""
-    phi_max = F.least(F.lit(_PHI_CAP_DEG), F.abs(phi_basis) + F.lit(d))
-    return F.least(
-        F.lit(360.0), F.lit(radius_m / _MPD_LON_CHORD) / F.cos(F.radians(phi_max))
+    phi_max = f"least({sql_double(_PHI_CAP_DEG)}, abs({phi_basis}) + {sql_double(d)})"
+    return (
+        f"least(360.0D, {sql_double(radius_m / _MPD_LON_CHORD)} / "
+        f"cos(radians({phi_max})))"
     )
 
 
@@ -364,7 +390,7 @@ def _withindist_bins(
     d: float,
     radius_m: float,
     lon_binnable: bool,
-) -> tuple[DataFrame, DataFrame, Column]:
+) -> tuple[DataFrame, DataFrame, str]:
     """Discretize the distance join into grid-cell equi-keys so Catalyst
     plans a hash join (broadcast or shuffled) with O(cell-density) probe
     cost instead of a nested loop over every broadcast row.
@@ -382,46 +408,38 @@ def _withindist_bins(
       (a globe-spanning polygon would otherwise explode quadratically).
 
     Returns ``(left, right, condition)`` with the bin columns attached and
-    the full coarse spatial condition (equi-keys + dedup + degree windows).
-    The exact meter re-filter stays downstream (SpatialJoin.scala:353-368).
+    the full coarse spatial condition (equi-keys + dedup + degree windows)
+    as SQL text.  The exact meter re-filter stays downstream
+    (SpatialJoin.scala:353-368).
     """
     w = max(_BIN_W_MIN, min(_BIN_W_MAX, d))
-    dd, ww = F.lit(float(d)), F.lit(float(w))
-    ly0, ly1 = F.col(f"__sjt_{lt}_y0"), F.col(f"__sjt_{lt}_y1")
-    ry0, ry1 = F.col(f"__sjt_{rt}_y0"), F.col(f"__sjt_{rt}_y1")
+    dd, ww = sql_double(d), sql_double(w)
+    ly0, ly1 = f"__sjt_{lt}_y0", f"__sjt_{lt}_y1"
+    ry0, ry1 = f"__sjt_{rt}_y0", f"__sjt_{rt}_y1"
     lat_lo, lat_hi = math.floor(-90.0 / w), math.floor(90.0 / w)
 
-    def clamped_seq(lo: Column, hi: Column, lo_lim: int, hi_lim: int) -> Column:
-        lo = F.greatest(lo, F.lit(lo_lim))
-        hi = F.least(hi, F.lit(hi_lim))
-        return F.when(lo <= hi, F.sequence(lo, hi)).otherwise(
-            F.array().cast("array<bigint>")
+    def clamped_seq(lo: str, hi: str, lo_lim: int, hi_lim: int) -> str:
+        lo, hi = f"greatest({lo}, {lo_lim})", f"least({hi}, {hi_lim})"
+        return (
+            f"CASE WHEN {lo} <= {hi} THEN sequence({lo}, {hi}) "
+            "ELSE CAST(array() AS ARRAY<BIGINT>) END"
         )
 
-    left = left.withColumn(
-        "__sjt_bin_l",
-        F.explode(clamped_seq(F.floor(ly0 / ww), F.floor(ly1 / ww), lat_lo, lat_hi)),
+    lat_l = clamped_seq(f"floor({ly0} / {ww})", f"floor({ly1} / {ww})", lat_lo, lat_hi)
+    lat_r = clamped_seq(
+        f"floor(({ry0} - {dd}) / {ww})", f"floor(({ry1} + {dd}) / {ww})", lat_lo, lat_hi
     )
-    right = right.withColumn(
-        "__sjt_bin_r",
-        F.explode(
-            clamped_seq(
-                F.floor((ry0 - dd) / ww), F.floor((ry1 + dd) / ww), lat_lo, lat_hi
-            )
-        ),
-    )
-    ref_bin = F.greatest(
-        F.floor(F.greatest(ly0, ry0 - dd) / ww), F.lit(lat_lo)
-    )
+    # the left side's bins go on in one projection, built up below
+    left_bins = ["*", f"explode({lat_l}) AS __sjt_bin_l"]
+    right = right.selectExpr("*", f"explode({lat_r}) AS __sjt_bin_r")
+    ref_bin = f"greatest(floor(greatest({ly0}, {ry0} - {dd}) / {ww}), {lat_lo})"
     cond = (
-        (F.col("__sjt_bin_l") == F.col("__sjt_bin_r"))
-        & (F.col("__sjt_bin_l") == ref_bin)
-        & (ly0 - dd <= ry1)
-        & (ly1 + dd >= ry0)
+        f"__sjt_bin_l = __sjt_bin_r AND __sjt_bin_l = {ref_bin} "
+        f"AND {ly0} - {dd} <= {ry1} AND {ly1} + {dd} >= {ry0}"
     )
 
-    lx0, lx1 = F.col(f"__sjt_{lt}_x0"), F.col(f"__sjt_{lt}_x1")
-    rx0, rx1 = F.col(f"__sjt_{rt}_x0"), F.col(f"__sjt_{rt}_x1")
+    lx0, lx1 = f"__sjt_{lt}_x0", f"__sjt_{lt}_x1"
+    rx0, rx1 = f"__sjt_{rt}_x0", f"__sjt_{rt}_x1"
 
     if not lon_binnable:
         # longitude window with antimeridian wraparound stays residual: a
@@ -430,17 +448,15 @@ def _withindist_bins(
         # geodesic refine is wraparound-correct, so the prefilter must be).
         # The half-window is latitude-aware; near-pole rows (dl ≥ 180)
         # place no longitude constraint at all.
-        dl = _lon_window_deg(radius_m, d, F.greatest(F.abs(ry0), F.abs(ry1)))
-        wide = dl >= F.lit(180.0)
-
-        def lon_ok(shift: float) -> Column:
-            return (lx0 - dl <= rx1 + shift) & (lx1 + dl >= rx0 + shift)
-
-        return (
-            left,
-            right,
-            cond & (wide | lon_ok(0.0) | lon_ok(360.0) | lon_ok(-360.0)),
-        )
+        dl = _lon_window_deg(radius_m, d, f"greatest(abs({ry0}), abs({ry1}))")
+        # parenthesized: the SQL parser balances a chain of four ORs
+        lon_ok = f"{dl} >= 180.0D"
+        for s in (0.0, 360.0, -360.0):
+            lon_ok = (
+                f"({lon_ok} OR ({lx0} - {dl} <= {rx1} + {sql_double(s)} "
+                f"AND {lx1} + {dl} >= {rx0} + {sql_double(s)}))"
+            )
+        return left.selectExpr(*left_bins), right, f"{cond} AND {lon_ok}"
 
     lon_lo, lon_hi = math.floor(-180.0 / w), math.floor(180.0 / w)
     # clamp the left bin into the same [lon_lo, lon_hi] domain as the right
@@ -448,66 +464,56 @@ def _withindist_bins(
     # (dirty data) then behaves like boundary data instead of silently
     # matching nothing (in-domain rows are unaffected — floor(lx0/ww) is
     # already inside the clamp range)
-    left = left.withColumn(
-        "__sjt_lbin_l",
-        F.greatest(F.least(F.floor(lx0 / ww), F.lit(lon_hi)), F.lit(lon_lo)),
+    left_bins.append(
+        f"greatest(least(floor({lx0} / {ww}), {lon_hi}), {lon_lo}) AS __sjt_lbin_l"
     )
-
-    def _bin_shift_struct(shift: float):
-        # single-arg lambda: a 2-arg lambda would be read by F.transform as
-        # its (element, index) variant and bind the shift to the array index
-        return lambda b: F.struct(b.alias("bin"), F.lit(shift).alias("sh"))
 
     # per-row latitude-aware half-window; rows whose window reaches the
     # whole circle (dl ≥ 180) emit every cell in the s=0 frame only, so a
     # pair matches exactly one (bin, shift) and needs no dedup
     dl = _lon_window_deg(radius_m, d, ry0)
-    wide = dl >= F.lit(180.0)
-    full_range = F.transform(
-        F.sequence(F.lit(lon_lo), F.lit(lon_hi)), _bin_shift_struct(0.0)
-    )
+    wide = f"{dl} >= 180.0D"
+    empty = "CAST(array() AS ARRAY<STRUCT<bin: BIGINT, sh: DOUBLE>>)"
+
+    def bin_shift(seq: str, s: float) -> str:
+        return f"transform({seq}, x -> struct(x AS bin, {sql_double(s)} AS sh))"
+
     arrs = []
     for s in (-360.0, 0.0, 360.0):
-        lo = F.greatest(F.floor((rx0 + s - dl) / ww), F.lit(lon_lo))
-        hi = F.least(F.floor((rx1 + s + dl) / ww), F.lit(lon_hi))
-        normal = F.when(
-            lo <= hi, F.transform(F.sequence(lo, hi), _bin_shift_struct(s))
-        ).otherwise(F.array().cast("array<struct<bin:bigint,sh:double>>"))
-        if s == 0.0:
-            arrs.append(F.when(wide, full_range).otherwise(normal))
-        else:
-            arrs.append(
-                F.when(
-                    wide, F.array().cast("array<struct<bin:bigint,sh:double>>")
-                ).otherwise(normal)
-            )
-    right = (
-        right.withColumn("__sjt_lonbin", F.explode(F.concat(*arrs)))
-        .withColumn("__sjt_lbin_r", F.col("__sjt_lonbin.bin"))
-        .withColumn("__sjt_sh", F.col("__sjt_lonbin.sh"))
-        .drop("__sjt_lonbin")
+        lo = f"greatest(floor(({rx0} + {sql_double(s)} - {dl}) / {ww}), {lon_lo})"
+        hi = f"least(floor(({rx1} + {sql_double(s)} + {dl}) / {ww}), {lon_hi})"
+        normal = (
+            f"CASE WHEN {lo} <= {hi} THEN {bin_shift(f'sequence({lo}, {hi})', s)} "
+            f"ELSE {empty} END"
+        )
+        if_wide = bin_shift(f"sequence({lon_lo}, {lon_hi})", s) if s == 0.0 else empty
+        arrs.append(f"CASE WHEN {wide} THEN {if_wide} ELSE {normal} END")
+    right = right.selectExpr(
+        "*", f"explode(concat({', '.join(arrs)})) AS __sjt_lonbin"
+    ).selectExpr(
+        *map(sql_ident, right.columns),
+        "__sjt_lonbin.bin AS __sjt_lbin_r",
+        "__sjt_lonbin.sh AS __sjt_sh",
     )
-    sh = F.col("__sjt_sh")
-    dl_post = _lon_window_deg(radius_m, d, F.col(f"__sjt_{rt}_y0"))
-    wide_post = dl_post >= F.lit(180.0)
-    lon_ref = F.least(
-        F.greatest(
-            F.floor(F.greatest(lx0, rx0 + sh - dl_post) / ww), F.lit(lon_lo)
-        ),
-        F.lit(lon_hi),
+    lon_ref = (
+        f"least(greatest(floor(greatest({lx0}, {rx0} + __sjt_sh - {dl}) / {ww}), "
+        f"{lon_lo}), {lon_hi})"
     )
-    lon_cond = F.when(wide_post, F.lit(True)).otherwise(
-        (F.col("__sjt_lbin_l") == lon_ref)
-        & (lx0 - dl_post <= rx1 + sh)
-        & (lx1 + dl_post >= rx0 + sh)
+    lon_cond = (
+        f"CASE WHEN {wide} THEN true ELSE __sjt_lbin_l = {lon_ref} "
+        f"AND {lx0} - {dl} <= {rx1} + __sjt_sh "
+        f"AND {lx1} + {dl} >= {rx0} + __sjt_sh END"
     )
-    cond = cond & (F.col("__sjt_lbin_l") == F.col("__sjt_lbin_r")) & lon_cond
-    return left, right, cond
+    return (
+        left.selectExpr(*left_bins),
+        right,
+        f"{cond} AND __sjt_lbin_l = __sjt_lbin_r AND {lon_cond}",
+    )
 
 
 def _bbox_bins(
     op: str, left: DataFrame, right: DataFrame, lt: str, rt: str
-) -> tuple[DataFrame, DataFrame, Column]:
+) -> tuple[DataFrame, DataFrame, str]:
     """Grid-cell equi-keys for the bbox predicates (within / contains /
     intersects / overlaps), under either strategy: with the right side
     broadcast Catalyst plans a BroadcastHashJoin, without it a shuffled
@@ -527,9 +533,7 @@ def _bbox_bins(
 
     Returns ``(left, right, condition)`` with the cell columns attached and
     the full coarse condition (equi-keys + dedup + the precise bbox
-    window); the exact DE-9IM refine runs downstream.  Keys and condition
-    are SQL text: one parse per side instead of a Py4J call per Column
-    node keeps the plan build cheap.
+    window) as SQL text; the exact DE-9IM refine runs downstream.
     """
     w = _BIN_W_MAX
     lims = {
@@ -582,7 +586,7 @@ def _bbox_bins(
             for a in ("x", "y")
         ]
     left, right = keyed[lt](left, lt), keyed[rt](right, rt)
-    return left, right, F.expr(" AND ".join(keys + window))
+    return left, right, " AND ".join(keys + window)
 
 
 def prepare_external(df: DataFrame, plan: SpatialJoinPlan) -> DataFrame:
@@ -612,24 +616,23 @@ def prepare_external(df: DataFrame, plan: SpatialJoinPlan) -> DataFrame:
     for c in geom_cols + tb_here + condition_external_columns(plan.condition):
         if c and c not in keep:
             keep.append(c)
-    df = df.select(*keep)
-
+    prefixed = [f"{sql_col(c)} AS {sql_ident(EXT_PREFIX + c)}" for c in keep]
     if plan.num_partitions:
-        df = df.repartition(plan.num_partitions)
-    return df.select([F.col(c).alias(f"{EXT_PREFIX}{c}") for c in df.columns])
+        df = df.selectExpr(*map(sql_col, keep)).repartition(plan.num_partitions)
+    return df.selectExpr(*prefixed)
 
 
 def _prefixed_side(side: SideConfig) -> SideConfig:
-    from spark_ml_spatialjointransformer_spark.plans.config import PointColumns
+    """The external side's geometry columns in the ``__sjt_e__`` namespace,
+    backtick-quoted so they name exactly the columns prepare_external made."""
+
+    def name(c: str) -> str:
+        return sql_ident(f"{EXT_PREFIX}{c}")
 
     if side.is_wkt:
-        return SideConfig(wkt_column=f"{EXT_PREFIX}{side.wkt_column}")
-    return SideConfig(
-        point_columns=PointColumns(
-            f"{EXT_PREFIX}{side.point_columns.lon}",
-            f"{EXT_PREFIX}{side.point_columns.lat}",
-        )
-    )
+        return SideConfig(wkt_column=name(side.wkt_column))
+    lon, lat = side.point_columns.lon, side.point_columns.lat
+    return SideConfig(point_columns=PointColumns(name(lon), name(lat)))
 
 
 def spatial_join(
@@ -724,7 +727,7 @@ def _compile_spatial_join(
         left = ensure_min_parallelism(left)
 
     if op == "nearest":
-        return _broadcast_knn(left, right, lt, plan, routing, inp, ext, cond_spec)
+        return _broadcast_knn(left, right, lt, plan, routing, cond_spec)
 
     if op == "withindist":
         l_cfg = ext_side if lt == "e" else plan.input_side
@@ -740,70 +743,59 @@ def _compile_spatial_join(
         )
     else:
         left, right, cond = _bbox_bins(op, left, right, lt, rt)
+    on = F.expr(cond)
     if plan.condition:
         rewritten = rewrite_condition(plan.condition, EXT_PREFIX)
         _validate_condition_syntax(input_df, rewritten, plan.condition)
-        cond = cond & F.expr(rewritten)
+        on = on & F.expr(rewritten)
 
     # the strategy is only a broadcast hint: ``partitioned`` lets both
     # sides shuffle on the grid-cell equi-keys (sort-merge/shuffled-hash
     # under AQE, skew-split on hot cells) for big×big joins
     joined = left.join(
         right if plan.strategy == "partitioned" else F.broadcast(right),
-        on=cond,
+        on=on,
         how="inner",
     )
 
     if need_refine:
-        def side_args(tag: str, side: SideConfig):
+        def side_args(tag: str, side: SideConfig) -> list[str]:
             if side.is_wkt:
-                return [
-                    F.col(f"__sjt_{tag}_wkt"),
-                    F.lit(None).cast("double"),
-                    F.lit(None).cast("double"),
-                ]
+                return [f"__sjt_{tag}_wkt", "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)"]
+            lon, lat = side.point_columns.lon, side.point_columns.lat
             return [
-                F.lit(None).cast("string"),
-                F.col(side.point_columns.lon).cast("double"),
-                F.col(side.point_columns.lat).cast("double"),
+                "CAST(NULL AS STRING)",
+                f"CAST({sql_col(lon)} AS DOUBLE)",
+                f"CAST({sql_col(lat)} AS DOUBLE)",
             ]
 
         l_side = ext_side if lt == "e" else plan.input_side
         r_side = plan.input_side if rt == "i" else ext_side
+        args = side_args(lt, l_side) + side_args(rt, r_side)
         joined = joined.where(
-            _refine_udf(op, l_side.is_wkt, r_side.is_wkt)(
-                *side_args(lt, l_side), *side_args(rt, r_side)
-            )
+            _refine_udf(op, l_side.is_wkt, r_side.is_wkt)(*map(F.expr, args))
         )
 
     if need_dist:
-        args = (
-            F.col("__sjt_e_gx"),
-            F.col("__sjt_e_gy"),
-            F.col("__sjt_i_gx"),
-            F.col("__sjt_i_gy"),
-        )
+        args = ["__sjt_e_gx", "__sjt_e_gy", "__sjt_i_gx", "__sjt_i_gy"]
         if plan.distance_kernel == "haversine":
-            dist = haversine_expr(*args)
+            hav = haversine_sql(*args, double_suffix="D")
+            joined = joined.selectExpr("*", f"{hav} AS __sjt_dist")
         else:
-            dist = geodesic_distance_udf()(*args)
-        joined = joined.withColumn("__sjt_dist", dist)
+            joined = joined.withColumn("__sjt_dist", geodesic_distance_udf()(*args))
 
+    dist_m = "CAST(round(__sjt_dist) AS INT)"
     if op == "withindist":
         # exact re-filter on rounded Int meters: BroadcastSpatialJoin.scala:353-368
-        joined = joined.where(
-            F.round(F.col("__sjt_dist")).cast("int") <= int(plan.radius_meters)
-        )
+        joined = joined.where(f"{dist_m} <= {int(plan.radius_meters)}")
 
     # output assembly: input cols ++ selected external ++ distance
-    out_cols: list[Column] = [F.col(c) for c in input_cols]
+    out_cols = [sql_ident(c) for c in input_cols]
     for name, alias in plan.data_columns:
-        out_cols.append(F.col(f"{EXT_PREFIX}{name}").alias(alias))
+        out_cols.append(f"{sql_ident(EXT_PREFIX + name)} AS {sql_ident(alias)}")
     if plan.distance_column:
-        out_cols.append(
-            F.round(F.col("__sjt_dist")).cast("int").alias(plan.distance_column)
-        )
-    return joined.select(*out_cols)
+        out_cols.append(f"{dist_m} AS {sql_ident(plan.distance_column)}")
+    return joined.selectExpr(*out_cols)
 
 
 def _validate_condition_syntax(df: DataFrame, rewritten: str, original: str) -> None:
@@ -880,16 +872,14 @@ def _partitioned_nearest_route(
         rewritten = rewrite_condition(plan.condition, EXT_PREFIX)
         _validate_condition_syntax(left, rewritten, plan.condition)
         cond_col = F.expr(rewritten)
-        ext_cond = [
-            f"{EXT_PREFIX}{c}" for c in condition_external_columns(plan.condition)
-        ]
+        ext_cond = [EXT_PREFIX + c for c in condition_external_columns(plan.condition)]
         inp_cond = condition_input_columns(plan.condition)
         l_extra, r_extra = (
             (inp_cond, ext_cond) if lt == "i" else (ext_cond, inp_cond)
         )
 
     dist_fn = (
-        haversine_expr
+        (lambda *xy: F.expr(haversine_sql(*xy, double_suffix="D")))
         if plan.distance_kernel == "haversine"
         else geodesic_distance_udf()
     )
@@ -993,8 +983,6 @@ def _broadcast_knn(
     lt: str,
     plan: SpatialJoinPlan,
     routing: _NearestRouting,
-    inp: DataFrame,
-    ext: DataFrame,
     cond_spec: "tuple[str, str, str] | None" = None,
 ) -> DataFrame:
     """``nearest`` fast path: the broadcast side is collected (it must fit in
@@ -1027,12 +1015,12 @@ def _broadcast_knn(
     # unlike toPandas' float64 coercion of nullable ints)
     rt_tag = "i" if lt == "e" else "e"
     npay = len(pay_src)
-    sel = right.select(
-        *[F.col(c).alias(f"__pay{i}") for i, c in enumerate(pay_src)],
-        F.col(f"__sjt_{rt_tag}_gx").alias("__gx"),
-        F.col(f"__sjt_{rt_tag}_gy").alias("__gy"),
-        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(tb)],
-        *([F.col(bc_cond_col).alias("__cnd")] if bc_cond_col else []),
+    sel = right.selectExpr(
+        *[f"{sql_ident(c)} AS __pay{i}" for i, c in enumerate(pay_src)],
+        f"__sjt_{rt_tag}_gx AS __gx",
+        f"__sjt_{rt_tag}_gy AS __gy",
+        *[f"{sql_col(c)} AS __tb{i}" for i, c in enumerate(tb)],
+        *([f"{sql_col(bc_cond_col)} AS __cnd"] if bc_cond_col else []),
     )
     # Arrow transfer when every column is timezone-free: ~2-3x cheaper than
     # the pickled-Row path for a 10k+-row broadcast side (measured r11:
@@ -1102,16 +1090,17 @@ def _broadcast_knn(
     )
     bc = spark.sparkContext.broadcast((r_lon, r_lat, r_payload, r_cond))
 
-    # ---- output schema: input cols ++ aliased data cols ++ distance
-    src_fields = {f.name: f for f in inp.schema.fields}
-    ext_fields = {f.name: f for f in ext.schema.fields}
+    # ---- output schema: input cols ++ aliased data cols ++ distance, read
+    # off the iterated side and the broadcast projection already resolved
+    src_fields = {f.name: f for f in left.schema.fields}
+    src_fields.update(zip(pay_src, sel.schema.fields))
     input_cols = routing.left_keep if lt == "i" else routing.right_pay
     fields = [
         T.StructField(c, src_fields[c].dataType, src_fields[c].nullable)
         for c in input_cols
     ]
     for name, alias in plan.data_columns:
-        f = ext_fields[f"{EXT_PREFIX}{name}"]
+        f = src_fields[f"{EXT_PREFIX}{name}"]
         fields.append(T.StructField(alias, f.dataType, True))
     if plan.distance_column:
         fields.append(T.StructField(plan.distance_column, T.IntegerType(), True))

@@ -16,6 +16,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from spark_ml_spatialjointransformer_spark.plans.sqltext import name_parts, sql_ident
 from spark_ml_spatialjointransformer_spark.toolbox import extract_number, split_trim
 
 PREDICATES = ("withindist", "within", "contains", "intersects", "overlaps", "nearest")
@@ -94,8 +95,21 @@ def check_geom_params(wkt: str, point: str, side: str) -> None:
         )
 
 
-_LEFT_REF = re.compile(r"\bleft\.([A-Za-z_][A-Za-z0-9_]*)")
-_RIGHT_REF = re.compile(r"\bright\.([A-Za-z_][A-Za-z0-9_]*)")
+#: ``left.<name>`` / ``right.<name>``: a plain identifier or a
+#: backtick-quoted one (``left.`site id` ``, a doubled backtick inside)
+_COND_NAME = r"(`(?:[^`]|``)+`|[A-Za-z_][A-Za-z0-9_]*)"
+_LEFT_REF = re.compile(r"\bleft\." + _COND_NAME)
+_RIGHT_REF = re.compile(r"\bright\." + _COND_NAME)
+
+
+def _ref_name(m: re.Match) -> str:
+    """The exact column name a ``left.``/``right.`` reference names."""
+    (name,) = name_parts(m.group(1))
+    return name
+
+
+def _ref_names(ref: re.Pattern, condition: str) -> list[str]:
+    return list(dict.fromkeys(_ref_name(m) for m in ref.finditer(condition or "")))
 
 
 def condition_external_columns(condition: str) -> list[str]:
@@ -109,23 +123,13 @@ def condition_external_columns(condition: str) -> list[str]:
     513-529) generalized from the two hardcoded strings to any SQL expression —
     the generalization the reference's own TODO asks for (:509).
     """
-    cond = condition or ""
-    seen: list[str] = []
-    for m in _LEFT_REF.finditer(cond):
-        if m.group(1) not in seen:
-            seen.append(m.group(1))
-    return seen
+    return _ref_names(_LEFT_REF, condition)
 
 
 def condition_input_columns(condition: str) -> list[str]:
     """Input-side columns referenced by the extra condition (``right.Y`` in
     the reference grammar — the transformer input side)."""
-    cond = condition or ""
-    seen: list[str] = []
-    for m in _RIGHT_REF.finditer(cond):
-        if m.group(1) not in seen:
-            seen.append(m.group(1))
-    return seen
+    return _ref_names(_RIGHT_REF, condition)
 
 
 def rewrite_condition(condition: str, ext_prefix: str) -> str:
@@ -134,8 +138,8 @@ def rewrite_condition(condition: str, ext_prefix: str) -> str:
 
     Returns a Spark SQL boolean expression string usable in ``F.expr``.
     """
-    cond = _LEFT_REF.sub(lambda m: f"`{ext_prefix}{m.group(1)}`", condition)
-    cond = _RIGHT_REF.sub(lambda m: f"`{m.group(1)}`", cond)
+    cond = _LEFT_REF.sub(lambda m: sql_ident(ext_prefix + _ref_name(m)), condition)
+    cond = _RIGHT_REF.sub(lambda m: sql_ident(_ref_name(m)), cond)
     return cond
 
 
