@@ -1,6 +1,7 @@
 """Benchmark harness: run the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) on the session of
+``session.local_session`` (local[<nproc>] unless $SPARK_GRAFT_CPUS says
+otherwise) and print ONE JSON line.
 
 Each query is executed to completion with the noop sink (full plan runs,
 nothing collected to the driver).  A warmup pass on sf0.001 triggers JVM/
@@ -10,9 +11,10 @@ Record layout (the driver keeps only the last ~2000 chars of stdout, so
 the full registry cannot fit in the one stdout line):
 
 - the COMPLETE per-query record — timings, every raw rep list, failures,
-  load averages — is written to ``BENCH_LOCAL_r{N}.json`` at the repo
-  root (N inferred from the committed driver artifacts) and committed
-  each round, so every query is in the permanent record;
+  load averages, the commit and the session's size — is written to
+  ``BENCH_LOCAL_r{N}.json`` at the repo root (N inferred from the
+  committed round records, see ``infer_round``) and committed each round,
+  so every query is in the permanent record;
 - the FINAL stdout line is a compact JSON dict whose ``queries`` key
   holds only the headline set: the f-family flagships, the 10 slowest,
   every query absent from the committed baseline (i.e. new this round),
@@ -24,14 +26,14 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import SparkSession
-
 from spark_ml_spatialjointransformer_spark.queries import QUERIES
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 WARMUP_SF_DIR = "/root/testdata/sf0.001"
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
@@ -113,6 +115,26 @@ def reps_converged(
     if baseline is not None:
         return best <= baseline * base_tol or len(rr) >= 3
     return len(rr) >= 3
+
+
+def provenance(spark) -> dict:
+    """Where a record comes from, read off its session; the field names
+    are those of ``perfbench/run.py``'s record."""
+    import pyspark
+
+    try:
+        git = ["git", "rev-parse", "HEAD"]
+        sha = subprocess.run(git, cwd=REPO_ROOT, capture_output=True, text=True).stdout
+    except OSError:
+        sha = ""
+    return {
+        "git_sha": sha.strip() or None,
+        "nproc": len(os.sched_getaffinity(0)),
+        "spark_master": spark.sparkContext.master,
+        "driver_heap": spark.sparkContext.getConf().get("spark.driver.memory"),
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "spark": pyspark.__version__,
+    }
 
 
 def clear_session_state(spark) -> None:
@@ -198,38 +220,13 @@ def wait_for_idle_box(max_load: float, wait_s: float) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
     load_start = wait_for_idle_box(
         float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0")),
         float(os.environ.get("SPARK_GRAFT_LOAD_WAIT", "900")),
     )
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sjt-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        # 32g, NOT the box's full 128g: on a 96g heap the checkpoint-loop
-        # queries (partitioned kNN, closure) ran 2-8x slower with wild
-        # variance (13-43s for a 5.4s query) — G1 defers collection on a
-        # huge heap until mixed cycles land mid-query; at 24-32g the same
-        # queries are stable.  Measured r6: j18 96g=13-43s, 24g=5.4s warm.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        # NOT set: -XX:ReservedCodeCacheSize.  A mid-run step in the
-        # ratio-vs-execution-order profile (queries past ~position 50
-        # reading a flat ~1.3-1.4x of baseline) suggested code-cache
-        # exhaustion; a full run with a 1 GB cache REJECTED it — the
-        # inflation moved (a 3x window at positions 125-174 with reps
-        # recovering monotonically 76->20 s), i.e. an external
-        # interference transient, not a JVM limit (r9 continuation log).
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-bench")
 
     # warmup: one full pass at sf0.001 — spawns the python worker pool,
     # compiles every query's generated code (the 64-aggregate minhash
@@ -348,6 +345,7 @@ def main() -> None:
         "control_reps": control_reps,
         "load_avg": load_avg,
         "sf": sf_val,
+        **provenance(spark),
     }
     record_path = os.path.join(REPO_ROOT, f"BENCH_LOCAL_r{infer_round():02d}.json")
     try:

@@ -15,30 +15,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 import bench
 from spark_ml_spatialjointransformer_spark.queries import QUERIES
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sjt-bench-subset")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-bench-subset")
     for name in names:
         try:
             bench.run(QUERIES[name].fn(spark, bench.WARMUP_SF_DIR))

@@ -19,27 +19,15 @@ from examples.full_sweep import TABLES, normalize, value_hash
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     from spark_ml_spatialjointransformer_spark.queries import QUERIES
+    from spark_ml_spatialjointransformer_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("check-queries")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("check-queries")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -14,8 +14,9 @@ scratch directory (`spark-<uuid>/userFiles-<uuid>`), then lists the
 queries whose two dumps differ (all queries dumped under both labels when
 none are named).  It exits 1 when any differ.
 
-The session runs `local[<nproc>]` (`SPARK_GRAFT_CPUS` overrides the CPU
-count) with a driver heap of a quarter of physical memory.
+The session comes from `session.local_session`: `local[<nproc>]`
+(`SPARK_GRAFT_CPUS` overrides the CPU count), which sets the shuffle
+partitions printed in the plans.
 """
 
 from __future__ import annotations
@@ -36,15 +37,6 @@ _MASKS = (
     (re.compile(r"\b(lambda [xyz])_\d+"), r"\1"),
     (re.compile(r"/spark-[0-9a-f-]{36}/userFiles-[0-9a-f-]{36}/"), "/spark-*/userFiles-*/"),
 )
-
-
-def _default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-
-
-def _default_heap() -> str:
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{max(1, phys // 4 // 1024**3)}g"
 
 
 def mask(text: str) -> str:
@@ -93,24 +85,10 @@ def main() -> None:
     if not args.names:
         ap.error("name at least one query to dump")
 
-    from pyspark.sql import SparkSession
-
     from spark_ml_spatialjointransformer_spark.queries import QUERIES
+    from spark_ml_spatialjointransformer_spark.session import local_session
 
-    cpus = _default_cpus()
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", _default_heap())
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("dump-plans")
     os.makedirs(outdir, exist_ok=True)
     for name in args.names:
         qe = QUERIES[name].fn(spark, args.sf_dir)._jdf.queryExecution()

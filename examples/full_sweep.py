@@ -3,13 +3,13 @@
 Runs EVERY registered query against its DuckDB oracle at the driver's
 scale factor (sf0.01 by default) and writes one row per query —
 rows/schema/value-hash match, in the driver's comparison style — to
-``CORRECTNESS_FULL_r{N}.json`` at the repo root.  The driver's own
-CORRECTNESS gate samples ~50 queries per round; this is the committed
-full record the round-close checklist requires.
+``CORRECTNESS_FULL_r{N}.json`` at the repo root, N numbered like
+``bench.py``'s record (never a finished round's).  A sampled correctness
+gate checks ~50 queries per round; this is the committed full record the
+round-close checklist requires.
 
 Usage:
-    python examples/full_sweep.py [--sf-dir /root/testdata/sf0.01] \
-        [--out CORRECTNESS_FULL_r10.json]
+    python examples/full_sweep.py [--sf-dir DIR] [--out PATH]
 """
 
 from __future__ import annotations
@@ -46,26 +46,18 @@ def value_hash(rows) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="CORRECTNESS_FULL_r10.json")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--out")
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
+
+    from bench import REPO_ROOT, infer_round
 
     from spark_ml_spatialjointransformer_spark.queries import QUERIES
+    from spark_ml_spatialjointransformer_spark.session import local_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("full-sweep")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    out = args.out or os.path.join(REPO_ROOT, f"CORRECTNESS_FULL_r{infer_round():02d}.json")
+    spark = local_session("full-sweep")
 
     con = duckdb.connect()
     for t in TABLES:
@@ -135,12 +127,12 @@ def main() -> int:
         "n_ran_only": n_ran_only,
         "queries": results,
     }
-    with open(args.out, "w") as f:
+    with open(out, "w") as f:
         json.dump(artifact, f, indent=1)
     print(
         f"{n_pass}/{len(QUERIES)} oracle-pass"
         + (f" + {n_ran_only} ran-only" if n_ran_only else "")
-        + f" → {args.out}",
+        + f" → {out}",
         flush=True,
     )
     return 0 if n_pass + n_ran_only == len(QUERIES) else 1

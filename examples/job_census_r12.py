@@ -16,29 +16,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from spark_ml_spatialjointransformer_spark.queries import QUERIES
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/job_census_r12.json"
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("sjt-job-census")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-job-census")
     from bench import clear_session_state
 
     sc = spark.sparkContext

@@ -29,8 +29,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 REPLICAS = 5  # overridable via --replicas
 #: 25 × 400k stays below graph._ORIENT_KEY (1e7), so replicated vec_ids
@@ -126,18 +127,7 @@ def main() -> None:
     if with_dims:
         argv.remove("--with-dims")
     args = [a for a in argv if not a.startswith("--")]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sjt-scale-measure")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "32g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-scale-measure")
 
     from __spark_entry__ import queries
 

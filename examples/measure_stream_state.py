@@ -27,8 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 REPLICAS = 5
 ID_OFFSET = 10_000_000
@@ -107,18 +108,7 @@ def e20_plan(spark, path: str):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sjt-state-measure")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "32g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-state-measure")
 
     src = f"{sf_dir}/events.parquet"
     scratch = tempfile.mkdtemp(prefix="sjt_state_measure_")

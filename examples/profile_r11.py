@@ -19,13 +19,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from spark_ml_spatialjointransformer_spark.queries import QUERIES
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARM_DIR = "/root/testdata/sf0.001"
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def noop(df) -> None:
@@ -64,23 +64,10 @@ def main() -> None:
     targets = sys.argv[1:] or [
         "t9", "t11", "v2", "g1", "t62", "p17", "t55", "e3", "knn",
     ]
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("sjt-profile")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "32g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-profile")
     p = Prof(spark)
 
     from spark_ml_spatialjointransformer_spark.operators.dedup import (
-        dedup_assign_keeper,
         dedup_connected_components,
         minhash_signatures,
         minhash_lsh_pairs,

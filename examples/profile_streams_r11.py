@@ -16,14 +16,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from spark_ml_spatialjointransformer_spark.queries import QUERIES
+from spark_ml_spatialjointransformer_spark.session import local_session
 from spark_ml_spatialjointransformer_spark.streaming import windowed
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARM_DIR = "/root/testdata/sf0.001"
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 TARGETS = sys.argv[1:] or ["e6", "e14", "e15", "e17", "e22", "e23"]
 
@@ -78,22 +76,7 @@ windowed.run_to_memory = run_to_memory_profiled
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("sjt-stream-profile")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-stream-profile")
 
     names = {
         t: next(n for n in QUERIES if n.startswith(t + "_")) for t in TARGETS

@@ -15,7 +15,7 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 from spark_ml_spatialjointransformer_spark import BroadcastSpatialJoin
 from spark_ml_spatialjointransformer_spark.operators.dedup import (
@@ -24,6 +24,7 @@ from spark_ml_spatialjointransformer_spark.operators.dedup import (
 )
 from spark_ml_spatialjointransformer_spark.operators.similarity import lsh_topk
 from spark_ml_spatialjointransformer_spark.operators.sink import write_sharded
+from spark_ml_spatialjointransformer_spark.session import local_session
 from spark_ml_spatialjointransformer_spark.sources.tables import (
     customers_geo,
     suppliers_geo,
@@ -31,16 +32,7 @@ from spark_ml_spatialjointransformer_spark.sources.tables import (
 
 
 def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("sjt-quickstart")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = local_session("sjt-quickstart")
 
     # -- 1. the ML Transformer (reference-compatible params) -------------
     suppliers_geo(spark, sf_dir).createOrReplaceTempView("suppliers")

@@ -53,6 +53,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_ml_spatialjointransformer_spark.plans.sqltext import sql_ident
+
 #: grid cell width (degrees) — decoupled from data scale; 4° keeps the
 #: occupied-cell census and the pair table small while cells stay fine
 #: enough to prune
@@ -126,6 +128,11 @@ def partitioned_nearest(
     w = cell_deg
     nbx = max(1, int(round(360.0 / w)))
 
+    def col(name: str) -> Column:
+        """The column named exactly ``name`` (a dot or a backtick in it is
+        part of the name)."""
+        return F.col(sql_ident(name))
+
     def cell(x: str, y: str, width: float, cols: int, names: str) -> list[Column]:
         """Wrap-aware grid column and row of the point ``(x, y)``."""
         return [
@@ -134,7 +141,7 @@ def partitioned_nearest(
         ]
 
     L = left.select(
-        *[F.col(c) for c in dict.fromkeys([*left_id_cols, *l_extra_cols])],
+        *[col(c) for c in dict.fromkeys([*left_id_cols, *l_extra_cols])],
         F.col(left_xy[0]).alias("__lx"),
         F.col(left_xy[1]).alias("__ly"),
         F.monotonically_increasing_id().alias("__pid"),
@@ -143,7 +150,7 @@ def partitioned_nearest(
     # __rid (right insertion order, the last tie-break) is assigned before
     # any replication
     R = right.select(
-        *[F.col(c) for c in dict.fromkeys([*right_pay_cols, *tie_break, *r_extra_cols])],
+        *[col(c) for c in dict.fromkeys([*right_pay_cols, *tie_break, *r_extra_cols])],
         F.col(right_xy[0]).alias("__rx"),
         F.col(right_xy[1]).alias("__ry"),
         F.monotonically_increasing_id().alias("__rid"),
@@ -187,7 +194,7 @@ def partitioned_nearest(
         if condition is not None:
             on = on & condition
         rank = Window.partitionBy("__lcx", "__lcy", "__pid").orderBy(
-            "__d", *tie_break, "__rid"
+            "__d", *map(col, tie_break), "__rid"
         )
         return (
             L.join(rep.hint("merge"), on, how)
@@ -205,10 +212,10 @@ def partitioned_nearest(
         )
 
     out_right = [
-        F.col(c).alias(out_names[len(left_id_cols) + i])
+        col(c).alias(out_names[len(left_id_cols) + i])
         for i, c in enumerate(right_pay_cols)
     ]
-    cols = [F.col(c).alias(n) for c, n in zip(left_id_cols, out_names)] + out_right
+    cols = [col(c).alias(n) for c, n in zip(left_id_cols, out_names)] + out_right
     if distance_column:
         cols.append(F.round(F.col("__d")).cast("int").alias(distance_column))
 

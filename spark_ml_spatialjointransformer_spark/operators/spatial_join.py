@@ -899,7 +899,7 @@ def _partitioned_nearest_route(
         r_extra_cols=r_extra,
         k=plan.k,
     )
-    return res.select(*routing.order)
+    return res.selectExpr(*map(sql_ident, routing.order))
 
 
 def _knn_kernel(kernel: str):
@@ -1019,7 +1019,7 @@ def _broadcast_knn(
         *[f"{sql_ident(c)} AS __pay{i}" for i, c in enumerate(pay_src)],
         f"__sjt_{rt_tag}_gx AS __gx",
         f"__sjt_{rt_tag}_gy AS __gy",
-        *[f"{sql_col(c)} AS __tb{i}" for i, c in enumerate(tb)],
+        *[f"{sql_ident(c)} AS __tb{i}" for i, c in enumerate(tb)],
         *([f"{sql_col(bc_cond_col)} AS __cnd"] if bc_cond_col else []),
     )
     # Arrow transfer when every column is timezone-free: ~2-3x cheaper than
@@ -1106,12 +1106,19 @@ def _broadcast_knn(
         fields.append(T.StructField(plan.distance_column, T.IntegerType(), True))
     out_schema = T.StructType(fields)
 
+    # mapInPandas hands the kernel every column by its F.col-parsed name,
+    # which a backtick or a dot in a name breaks: the iterated side goes in
+    # as the columns the kernel reads, under safe aliases
+    left_keep = [f"__k{i}" for i in range(len(routing.left_keep))]
+    left = left.selectExpr(
+        *[f"{sql_ident(c)} AS {k}" for c, k in zip(routing.left_keep, left_keep)],
+        f"__sjt_{lt}_gx AS __gx",
+        f"__sjt_{lt}_gy AS __gy",
+        *([f"{sql_ident(it_cond_col)} AS __cnd"] if cond_spec is not None else []),
+    )
     # the executor closure takes the lists, not the routing: a type defined
     # in this module would not unpickle where the package is not installed
-    left_keep, left_out_names, out_order = (
-        routing.left_keep, routing.left_out, routing.order
-    )
-    lgx, lgy = f"__sjt_{lt}_gx", f"__sjt_{lt}_gy"
+    left_out_names, out_order = routing.left_out, routing.order
     distance_column = plan.distance_column
     is_geodesic = plan.distance_kernel != "haversine"
     # bound the B×R temp matrices.  Sized for CACHE, not just memory: the
@@ -1140,10 +1147,10 @@ def _broadcast_knn(
         for pdf in batches:
             if n_r == 0 or len(pdf) == 0:
                 continue
-            l_lon = pdf[lgx].to_numpy(np.float64)
-            l_lat = pdf[lgy].to_numpy(np.float64)
+            l_lon = pdf["__gx"].to_numpy(np.float64)
+            l_lat = pdf["__gy"].to_numpy(np.float64)
             l_cond = (
-                _cond_f64_local(pdf[it_cond_col])
+                _cond_f64_local(pdf["__cnd"])
                 if op_fn is not None
                 else None
             )

@@ -7,22 +7,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from spark_ml_spatialjointransformer_spark.session import local_session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("sjt-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    s = local_session("sjt-tests", cpus=4)
     yield s
     s.stop()
 

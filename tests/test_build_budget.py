@@ -202,12 +202,15 @@ def test_sql_col_parses_like_f_col(spark, name):
 
 
 def test_quoted_names_match_plain_names(spark, bj):
-    """Columns whose names need quoting give the rows their plainly named
-    copies give, through the kNN kernel, the cell join with a condition
-    and the WKT refine, with a ``filter`` on a quoted name."""
+    """Columns whose names need quoting (a space, a backtick, a dot) give
+    the rows their plainly named copies give, through the kNN kernel, the
+    kNN grid pass, the cell join with a condition and the WKT refine, with
+    a ``filter`` on a quoted name."""
     pts, par = bj
-    plain = pts.selectExpr("id", "id % 3 AS grp", "lon", "lat", "id * 2 AS cd")
-    quoted = plain.toDF("pt id", "pt grp", "p lon", "p lat", "c`d")
+    plain = pts.selectExpr(
+        "id", "id % 3 AS grp", "lon", "lat", "id * 2 AS cd", "id * 7 AS xy"
+    )
+    quoted = plain.toDF("pt id", "pt grp", "p lon", "p lat", "c`d", "x.y")
     sites = spark.table("bjb_sites").selectExpr(
         "site_id", "site_id % 3 AS grp", "site_id * 5 AS sx", "slon", "slat"
     )
@@ -224,29 +227,28 @@ def test_quoted_names_match_plain_names(spark, bj):
             ).transform(df)
         )
 
-    for kw, n_in in (
-        # the kNN kernel runs in mapInPandas, which looks the iterated
-        # side's columns up by F.col and so cannot take a backtick name;
+    for kw in (
         # tieBreak takes exact names, not quoted ones
-        (dict(predicate="nearest", distanceColumnAlias="d m", filter="{sid} < 30",
-              tieBreak="{tie}", numNeighbors="2"), 4),
-        (dict(predicate="withindist 20000", distanceColumnAlias="d m",
-              condition="left.{sgrp} = right.{pgrp}", filter="{sid} >= 5"), 5),
+        dict(predicate="nearest", distanceColumnAlias="d m", filter="{sid} < 30",
+             tieBreak="{tie}", numNeighbors="2"),
+        dict(predicate="withindist 20000", distanceColumnAlias="d m",
+             condition="left.{sgrp} = right.{pgrp}", filter="{sid} >= 5"),
     ):
         def fill(names, kw=kw):
             return {k: v.format(**names) for k, v in kw.items()}
 
-        want = run(
-            plain.select(*plain.columns[:n_in]), "bjb_sites_plain", "site_id as site, sx",
-            "slon, slat", "lon, lat",
-            **fill(dict(sid="site_id", tie="site_id", sgrp="grp", pgrp="grp")),
-        )
-        got = run(
-            quoted if n_in == 5 else quoted.select(*quoted.columns[:n_in]),
-            "bjb_sites_quoted", "site id as site, `s``x` as sx", "s lon, s lat", "p lon, p lat",
-            **fill(dict(sid="`site id`", tie="site id", sgrp="`site grp`", pgrp="`pt grp`")),
-        )
-        assert want and got == want
+        for strategy in ("broadcast", "partitioned"):
+            want = run(
+                plain, "bjb_sites_plain", "site_id as site, sx", "slon, slat", "lon, lat",
+                joinStrategy=strategy,
+                **fill(dict(sid="site_id", tie="site_id", sgrp="grp", pgrp="grp")),
+            )
+            got = run(
+                quoted, "bjb_sites_quoted", "site id as site, `s``x` as sx", "s lon, s lat",
+                "p lon, p lat", joinStrategy=strategy,
+                **fill(dict(sid="`site id`", tie="site id", sgrp="`site grp`", pgrp="`pt grp`")),
+            )
+            assert want and got == want, (kw["predicate"], strategy)
 
     # the same column named plainly in datasetPoint and quoted in the
     # condition is kept once through numPartitions' repartition
