@@ -2,12 +2,10 @@ from spark_ml_spatialjointransformer_spark.functions.geodesic import (
     vincenty_np,
     haversine_np,
     geodesic_distance_udf,
-    haversine_expr,
 )
 
 __all__ = [
     "vincenty_np",
     "haversine_np",
     "geodesic_distance_udf",
-    "haversine_expr",
 ]

@@ -8,8 +8,9 @@ Two kernels:
   sub-millimeter at the scales covered by the reference's pinned goldens
   (15689 m / 15685 m, BroadcastSpatialJoinTest.scala:115-119 — verified in
   tests/test_geodesic.py).  Runs executor-side inside an Arrow pandas_udf.
-- ``haversine_expr`` — great-circle distance as a pure Spark Column
-  expression (mean-earth radius).  Stays entirely inside whole-stage
+- ``haversine_sql`` — great-circle distance as SQL text (mean-earth
+  radius), for Spark (``F.expr``/``selectExpr``, ``double_suffix="D"``)
+  and the DuckDB oracles alike.  Stays entirely inside whole-stage
   codegen; used for the engine's own large-scale queries where ~0.3%
   spherical error is acceptable and JVM-side throughput matters.
 
@@ -139,37 +140,14 @@ def geodesic_distance_udf():
     return _geodesic
 
 
-def haversine_expr(lon1, lat1, lon2, lat2):
-    """Haversine distance as a pure Spark Column (meters, double).
-
-    All trig stays JVM-side (whole-stage codegen); use for engine-native
-    queries where the spherical model is acceptable.  The same formula is
-    emitted as ANSI SQL by :func:`haversine_sql` so DuckDB oracles match.
-    """
-    from pyspark.sql import functions as F
-
-    rlat1 = F.radians(lat1)
-    rlat2 = F.radians(lat2)
-    sdlat = F.sin((F.radians(lat2) - F.radians(lat1)) / 2)
-    sdlon = F.sin((F.radians(lon2) - F.radians(lon1)) / 2)
-    h = sdlat * sdlat + F.cos(rlat1) * F.cos(rlat2) * sdlon * sdlon
-    # clamp to [0, 1]: near-antipodal pairs can round h a hair above 1 and
-    # asin(sqrt(h)) would go NaN (ANSI mode then errors the downstream
-    # round().cast); haversine_np clips the same way, and haversine_sql
-    # mirrors the clamp so both engines keep identical formula trees
-    h = F.least(F.lit(1.0), F.greatest(F.lit(0.0), h))
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(h))
-
-
 def haversine_sql(
     lon1: str, lat1: str, lon2: str, lat2: str, double_suffix: str = ""
 ) -> str:
-    """The exact same haversine formula as ANSI SQL text (for DuckDB oracles).
+    """The haversine distance (meters, double) as ANSI SQL text.
 
-    Arithmetic is kept structurally identical to :func:`haversine_expr` so
-    both engines evaluate the same double-precision expression tree.  With
-    ``double_suffix="D"`` the literals are Spark doubles and the text parses
-    to exactly the :func:`haversine_expr` tree.
+    DuckDB oracles and Spark evaluate the same double-precision expression
+    tree.  With ``double_suffix="D"`` the literals are Spark doubles, for
+    ``F.expr`` and ``selectExpr``.
     """
     rlat1 = f"radians({lat1})"
     rlat2 = f"radians({lat2})"
@@ -177,5 +155,8 @@ def haversine_sql(
     sdlon = f"sin((radians({lon2}) - radians({lon1})) / 2)"
     h = f"({sdlat} * {sdlat} + cos({rlat1}) * cos({rlat2}) * {sdlon} * {sdlon})"
     d = double_suffix
-    h = f"least(1.0{d}, greatest(0.0{d}, {h}))"  # same clamp as haversine_expr
+    # clamp to [0, 1]: near-antipodal pairs can round h a hair above 1 and
+    # asin(sqrt(h)) would go NaN (ANSI mode then errors the downstream
+    # round().cast); haversine_np clips the same way
+    h = f"least(1.0{d}, greatest(0.0{d}, {h}))"
     return f"({2.0 * EARTH_RADIUS_M!r}{d} * asin(sqrt({h})))"

@@ -11,7 +11,7 @@ Semantics (parity with reference BroadcastSpatialJoin.scala:349-478):
   broadcast-side row by geodesic centroid distance (result cardinality =
   iterated side row count);
 - ``withindist n``: all pairs whose rounded geodesic centroid distance ≤ n
-  meters (coarse degree-window prefilter, exact re-filter —
+  meters (coarse window prefilter, exact re-filter —
   SpatialJoin.scala:62-80, BroadcastSpatialJoin.scala:353-368);
 - extra ``condition`` filters candidate pairs *before* nearest selection
   (BroadcastSpatialJoin.scala:493-535); ``left`` = external, ``right`` =
@@ -25,10 +25,13 @@ Semantics (parity with reference BroadcastSpatialJoin.scala:349-478):
 Execution strategy (Spark-first, nothing leaves DataFrame land):
 
 - candidate enumeration for ``withindist`` and the bbox predicates = an
-  equi-join on grid-cell keys with the degree/bbox window as residual, so
-  Catalyst picks a hash join; the strategy only decides whether the right
-  side carries ``F.broadcast`` (BroadcastHashJoin) or both sides shuffle
-  (``partitioned``).  bbox columns are extracted from WKT **JVM-side**
+  equi-join on grid-cell keys with the window as residual, so Catalyst
+  picks a hash join: ``withindist`` keys both sides on their centroids'
+  cells and bounds the distance with the certified grid bounds of
+  ``operators/knn.py``, the bbox predicates key on bbox cells.  The
+  strategy only decides whether the right side carries ``F.broadcast``
+  (BroadcastHashJoin) or both sides shuffle (``partitioned``).  bbox
+  columns are extracted from WKT **JVM-side**
   (regexp + higher-order array functions, no Python) so the prefilter runs
   inside whole-stage codegen;
 - exact geometry predicates and the WGS84 geodesic run as Arrow
@@ -85,6 +88,7 @@ from spark_ml_spatialjointransformer_spark.functions.geometry import (
     polygon_predicate_np,
     rect_predicate_np,
 )
+from spark_ml_spatialjointransformer_spark.operators.knn import _MPD_LAT, _RPOL
 from spark_ml_spatialjointransformer_spark.plans.config import (
     PointColumns,
     SideConfig,
@@ -104,8 +108,7 @@ EXT_PREFIX = "__sjt_e__"
 # spark.sql.parser.escapedStringLiterals says
 _NUM_PATTERN = "[-+]?(?:[0-9]+[.]?[0-9]*|[.][0-9]+)(?:[eE][-+]?[0-9]+)?"
 
-# geometry-kind capability flags per predicate
-_NEEDS_BBOX = {"withindist", "within", "contains", "intersects", "overlaps"}
+#: predicates with a bbox prefilter and an exact geometry refine
 _NEEDS_REFINE = {"within", "contains", "intersects", "overlaps"}
 
 
@@ -288,11 +291,11 @@ def _prepare_side(
     side: SideConfig,
     tag: str,
     need_centroid: bool,
-    need_bbox: bool,
-    need_wkt: bool,
+    need_refine: bool,
 ) -> DataFrame:
     """Attach internal geometry columns (``__sjt_{tag}_*``) and drop rows
-    with null geometry.  All bbox math is JVM-side; only WKT centroids use a
+    with null geometry: the centroid, and for the refine predicates the
+    bbox and the WKT.  All bbox math is JVM-side; only WKT centroids use a
     pandas_udf."""
     gx, gy = f"__sjt_{tag}_gx", f"__sjt_{tag}_gy"
     x0, y0, x1, y1 = (f"__sjt_{tag}_{c}" for c in ("x0", "y0", "x1", "y1"))
@@ -306,9 +309,8 @@ def _prepare_side(
         derived: dict[str, str] = {}
         if need_centroid:
             derived.update({gx: lon, gy: lat})
-        if need_bbox:
+        if need_refine:
             derived.update({x0: lon, y0: lat, x1: lon, y1: lat})
-        if need_wkt:
             derived[wktc] = "CAST(NULL AS STRING)"
         return df.selectExpr("*", *(f"{e} AS {n}" for n, e in derived.items()))
 
@@ -316,7 +318,7 @@ def _prepare_side(
     # the side's last projection: everything, or, after the bbox generator,
     # the columns it came with (its number array dropped) and the bbox
     out = ["*"]
-    if need_bbox:
+    if need_refine:
         # the numbers are extracted once, into their own column, and the
         # four bbox values leave through a generator: Catalyst copies a
         # projected expression into every isnotnull filter it infers from
@@ -346,169 +348,86 @@ def _prepare_side(
         c = _wkt_centroid_udf()(side.wkt_column)
         df = df.withColumns({gx: c.getField("x"), gy: c.getField("y")})
         df = df.where(f"{gx} IS NOT NULL")
-    if need_wkt:
+    if need_refine:
         out.append(f"CAST({wkt} AS STRING) AS {wktc}")
     return df if out == ["*"] else df.selectExpr(*out)
 
 
-#: withindist grid binning: the bin width is DECOUPLED from the radius (a
-#: radius-sized bin makes the equi-key's selectivity collapse as the radius
-#: grows — candidate volume then scales like the cross join), clamped so that
-#: (a) tiny radii over wide geometries can't explode rows into millions of
-#: bins, and (b) large radii keep a useful number of distinct keys.
+#: smallest withindist cell (degrees): below it a small radius would only
+#: multiply cells, not prune more; the bbox predicates' cells are _BIN_W_MAX
 _BIN_W_MIN, _BIN_W_MAX = 0.5, 2.0
-#: longitude binning is disabled for radii so large the ±360° wraparound
-#: frames could overlap (a pair matching under two shifts would duplicate);
-#: for points that needs 2·radius ≥ 360°, so 90° is a 4× safety margin.
-_LON_BIN_MAX_RADIUS_DEG = 90.0
-#: chord lower bound: a pair within d meters has Δλ ≤ d / (_MPD_LON·cos φmax)
-#: degrees (2·polar-radius/180 ≈ 70630; margin) — the latitude-AWARE lon
-#: window.  The reference's flat meters/35000 inflation stops over-covering
-#: above ~72° latitude (its known limitation); the oracle gate demands exact
-#: semantics at every latitude, so the engine goes beyond the reference here.
-_MPD_LON_CHORD = 70600.0
-_PHI_CAP_DEG = 89.99
-
-
-def _lon_window_deg(radius_m: float, d: float, phi_basis: str) -> str:
-    """Safe longitude half-window (degrees) for a side whose partner's
-    latitude can reach ``|phi_basis| + d`` (the inflated lat window):
-    ``radius / (70600 · cos(φmax))``, capped so near-pole rows get the
-    'whole circle' sentinel (≥ 180)."""
-    phi_max = f"least({sql_double(_PHI_CAP_DEG)}, abs({phi_basis}) + {sql_double(d)})"
-    return (
-        f"least(360.0D, {sql_double(radius_m / _MPD_LON_CHORD)} / "
-        f"cos(radians({phi_max})))"
-    )
 
 
 def _withindist_bins(
-    left: DataFrame,
-    right: DataFrame,
-    lt: str,
-    rt: str,
-    d: float,
-    radius_m: float,
-    lon_binnable: bool,
+    left: DataFrame, right: DataFrame, lt: str, rt: str, radius_m: float
 ) -> tuple[DataFrame, DataFrame, str]:
-    """Discretize the distance join into grid-cell equi-keys so Catalyst
-    plans a hash join (broadcast or shuffled) with O(cell-density) probe
-    cost instead of a nested loop over every broadcast row.
+    """Grid-cell equi-keys for the distance join on the centroid columns the
+    exact re-filter reads, so Catalyst plans a hash join (broadcast or
+    shuffled) instead of a nested loop.
 
-    - Latitude (always): left explodes over the bands its bbox covers,
-      right over its radius-expanded interval; a pair sharing several bands
-      survives only in the band of ``max(ly0, ry0 - d)`` (reference-point
-      dedup — no distinct needed).  Sequences are clamped to the ±90° globe
-      range, so off-globe garbage can't inflate rows.
-    - Longitude (point×point sides only): same scheme with antimeridian
-      wraparound — the right side emits (bin, shift) pairs for the shifts
-      {-360, 0, +360} whose expanded window reaches into [-180, 180], and
-      the precise per-shift window + reference-bin dedup keep each matching
-      pair exactly once.  WKT sides keep longitude in the residual condition
-      (a globe-spanning polygon would otherwise explode quadratically).
+    A pair passes the re-filter ``round(d) <= r`` only if d < r + ½ m, so
+    the certified kNN-grid bounds of ``operators/knn.py`` give its window:
+    Δφ ≤ dφ = (r + ½)/_MPD_LAT, and the wrapped Δλ ≤ 2·asin(q) with
+    q = (r + ½) / (2·b·√(cos φ · cos φ*)) at the broadcast row's latitude φ
+    and φ* = min(90°, |φ| + dφ) — the whole circle (180°) when the bound
+    does not converge (``NOT (q < 1)``: Spark orders NaN above 1, so
+    ``least(q, 1)`` takes it to 1 as well).
 
-    Returns ``(left, right, condition)`` with the bin columns attached and
-    the full coarse spatial condition (equi-keys + dedup + degree windows)
-    as SQL text.  The exact meter re-filter stays downstream
+    - cells are dφ wide (at least ``_BIN_W_MIN``), snapped so that 360°
+      holds a whole number ``nbx`` of them: the column index taken mod
+      ``nbx`` then wraps exactly at the antimeridian;
+    - the iterated (left) row emits its one cell; the broadcast (right)
+      row explodes the cells of its window: at most 3 rows (clamped to the
+      globe) × ``nbx`` columns — at any radius at most 24 cells up to 40°
+      latitude, about 120 up to 80°, and 3 × 720 for a row at the pole;
+    - the residual is the window itself (no dedup: each row of either side
+      holds each cell at most once).
+
+    Returns ``(left, right, condition)`` with the cell columns attached;
+    the exact meter re-filter stays downstream
     (SpatialJoin.scala:353-368).
     """
-    w = max(_BIN_W_MIN, min(_BIN_W_MAX, d))
-    dd, ww = sql_double(d), sql_double(w)
-    ly0, ly1 = f"__sjt_{lt}_y0", f"__sjt_{lt}_y1"
-    ry0, ry1 = f"__sjt_{rt}_y0", f"__sjt_{rt}_y1"
-    lat_lo, lat_hi = math.floor(-90.0 / w), math.floor(90.0 / w)
+    reach = radius_m + 0.5
+    dlat = reach / _MPD_LAT
+    nbx = max(1, math.floor(360.0 / max(_BIN_W_MIN, dlat)))
+    w = 360.0 / nbx
+    ww, dd, dl = sql_double(w), sql_double(dlat), "__sjt_dl"
+    lx, ly = f"__sjt_{lt}_gx", f"__sjt_{lt}_gy"
+    rx, ry = f"__sjt_{rt}_gx", f"__sjt_{rt}_gy"
 
-    def clamped_seq(lo: str, hi: str, lo_lim: int, hi_lim: int) -> str:
-        lo, hi = f"greatest({lo}, {lo_lim})", f"least({hi}, {hi_lim})"
-        return (
-            f"CASE WHEN {lo} <= {hi} THEN sequence({lo}, {hi}) "
-            "ELSE CAST(array() AS ARRAY<BIGINT>) END"
-        )
-
-    lat_l = clamped_seq(f"floor({ly0} / {ww})", f"floor({ly1} / {ww})", lat_lo, lat_hi)
-    lat_r = clamped_seq(
-        f"floor(({ry0} - {dd}) / {ww})", f"floor(({ry1} + {dd}) / {ww})", lat_lo, lat_hi
+    left = left.selectExpr(
+        "*",
+        f"pmod(floor({lx} / {ww}), {nbx}) AS __sjt_cx_{lt}",
+        f"floor({ly} / {ww}) AS __sjt_cy_{lt}",
     )
-    # the left side's bins go on in one projection, built up below
-    left_bins = ["*", f"explode({lat_l}) AS __sjt_bin_l"]
-    right = right.selectExpr("*", f"explode({lat_r}) AS __sjt_bin_r")
-    ref_bin = f"greatest(floor(greatest({ly0}, {ry0} - {dd}) / {ww}), {lat_lo})"
-    cond = (
-        f"__sjt_bin_l = __sjt_bin_r AND __sjt_bin_l = {ref_bin} "
-        f"AND {ly0} - {dd} <= {ry1} AND {ly1} + {dd} >= {ry0}"
+    q = (
+        f"{sql_double(reach / (2.0 * _RPOL))} / sqrt(cos(radians({ry})) * "
+        f"cos(radians(least(90.0D, abs({ry}) + {dd}))))"
     )
-
-    lx0, lx1 = f"__sjt_{lt}_x0", f"__sjt_{lt}_x1"
-    rx0, rx1 = f"__sjt_{rt}_x0", f"__sjt_{rt}_x1"
-
-    if not lon_binnable:
-        # longitude window with antimeridian wraparound stays residual: a
-        # pair at lon -180.0 vs +177.7 is ~250 km apart but 357.7 apart in
-        # raw degrees (the reference's planar index misses these; the
-        # geodesic refine is wraparound-correct, so the prefilter must be).
-        # The half-window is latitude-aware; near-pole rows (dl ≥ 180)
-        # place no longitude constraint at all.
-        dl = _lon_window_deg(radius_m, d, f"greatest(abs({ry0}), abs({ry1}))")
-        # parenthesized: the SQL parser balances a chain of four ORs
-        lon_ok = f"{dl} >= 180.0D"
-        for s in (0.0, 360.0, -360.0):
-            lon_ok = (
-                f"({lon_ok} OR ({lx0} - {dl} <= {rx1} + {sql_double(s)} "
-                f"AND {lx1} + {dl} >= {rx0} + {sql_double(s)}))"
-            )
-        return left.selectExpr(*left_bins), right, f"{cond} AND {lon_ok}"
-
-    lon_lo, lon_hi = math.floor(-180.0 / w), math.floor(180.0 / w)
-    # clamp the left bin into the same [lon_lo, lon_hi] domain as the right
-    # side's emitted cells: a left lon marginally outside [-180, 180]
-    # (dirty data) then behaves like boundary data instead of silently
-    # matching nothing (in-domain rows are unaffected — floor(lx0/ww) is
-    # already inside the clamp range)
-    left_bins.append(
-        f"greatest(least(floor({lx0} / {ww}), {lon_hi}), {lon_lo}) AS __sjt_lbin_l"
+    x0, x1 = (f"floor(({rx} {s} {dl}) / {ww})" for s in "-+")
+    xs = (
+        f"CASE WHEN {x1} - {x0} < {nbx} THEN "
+        f"transform(sequence({x0}, {x1}), x -> pmod(x, {nbx})) "
+        f"ELSE sequence(0L, {nbx - 1}L) END"
     )
-
-    # per-row latitude-aware half-window; rows whose window reaches the
-    # whole circle (dl ≥ 180) emit every cell in the s=0 frame only, so a
-    # pair matches exactly one (bin, shift) and needs no dedup
-    dl = _lon_window_deg(radius_m, d, ry0)
-    wide = f"{dl} >= 180.0D"
-    empty = "CAST(array() AS ARRAY<STRUCT<bin: BIGINT, sh: DOUBLE>>)"
-
-    def bin_shift(seq: str, s: float) -> str:
-        return f"transform({seq}, x -> struct(x AS bin, {sql_double(s)} AS sh))"
-
-    arrs = []
-    for s in (-360.0, 0.0, 360.0):
-        lo = f"greatest(floor(({rx0} + {sql_double(s)} - {dl}) / {ww}), {lon_lo})"
-        hi = f"least(floor(({rx1} + {sql_double(s)} + {dl}) / {ww}), {lon_hi})"
-        normal = (
-            f"CASE WHEN {lo} <= {hi} THEN {bin_shift(f'sequence({lo}, {hi})', s)} "
-            f"ELSE {empty} END"
-        )
-        if_wide = bin_shift(f"sequence({lon_lo}, {lon_hi})", s) if s == 0.0 else empty
-        arrs.append(f"CASE WHEN {wide} THEN {if_wide} ELSE {normal} END")
+    # latitude rows clamped to the globe's, as the left rows compute them
+    ys = (
+        f"sequence(greatest(floor(({ry} - {dd}) / {ww}), {math.floor(-90.0 / w)}L), "
+        f"least(floor(({ry} + {dd}) / {ww}), {math.floor(90.0 / w)}L))"
+    )
     right = right.selectExpr(
-        "*", f"explode(concat({', '.join(arrs)})) AS __sjt_lonbin"
+        "*", f"2.0D * degrees(asin(least({q}, 1.0D))) AS {dl}"
     ).selectExpr(
-        *map(sql_ident, right.columns),
-        "__sjt_lonbin.bin AS __sjt_lbin_r",
-        "__sjt_lonbin.sh AS __sjt_sh",
+        "*",
+        f"inline(flatten(transform({xs}, x -> transform({ys}, y -> "
+        f"named_struct('__sjt_cx_{rt}', x, '__sjt_cy_{rt}', y)))))",
     )
-    lon_ref = (
-        f"least(greatest(floor(greatest({lx0}, {rx0} + __sjt_sh - {dl}) / {ww}), "
-        f"{lon_lo}), {lon_hi})"
+    cond = (
+        f"__sjt_cx_{lt} = __sjt_cx_{rt} AND __sjt_cy_{lt} = __sjt_cy_{rt} "
+        f"AND abs({ly} - {ry}) <= {dd} "
+        f"AND 180.0D - abs(pmod({lx} - {rx}, 360.0D) - 180.0D) <= {dl}"
     )
-    lon_cond = (
-        f"CASE WHEN {wide} THEN true ELSE __sjt_lbin_l = {lon_ref} "
-        f"AND {lx0} - {dl} <= {rx1} + __sjt_sh "
-        f"AND {lx1} + {dl} >= {rx0} + __sjt_sh END"
-    )
-    return (
-        left.selectExpr(*left_bins),
-        right,
-        f"{cond} AND __sjt_lbin_l = __sjt_lbin_r AND {lon_cond}",
-    )
+    return left, right, cond
 
 
 def _bbox_bins(
@@ -525,7 +444,7 @@ def _bbox_bins(
     - ``contains``: symmetric (right emits its corner, left explodes);
     - ``intersects``/``overlaps``: both sides explode their covered cells
       and a pair survives only in the cell of the bbox-intersection's min
-      corner (the withindist reference-point dedup at radius 0).
+      corner (a reference-point dedup).
 
     Cells are planar (no antimeridian wrap), matching the reference's
     planar bbox semantics for these predicates; cell indices clamp to the
@@ -679,17 +598,14 @@ def _compile_spatial_join(
         raise ValueError(f"k must be >= 1 (got {plan.k})")
     need_dist = bool(plan.distance_column) or op in ("nearest", "withindist")
     need_refine = op in _NEEDS_REFINE
-    need_bbox = op in _NEEDS_BBOX
 
     ext = prepare_external(external_df, plan)
     ext_side = _prefixed_side(plan.external_side)
 
     input_cols = list(input_df.columns)
 
-    ext = _prepare_side(ext, ext_side, "e", need_dist, need_bbox, need_refine)
-    inp = _prepare_side(
-        input_df, plan.input_side, "i", need_dist, need_bbox, need_refine
-    )
+    ext = _prepare_side(ext, ext_side, "e", need_dist, need_refine)
+    inp = _prepare_side(input_df, plan.input_side, "i", need_dist, need_refine)
 
     # iterated (left) vs broadcast (right); predicate applies left.op(right)
     if plan.broadcast_input:
@@ -730,17 +646,7 @@ def _compile_spatial_join(
         return _broadcast_knn(left, right, lt, plan, routing, cond_spec)
 
     if op == "withindist":
-        l_cfg = ext_side if lt == "e" else plan.input_side
-        r_cfg = plan.input_side if rt == "i" else ext_side
-        lon_binnable = (
-            not l_cfg.is_wkt
-            and not r_cfg.is_wkt
-            and plan.radius_degrees < _LON_BIN_MAX_RADIUS_DEG
-        )
-        left, right, cond = _withindist_bins(
-            left, right, lt, rt, plan.radius_degrees, plan.radius_meters,
-            lon_binnable,
-        )
+        left, right, cond = _withindist_bins(left, right, lt, rt, plan.radius_meters)
     else:
         left, right, cond = _bbox_bins(op, left, right, lt, rt)
     on = F.expr(cond)

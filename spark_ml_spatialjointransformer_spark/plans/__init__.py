@@ -5,8 +5,6 @@ from spark_ml_spatialjointransformer_spark.plans.config import (
     PREDICATES,
     parse_predicate,
     extract_radius,
-    is_nearest,
-    is_withindist,
 )
 
 __all__ = [
@@ -16,6 +14,4 @@ __all__ = [
     "PREDICATES",
     "parse_predicate",
     "extract_radius",
-    "is_nearest",
-    "is_withindist",
 ]

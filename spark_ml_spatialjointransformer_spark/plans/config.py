@@ -4,9 +4,11 @@ specs, validation.
 Behavioral parity notes (reference file:line):
 - predicate parsing is substring-based with ``nearest`` as the default
   (SpatialJoin.scala:48-56);
-- ``withindist n`` carries a radius in meters, converted to an inflated
-  degree window of ``n / 35000`` degrees for the coarse prefilter
-  (SpatialJoin.scala:62-80) — the exact geodesic re-filter happens post-join;
+- ``withindist n`` carries a radius in meters; ``extract_radius`` also
+  returns the reference's inflated ``n / 35000`` degree window
+  (SpatialJoin.scala:62-80) for parse parity, while the engine's prefilter
+  bounds the radius in meters itself (operators/spatial_join.py) — the
+  exact geodesic re-filter happens post-join;
 - geometry spec validation: exactly one of (WKT, point) per side, point spec
   must split into exactly two names (BroadcastSpatialJoin.scala:185-204).
 """
@@ -34,14 +36,6 @@ def parse_predicate(predicate: str) -> str:
         if name in p:
             return name
     return "nearest"
-
-
-def is_nearest(predicate: str) -> bool:
-    return parse_predicate(predicate) == "nearest"
-
-
-def is_withindist(predicate: str) -> bool:
-    return parse_predicate(predicate) == "withindist"
 
 
 def extract_radius(predicate: str) -> tuple[float, float]:
@@ -181,7 +175,3 @@ class SpatialJoinPlan:
     @property
     def radius_meters(self) -> float:
         return extract_radius(self.predicate)[0]
-
-    @property
-    def radius_degrees(self) -> float:
-        return extract_radius(self.predicate)[1]

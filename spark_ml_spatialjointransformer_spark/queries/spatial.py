@@ -98,7 +98,7 @@ FROM p WHERE CAST(round(d) AS INTEGER) <= 300000
 )
 def j6_withindist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 withindist: all customer-supplier pairs within 300 km (coarse
-    degree-window prefilter + exact refine, SpatialJoin.scala:62-80)."""
+    window prefilter + exact refine, SpatialJoin.scala:62-80)."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "lon", "lat")
     supp = suppliers_geo(spark, sf_dir)
     plan = SpatialJoinPlan(
@@ -134,9 +134,9 @@ def j35_poi_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot express).  NULL min_dist_m marks the empty case — distinct
     from 0, which would claim a co-located supplier.  Scale shape: the
     PARTITIONED strategy (j11's) — both sides shuffle on grid cells, no
-    broadcast of the ring-replicated relation (at a 25× replica the
-    broadcast form's ring-expanded build side crossed Spark's 8 GiB
-    broadcast ceiling; a density aggregate is a big×big join by nature);
+    broadcast of the supplier side, whose every row is replicated into
+    the cells of its distance window (a density aggregate is a big×big
+    join by nature);
     count and min combine map-side on the customer key, and the
     zero-fill is a left join against the (already scanned) customer
     keys — no second global pass."""
@@ -179,7 +179,8 @@ FROM p WHERE CAST(round(d) AS INTEGER) <= 300000
 )
 def j11_withindist_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The j6 distance join under strategy='partitioned': both sides shuffle
-    on latitude-band cells (no broadcast, no memory bound on either side) —
+    on the centroid grid cells (no broadcast, no memory bound on either
+    side) —
     the beyond-reference scale path for big×big distance joins.  Same
     oracle as j6: hash equality proves the two strategies agree."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "lon", "lat")
@@ -557,8 +558,8 @@ def j13_withindist_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """withindist with a WKT polygon side: distance is between CENTROIDS
     (reference semantics, SpatialJoin.scala:32-40) — customers within
     1500 km of each nation rectangle's centroid.  Exercises the WKT
-    centroid UDF and the latitude-only binning path (longitude binning is
-    point×point only) through the value-level gate."""
+    centroid UDF through the value-level gate: the WKT side keys on its
+    centroid's grid cell exactly like a point side."""
     cust = customers_geo(spark, sf_dir).select("c_custkey", "lon", "lat")
     nations = nations_rect(spark, sf_dir)
     plan = SpatialJoinPlan(
@@ -1012,16 +1013,10 @@ def j24_bucketed_spatial(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     c = spark.table(f"sjt_bkt_cb_{tag}")
     s = spark.table(f"sjt_bkt_sb_{tag}")
-    from spark_ml_spatialjointransformer_spark.functions.geodesic import (
-        haversine_expr,
-    )
-
     j = c.join(s, "band").withColumn(
         "dist_m",
         F.round(
-            haversine_expr(
-                F.col("lon"), F.col("lat"), F.col("s_lon"), F.col("s_lat")
-            )
+            F.expr(haversine_sql("lon", "lat", "s_lon", "s_lat", double_suffix="D"))
         ).cast("int"),
     )
     return j.where(F.col("dist_m") <= 200000).select(
@@ -1244,16 +1239,12 @@ def j28_trace_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs.  The lag window and the per-user rollup share ONE
     user_id exchange (Catalyst reuses the window's partitioning for the
     groupBy); trig stays in whole-stage codegen via
-    :func:`haversine_expr`.  At 100 TB traces shard by user — no
+    :func:`haversine_sql`.  At 100 TB traces shard by user — no
     cross-user data motion exists in the plan.  Ordering is by the
     integer sequence id, not the timestamp: the driver's parquet carries
     nano timestamps that Spark truncates to micros (tables.py:25-38), so
     a ts order could tie-break differently across engines."""
     from pyspark.sql.window import Window
-
-    from spark_ml_spatialjointransformer_spark.functions.geodesic import (
-        haversine_expr,
-    )
 
     pts = load_events(spark, sf_dir).select(
         "user_id",
@@ -1269,9 +1260,7 @@ def j28_trace_length(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lon",
         "lat",
     )
-    hav = haversine_expr(
-        F.col("plon"), F.col("plat"), F.col("lon"), F.col("lat")
-    )
+    hav = F.expr(haversine_sql("plon", "plat", "lon", "lat", double_suffix="D"))
     return seg.groupBy("user_id").agg(
         F.count("plon").alias("n_seg"),
         F.coalesce(F.sum(F.round(hav).cast("bigint")), F.lit(0))
@@ -2072,10 +2061,6 @@ def j36_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     (j28's nanos-truncation note)."""
     from pyspark.sql.window import Window
 
-    from spark_ml_spatialjointransformer_spark.functions.geodesic import (
-        haversine_expr,
-    )
-
     pts = load_events(spark, sf_dir).select(
         "user_id",
         "event_id",
@@ -2093,7 +2078,7 @@ def j36_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("ts_s").over(w).alias("pts_s"),
     )
     jump = F.round(
-        haversine_expr(F.col("plon"), F.col("plat"), F.col("lon"), F.col("lat"))
+        F.expr(haversine_sql("plon", "plat", "lon", "lat", double_suffix="D"))
     ).cast("bigint")
     brk = seg.withColumn(
         "b",

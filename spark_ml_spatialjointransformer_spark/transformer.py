@@ -118,7 +118,7 @@ class BroadcastSpatialJoin(
         "joinStrategy",
         "'broadcast' (reference contract) or 'partitioned'.  withindist "
         "and the bbox predicates always join on grid-cell equi-keys "
-        "(latitude bands / grid cells); 'partitioned' only drops the "
+        "(centroid cells / bbox cells); 'partitioned' only drops the "
         "broadcast hint so both sides shuffle on those keys, and runs "
         "nearest as one certified grid pass incl. k>1 and extra "
         "conditions — lifts the broadcast memory bound for big-by-big "

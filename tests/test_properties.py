@@ -1,10 +1,11 @@
 """Property-based checks (hypothesis) from SURVEY.md §5's test plan:
 
 - ``withindist`` result == brute-force pair enumeration (prefilter is sound
-  and refine is exact) on randomized point sets, including antimeridian
-  neighbors and near-pole latitudes (the latitude-aware chord window fixes
-  the reference's >72°-latitude under-cover of its flat 1° ≈ 35 km
-  inflation, so the full ±89° range is exercised);
+  and refine is exact) on randomized point sets and small-polygon WKT
+  sides, including antimeridian neighbors, near-pole latitudes (the
+  latitude-aware chord window fixes the reference's >72°-latitude
+  under-cover of its flat 1° ≈ 35 km inflation, so the full ±89° range is
+  exercised) and radii whose window spans the whole circle;
 - ``nearest`` (k=1 and k=3, with and without a selective condition)
   returns each iterated-side row's true k nearest allowed neighbors;
 - ``within`` and ``contains`` are the same relation under direction swap;
@@ -22,6 +23,7 @@ from hypothesis import strategies as st
 from spark_ml_spatialjointransformer_spark.functions.geodesic import haversine_np
 from spark_ml_spatialjointransformer_spark.functions.geometry import (
     PREDICATE_FUNCS,
+    centroid,
     parse_wkt,
     point_geom,
 )
@@ -58,16 +60,31 @@ def _df(spark, pts, prefix):
     )
 
 
+def _small_polygon(i, lon, lat):
+    """A right triangle with 0.1-0.3° legs at ``(lon, lat)``; its area
+    centroid, not the vertex, is the point the distance reads."""
+    a, b = 0.1 * (1 + i % 3), 0.1 * (1 + (i + 1) % 3)
+    return f"POLYGON (({lon} {lat}, {lon + a} {lat}, {lon} {lat + b}, {lon} {lat}))"
+
+
+@pytest.mark.parametrize("ext_kind", ["point", "wkt"])
 @pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
 @SPARK_SETTINGS
-@given(left=points, right=points, radius_km=st.integers(min_value=50, max_value=3000))
-def test_withindist_equals_brute_force(spark, strategy, left, right, radius_km):
+@given(left=points, right=points, radius_km=st.integers(min_value=50, max_value=20000))
+def test_withindist_equals_brute_force(spark, strategy, ext_kind, left, right, radius_km):
     radius = radius_km * 1000
     inp = _df(spark, left, "i")
-    ext = _df(spark, right, "e")
+    if ext_kind == "wkt":
+        wkts = [_small_polygon(i, *p) for i, p in enumerate(right)]
+        ext = spark.createDataFrame(list(enumerate(wkts)), "e_id int, wkt string")
+        ext_side = SideConfig(wkt_column="wkt")
+        right = [centroid(parse_wkt(w)) for w in wkts]
+    else:
+        ext = _df(spark, right, "e")
+        ext_side = _POINT
     plan = SpatialJoinPlan(
         predicate=f"withindist {radius}",
-        external_side=_POINT,
+        external_side=ext_side,
         input_side=_POINT,
         data_columns=(("e_id", "e_id"),),
         distance_column="dist_m",

@@ -459,7 +459,8 @@ def test_withindist_zero_radius_rejected(spark):
 
 def test_withindist_antimeridian_pair(spark):
     """Points straddling ±180° are ~222 km apart at the equator but 359.998
-    apart in raw degrees — the wraparound shift frames must keep the pair."""
+    apart in raw degrees — the cell column wraps mod 360°/w and the window
+    compares the wrapped longitude difference, so the pair must survive."""
     poi = poi_df(spark, [("d1", 179.999, 0.0), ("far", 0.0, 0.0)])
     inp = input_df(spark, [("i1", -179.999, 0.0)])
     t = make_transformer(poi).setPredicate("withindist 300000")
@@ -468,14 +469,56 @@ def test_withindist_antimeridian_pair(spark):
 
 
 def test_withindist_huge_radius_lat_only_binning(spark):
-    """Radius ≥ 90° of arc disables longitude binning (shift frames could
-    overlap); the lat-only fallback must still match every true pair."""
+    """A 4000 km radius: each broadcast row explodes only the few 40°-wide
+    cells of its window, wrapping across ±180°, and must still match every
+    true pair."""
     poi = poi_df(spark, [("d1", 170.0, 10.0), ("d2", -170.0, -10.0)])
-    # 4000 km -> 114 degrees of inflated window
     t = make_transformer(poi).setPredicate("withindist 4000000")
     out = t.transform(input_df(spark, [("i1", -175.0, 5.0)]))
     rows = {r[0:3] + (r[3],) for r in out.collect()}
     assert {r[3] for r in rows} == {"d1", "d2"}
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
+@pytest.mark.parametrize("kernel", ["geodesic", "haversine"])
+def test_withindist_rounding_margin(spark, kernel, strategy):
+    """The exact re-filter keeps ``round(d) <= r``, so a pair at r + 0.4 m
+    stays and one at r + 0.6 m goes: the prefilter window must reach
+    r + ½ m.  Pairs sit on one meridian north of 0° and 80°, placed by
+    bisection on the kernel's own numpy twin."""
+    from spark_ml_spatialjointransformer_spark.functions.geodesic import (
+        haversine_np,
+        vincenty_np,
+    )
+
+    dist = haversine_np if kernel == "haversine" else vincenty_np
+    r, lon = 25_000, 10.0
+
+    def lat_at(lat0, target):
+        lo, hi = lat0, lat0 + 1.0
+        for _ in range(100):
+            mid = (lo + hi) / 2
+            if float(dist(lon, lat0, lon, mid)) < target:
+                lo = mid
+            else:
+                hi = mid
+        return lo
+
+    poi = poi_df(spark, [("eq", lon, 0.0), ("n80", lon, 80.0)])
+    inp = input_df(spark, [
+        (f"{name}+{off}", lon, lat_at(lat0, r + off))
+        for name, lat0 in (("eq", 0.0), ("n80", 80.0))
+        for off in (0.4, 0.6)
+    ])
+    t = (
+        make_transformer(poi)
+        .setPredicate(f"withindist {r}")
+        .setDistanceKernel(kernel)
+        .setJoinStrategy(strategy)
+        .setDistColAlias("dist_m")
+    )
+    got = sorted((row.id, row.poi_id, row.dist_m) for row in t.transform(inp).collect())
+    assert got == [("eq+0.4", "eq", r), ("n80+0.4", "n80", r)]
 
 
 class TestPartitionedNearest:
@@ -566,12 +609,17 @@ class TestPartitionedNearest:
         """Inner-join semantics with ZERO right rows: the census finds no
         occupied right cell, the pair table is empty and so is the cell
         join — no error, no rows."""
+        from pyspark.sql import functions as F
+
         from spark_ml_spatialjointransformer_spark.functions.geodesic import (
-            haversine_expr,
+            haversine_sql,
         )
         from spark_ml_spatialjointransformer_spark.operators.knn import (
             partitioned_nearest,
         )
+
+        def hav(*xy):
+            return F.expr(haversine_sql(*xy, double_suffix="D"))
 
         L = spark.createDataFrame(
             [(1, 10.0, 20.0), (2, -30.0, 40.0)],
@@ -580,7 +628,7 @@ class TestPartitionedNearest:
         R = spark.createDataFrame([], "rid long, rlon double, rlat double")
         out = partitioned_nearest(
             L, R, ["id"], ("lon", "lat"), ["rid"], ("rlon", "rlat"),
-            ["rid"], haversine_expr, "dist_m", ["id", "nrid"],
+            ["rid"], hav, "dist_m", ["id", "nrid"],
         )
         assert out.count() == 0
         assert out.columns == ["id", "nrid", "dist_m"]

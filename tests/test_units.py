@@ -300,7 +300,7 @@ def test_parse_wkt_geometrycollection():
 
 def test_haversine_clamped_near_antipodal(spark):
     """Antipodal pairs must yield ~pi*R meters, never NaN, in all three
-    haversine forms (numpy / Column / SQL)."""
+    haversine forms (numpy / Spark SQL / DuckDB SQL)."""
     import duckdb
     import math
 
@@ -308,7 +308,6 @@ def test_haversine_clamped_near_antipodal(spark):
 
     from spark_ml_spatialjointransformer_spark.functions.geodesic import (
         EARTH_RADIUS_M,
-        haversine_expr,
         haversine_np,
         haversine_sql,
     )
@@ -316,7 +315,7 @@ def test_haversine_clamped_near_antipodal(spark):
     cases = [(0.0, 0.0, 180.0, 0.0), (45.0, 45.0, -135.0, -45.0)]
     df = spark.createDataFrame(cases, "a double, b double, c double, d double")
     got = df.select(
-        haversine_expr(F.col("a"), F.col("b"), F.col("c"), F.col("d")).alias("m")
+        F.expr(haversine_sql("a", "b", "c", "d", double_suffix="D")).alias("m")
     ).collect()
     con = duckdb.connect()
     for (lon1, lat1, lon2, lat2), row in zip(cases, got):
