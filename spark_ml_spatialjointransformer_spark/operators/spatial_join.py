@@ -381,7 +381,10 @@ def _withindist_bins(
       globe) × ``nbx`` columns — at any radius at most 24 cells up to 40°
       latitude, about 120 up to 80°, and 3 × 720 for a row at the pole;
     - the residual is the window itself (no dedup: each row of either side
-      holds each cell at most once).
+      holds each cell at most once);
+    - a centroid off the globe (|φ| > 90°, or NaN) matches nothing: its
+      broadcast row emits no cell, its iterated row fails the residual.
+      Longitudes need no guard: every one maps to its cell mod 360°.
 
     Returns ``(left, right, condition)`` with the cell columns attached;
     the exact meter re-filter stays downstream
@@ -410,10 +413,14 @@ def _withindist_bins(
         f"transform(sequence({x0}, {x1}), x -> pmod(x, {nbx})) "
         f"ELSE sequence(0L, {nbx - 1}L) END"
     )
-    # latitude rows clamped to the globe's, as the left rows compute them
+    # latitude rows clamped to the globe's, as the left rows compute them;
+    # an off-globe (|φ| > 90°) or NaN row emits none, so garbage cannot
+    # reverse the range (a descending sequence) or inflate it
     ys = (
-        f"sequence(greatest(floor(({ry} - {dd}) / {ww}), {math.floor(-90.0 / w)}L), "
-        f"least(floor(({ry} + {dd}) / {ww}), {math.floor(90.0 / w)}L))"
+        f"CASE WHEN abs({ry}) <= 90.0D THEN sequence("
+        f"greatest(floor(({ry} - {dd}) / {ww}), {math.floor(-90.0 / w)}L), "
+        f"least(floor(({ry} + {dd}) / {ww}), {math.floor(90.0 / w)}L)) "
+        "ELSE CAST(array() AS ARRAY<BIGINT>) END"
     )
     right = right.selectExpr(
         "*", f"2.0D * degrees(asin(least({q}, 1.0D))) AS {dl}"
@@ -424,7 +431,7 @@ def _withindist_bins(
     )
     cond = (
         f"__sjt_cx_{lt} = __sjt_cx_{rt} AND __sjt_cy_{lt} = __sjt_cy_{rt} "
-        f"AND abs({ly} - {ry}) <= {dd} "
+        f"AND abs({ly}) <= 90.0D AND abs({ly} - {ry}) <= {dd} "
         f"AND 180.0D - abs(pmod({lx} - {rx}, 360.0D) - 180.0D) <= {dl}"
     )
     return left, right, cond

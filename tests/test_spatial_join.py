@@ -460,12 +460,14 @@ def test_withindist_zero_radius_rejected(spark):
 def test_withindist_antimeridian_pair(spark):
     """Points straddling ±180° are ~222 km apart at the equator but 359.998
     apart in raw degrees — the cell column wraps mod 360°/w and the window
-    compares the wrapped longitude difference, so the pair must survive."""
-    poi = poi_df(spark, [("d1", 179.999, 0.0), ("far", 0.0, 0.0)])
-    inp = input_df(spark, [("i1", -179.999, 0.0)])
-    t = make_transformer(poi).setPredicate("withindist 300000")
-    out = t.transform(inp)
-    assert collect_sorted(out) == [("i1", -179.999, 0.0, "d1")]
+    compares the wrapped longitude difference, so the pair must survive
+    with either side west of the antimeridian."""
+    for x in (179.999, -179.999):
+        poi = poi_df(spark, [("d1", x, 0.0), ("far", 0.0, 0.0)])
+        inp = input_df(spark, [("i1", -x, 0.0)])
+        t = make_transformer(poi).setPredicate("withindist 300000")
+        out = t.transform(inp)
+        assert collect_sorted(out) == [("i1", -x, 0.0, "d1")]
 
 
 def test_withindist_huge_radius_lat_only_binning(spark):
@@ -477,6 +479,58 @@ def test_withindist_huge_radius_lat_only_binning(spark):
     out = t.transform(input_df(spark, [("i1", -175.0, 5.0)]))
     rows = {r[0:3] + (r[3],) for r in out.collect()}
     assert {r[3] for r in rows} == {"d1", "d2"}
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
+@pytest.mark.parametrize("radius_m", [300_000, 10_000_000])
+def test_withindist_off_globe_rows_match_nothing(spark, strategy, radius_m):
+    """Centroids off the globe (latitude 100, 170, 5e6, NaN) on either side
+    return no pair and do not inflate the cell join: a latitude range
+    clamped at one end only would run backwards (Spark's ``sequence``
+    counts down) and a negative cos φ would open the whole circle.  At
+    10,000 km the haversine alone would pair (10, 100) with (-170, 89.9)."""
+    nan = float("nan")
+    poi = poi_df(spark, [
+        ("d1", 10.0, 45.0), ("d2", 10.0, 89.9),
+        ("g100", 10.0, 100.0), ("g170", 10.0, 170.0), ("g5e6", 10.0, 5e6),
+        ("gnan", 10.0, nan),
+    ])
+    inp = input_df(spark, [
+        ("i1", 10.5, 45.0), ("i2", -170.0, 89.9),
+        ("j100", 10.0, 100.0), ("j170", 10.0, 170.0), ("j5e6", 10.0, 5e6),
+        ("jnan", 10.0, nan),
+    ])
+    t = (
+        make_transformer(poi)
+        .setPredicate(f"withindist {radius_m}")
+        .setDistanceKernel("haversine")
+        .setJoinStrategy(strategy)
+    )
+    got = sorted((r.id, r.poi_id) for r in t.transform(inp).collect())
+    valid = [("i1", "d1"), ("i1", "d2"), ("i2", "d1"), ("i2", "d2")]
+    assert got == (valid if radius_m > 5e6 else [("i1", "d1"), ("i2", "d2")])
+
+
+def test_withindist_cells_per_broadcast_row_bounded(spark):
+    """Each broadcast row explodes at most 24 cells up to 40° latitude and
+    123 at 80°, at any radius; an off-globe row explodes none."""
+    from spark_ml_spatialjointransformer_spark.operators.spatial_join import (
+        _withindist_bins,
+    )
+
+    lats = [0.0, -40.0, 39.99, 80.0, -79.99, 170.0, -5e6, float("nan")]
+    right = spark.createDataFrame(
+        [(i, 179.9, lat) for i, lat in enumerate(lats)],
+        "rid INT, __sjt_e_gx DOUBLE, __sjt_e_gy DOUBLE",
+    )
+    left = spark.createDataFrame([(0.0, 0.0)], "__sjt_i_gx DOUBLE, __sjt_i_gy DOUBLE")
+    for km in (3, 300, 1_000, 4_000, 10_000, 20_000):
+        _, cells, _ = _withindist_bins(left, right, "i", "e", km * 1000.0)
+        n = dict(cells.groupBy("rid").count().collect())
+        assert all(n.get(i, 0) <= (24 if abs(lat) <= 40 else 123)
+                   for i, lat in enumerate(lats[:5])), (km, n)
+        assert all(0 < n.get(i, 0) for i in range(5)), (km, n)
+        assert all(i not in n for i in range(5, len(lats))), (km, n)
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "partitioned"])
